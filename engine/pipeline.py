@@ -1,66 +1,44 @@
-"""The extraction DataFrame DAG — staged and fused modes.
+"""The extraction DataFrame DAG — fused and staged modes, one
+implementation per stage.
+
+Fused mode (the default, throughput path) runs detect+recognize+reassembly
+in ONE mapInArrow pass (no shuffle at all — blocks of a document never leave
+its row), the distributed form of ``_process_one_page``
+(``bilingual_ocr.py:126-211``)::
+
+    read pages → [salted repartition] → mapInArrow(make_extract_fused_arrow)
 
 Staged mode is the SURVEY.md §3.1 plan shape, the distributed recast of the
-reference's detect→recognize lifecycle::
+reference's detect→recognize lifecycle, kept for block-level inspection and
+metrics::
 
-    read pages → salted repartition → mapInPandas(detect_blocks)
+    read pages → [salted repartition] → mapInPandas(make_detect_blocks)
       → filter(KEEP_PREDICATE)                 # Catalyst-side conf mask (O3)
-      → mapInPandas(recognize_blocks)
+      → recognize_norm_udf(text, lang)         # scalar Arrow UDF
       → filter(non-empty norm)                 # empty-region drop (O8)
       → mapInPandas(assemble_blocks)           # reading-order A4, zero shuffle
-      → extracted
 
-with a shuffle-bearing twin (``reassembly='shuffle'``: window prefix-sum +
-``groupBy(url, warc_ts)`` ordered aggregate) kept to prove the wide plan
-emits identical bytes.
-
-Fused mode collapses detect+recognize+reassembly into ONE Arrow pass (no
-shuffle at all — blocks of a document never leave its row), the distributed
-form of ``_process_one_page`` (``bilingual_ocr.py:126-211``). It is the
-throughput path; staged mode exists for block-level inspection/metrics and to
-*prove* the shuffle-bearing plan produces identical bytes (golden test).
-
-Reassembly (staged) is pure JVM: span offsets are an O(n) window prefix-sum
-(`sum over (partition by url order by block_id rows unbounded preceding..-1)`)
-and ``array_sort(collect_list(struct(...)))`` sorts by ``block_id`` *inside*
-the aggregate, so the result is independent of partitioning and row order
-(SURVEY.md §7.3 H1).
+Both modes call the same ``extraction`` functions and are pinned
+byte-identical to the goldens (tests/test_golden_e2e.py); neither plan has
+an Exchange unless a salted repartition is asked for.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from engine.salt import salted_repartition
 from engine.stages import (
     BLOCKS_SCHEMA,
     EXTRACTED_CORE_SCHEMA,
+    EXTRACTED_COVERAGE_SCHEMA,
     KEEP_PREDICATE,
-    RECOGNIZED_SCHEMA,
-    detect_blocks,
-    extract_fused,
-    recognize_blocks,
+    KEEP_PREDICATE_FALLBACK,
+    assemble_blocks,
+    make_detect_blocks,
+    make_extract_fused_arrow,
+    recognize_norm_udf,
 )
-
-PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
-
-# Span offsets are an O(n) window prefix-sum BEFORE the groupBy (same `url`
-# key, so Catalyst plans a single exchange for window+agg). The obvious
-# alternative — aggregate() appending to an accumulator array inside the agg —
-# is O(n²) per group (array copy per element): measured 104s of a 117s run on
-# giant 1500-block documents; the window form runs the same corpus in ~13s.
-_SPANS_AGG = """
-array_sort(collect_list(CASE WHEN block_id >= 0
-  THEN struct(block_id, start, `end`, lang) END))
-"""
-
-_TEXT_AGG = """
-array_join(
-  transform(filter(array_sort(collect_list(struct(block_id, lang, norm_text))),
-                   x -> x.block_id >= 0),
-            x -> x.norm_text),
-  '\n')
-"""
 
 
 def _prepare(pages: DataFrame, num_parts: int | None) -> DataFrame:
@@ -94,110 +72,49 @@ def detect(
     ``fallback=True`` marks the O5 relaxed-pass winner ``forced`` on docs
     where no block passes the keep rule.
     """
-    from engine.stages import make_detect_blocks
-
-    if emit_filtered_text and not fallback:
-        fn = detect_blocks
-    else:
-        fn = make_detect_blocks(emit_filtered_text, fallback)
+    fn = make_detect_blocks(emit_filtered_text, fallback)
     return _prepare(pages, num_parts).mapInPandas(fn, schema=BLOCKS_SCHEMA)
 
 
 def run_staged(
     pages: DataFrame,
     num_parts: int | None = None,
-    reassembly: str = "local",
     fallback: bool = False,
 ) -> DataFrame:
-    """Staged detect→recognize→reassemble.
+    """Staged detect→recognize→reassemble, shuffle-free end to end.
 
-    ``reassembly='local'`` (default): third mapInPandas stage — documents are
-    contiguous runs ending in their sentinel within each partition, so
-    reassembly is shuffle-FREE (zero Exchange in the whole staged plan; the
-    extracted corpus text never crosses the wire). This is the plan that
-    survives 100× scale: the r1 window variant shuffled every surviving
-    block's text on url (70.5 s vs fused 1.8 s at sf0.1).
-
-    ``reassembly='shuffle'``: the window-prefix-sum + groupBy plan — kept as
-    the shuffle-bearing proof twin (golden test asserts all three modes emit
-    identical bytes). Keys are (url, warc_ts) end-to-end: partitioning the
-    window by url alone interleaves duplicate urls with different warc_ts and
-    corrupts span offsets (ADVICE r1).
+    Documents are contiguous runs ending in their sentinel within each
+    partition, so reassembly is a third partition-local mapInPandas stage
+    (zero Exchange in the whole staged plan; the extracted corpus text never
+    crosses the wire). This is the plan that survives 100× scale: the r1
+    window variant shuffled every surviving block's text on url (70.5 s vs
+    fused 1.8 s at sf0.1).
     """
-    from engine.stages import KEEP_PREDICATE_FALLBACK
-
     blocks = detect(pages, num_parts, emit_filtered_text=False, fallback=fallback)
     pred = KEEP_PREDICATE_FALLBACK if fallback else KEEP_PREDICATE
     surviving = blocks.filter(F.expr(pred))
     # r8: stage 2 is a scalar Arrow UDF over (text, lang) only — the six
     # carry columns never cross the Python boundary (guide §4: pass only
-    # the columns the function needs). recognize_blocks (the mapInPandas
-    # form) remains the unit-tested reference twin of the same body.
-    from engine.stages import recognize_norm_udf
-
+    # the columns the function needs).
     recognized = surviving.select(
         "url", "warc_ts", "block_id", "lang",
         recognize_norm_udf()(F.col("text"), F.col("lang")).alias("norm_text"),
         "doc_n_blocks", "doc_status", "forced",
     )
     nonempty = recognized.filter("block_id = -1 OR length(norm_text) > 0")
-    if reassembly == "local":
-        from engine.stages import assemble_blocks
-
-        return nonempty.mapInPandas(assemble_blocks, schema=EXTRACTED_CORE_SCHEMA)
-    w = (
-        Window.partitionBy("url", "warc_ts")
-        .orderBy("block_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    contrib = F.when(F.col("block_id") >= 0, F.length("norm_text") + 1).otherwise(0)
-    with_offsets = nonempty.withColumn(
-        "start", F.coalesce(F.sum(contrib).over(w), F.lit(0)).cast("int")
-    ).withColumn("end", (F.col("start") + F.length("norm_text")).cast("int"))
-    assembled = with_offsets.groupBy("url", "warc_ts").agg(
-        F.expr(_TEXT_AGG).alias("extracted_text"),
-        F.expr(_SPANS_AGG).alias("spans"),
-        F.max("doc_n_blocks").cast("int").alias("n_blocks"),
-        F.sum(F.when(F.col("block_id") >= 0, 1).otherwise(0))
-        .cast("int")
-        .alias("n_kept"),
-        F.max("doc_status").alias("err_status"),
-        F.max(F.when(F.col("forced"), 1).otherwise(0)).alias("any_forced"),
-    )
-    return assembled.withColumn(
-        "status",
-        F.coalesce(
-            F.col("err_status"),
-            F.when(F.col("any_forced") > 0, F.lit("fallback")),
-            F.when(F.col("n_kept") > 0, F.lit("ok")).otherwise(F.lit("empty")),
-        ),
-    ).drop("err_status", "any_forced")
+    return nonempty.mapInPandas(assemble_blocks, schema=EXTRACTED_CORE_SCHEMA)
 
 
 def run_fused(
     pages: DataFrame,
     num_parts: int | None = None,
     fallback: bool = False,
-    io: str = "arrow",
 ) -> DataFrame:
-    """Fused extraction. ``io='arrow'`` (default) runs the mapInArrow stage —
-    no pandas materialization of the big binary batches; ``io='pandas'`` is
-    the twin kept for the differential discipline (golden test pins both to
-    identical bytes)."""
-    prepared = _prepare(pages, num_parts)
-    if io == "arrow":
-        from engine.stages import make_extract_fused_arrow
-
-        return prepared.mapInArrow(
-            make_extract_fused_arrow(fallback), schema=EXTRACTED_CORE_SCHEMA
-        )
-    if fallback:
-        from engine.stages import make_extract_fused
-
-        fn = make_extract_fused(True)
-    else:
-        fn = extract_fused
-    return prepared.mapInPandas(fn, schema=EXTRACTED_CORE_SCHEMA)
+    """Fused extraction: the mapInArrow stage — no pandas materialization of
+    the big binary batches."""
+    return _prepare(pages, num_parts).mapInArrow(
+        make_extract_fused_arrow(fallback), schema=EXTRACTED_CORE_SCHEMA
+    )
 
 
 def run_fused_coverage(pages: DataFrame, num_parts: int | None = None) -> DataFrame:
@@ -205,17 +122,18 @@ def run_fused_coverage(pages: DataFrame, num_parts: int | None = None) -> DataFr
     #4): ``n_crawl = length(text)`` is computed Catalyst-side at the scan and
     rides through the Arrow stage as one integer per document, so the
     crawl-text cross-check needs NO corpus-wide url join — the plan is
-    scan → project → MapInPandas, zero Exchange, and the crawl text column
-    itself never enters the Python worker."""
-    from engine.stages import EXTRACTED_COVERAGE_SCHEMA, extract_fused_coverage
-
+    scan → project → MapInArrow, zero Exchange, and the crawl text column
+    itself never enters the Python worker. ``n_crawl`` is a passthrough
+    column of the same fused stage :func:`run_fused` runs."""
     df = pages.select(
         "url", "warc_ts", "html", "lang",
         F.length("text").cast("int").alias("n_crawl"),
     )
     if num_parts is not None:
         df = salted_repartition(df, num_parts)
-    return df.mapInPandas(extract_fused_coverage, schema=EXTRACTED_COVERAGE_SCHEMA)
+    return df.mapInArrow(
+        make_extract_fused_arrow(), schema=EXTRACTED_COVERAGE_SCHEMA
+    )
 
 
 def run_extract(
@@ -233,10 +151,10 @@ def run_extract(
     """
     if mode == "fused":
         core = run_fused(pages, num_parts, fallback)
-    elif mode == "staged_shuffle":
-        core = run_staged(pages, num_parts, reassembly="shuffle", fallback=fallback)
-    else:
+    elif mode == "staged":
         core = run_staged(pages, num_parts, fallback=fallback)
+    else:
+        raise ValueError(f"unknown mode {mode!r}: expected 'fused' or 'staged'")
     return core.withColumn("part_id", F.spark_partition_id()).withColumn(
         "lineage", F.lit(run_id)
     )

@@ -42,9 +42,7 @@ def main() -> None:
         help="point lookup: print the extracted row for URL from <out> via "
         "bucket-pruned read (tableio.read_url) and exit — no extraction run",
     )
-    ap.add_argument(
-        "--mode", default="fused", choices=["fused", "staged", "staged_shuffle"]
-    )
+    ap.add_argument("--mode", default="fused", choices=["fused", "staged"])
     ap.add_argument("--parts", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument(

@@ -1,18 +1,23 @@
 """The engine's vectorized Python stages (SURVEY.md §2.10) — the only places
 Python touches row data, always through Arrow batch iterators, never per-row
-Python UDFs (north rule).
+Python UDFs (north rule). One implementation per stage:
 
-- :func:`detect_blocks`     — stage 1, 1 page row → N candidate-block rows
-  (ref detect_and_crop_text_with_boxes, ``text_detection_yolov8.py:229-288``).
-  Emits a sentinel row (``block_id = -1``) per document so documents whose
-  blocks are all filtered out still reach the output with ``status='empty'``
-  (ref "no regions detected" path, ``bilingual_ocr.py:167-181``).
-- :func:`recognize_blocks`  — stage 2, normalized text per surviving block
-  (ref recognize_urdu/recognize_english + post_process,
-  ``urdu_recognition_utrnet.py:132-166``, ``english_ocr_pipeline.py:52-84``).
-- :func:`extract_fused`     — the fused per-document stage used by the
-  throughput path: detect+recognize+reassemble in one Arrow pass, zero
-  shuffles — the distributed form of the reference's per-page orchestrator
+- :func:`make_detect_blocks` — staged stage 1 (mapInPandas), 1 page row → N
+  candidate-block rows (ref detect_and_crop_text_with_boxes,
+  ``text_detection_yolov8.py:229-288``). Emits a sentinel row
+  (``block_id = -1``) per document so documents whose blocks are all
+  filtered out still reach the output with ``status='empty'`` (ref "no
+  regions detected" path, ``bilingual_ocr.py:167-181``).
+- :func:`recognize_norm_udf` — staged stage 2, a scalar Arrow UDF: normalized
+  text per surviving block (ref recognize_urdu/recognize_english +
+  post_process, ``urdu_recognition_utrnet.py:132-166``,
+  ``english_ocr_pipeline.py:52-84``).
+- :func:`assemble_blocks` — staged stage 3 (mapInPandas), partition-local
+  reading-order reassembly.
+- :func:`make_extract_fused_arrow` — the fused per-document stage
+  (mapInArrow) behind batch, coverage and streaming extraction:
+  detect+recognize+reassemble in one Arrow pass, zero shuffles — the
+  distributed form of the reference's per-page orchestrator
   ``_process_one_page`` (``bilingual_ocr.py:126-211``). Byte-identical to the
   staged path by construction (both call the same ``extraction`` functions;
   asserted by tests/test_golden_e2e.py).
@@ -38,7 +43,7 @@ import pandas as pd
 from extraction.core import extract_document, recognize_block
 from extraction.html_clean import decode_html
 from extraction.routing import block_route, doc_route
-from extraction.segment import segment_blocks
+from extraction.segment import MAX_BLOCK_CHARS, MIN_BLOCK_CHARS, segment_blocks
 
 # Stage-1 output schema (SURVEY.md §1.3 `blocks` + doc-level carry columns).
 BLOCKS_SCHEMA = (
@@ -46,12 +51,6 @@ BLOCKS_SCHEMA = (
     "n_chars int, n_link_chars int, n_tags int, "
     "link_density double, tag_density double, score double, lang string, "
     "doc_n_blocks int, doc_status string, forced boolean"
-)
-
-# Stage-2 output schema.
-RECOGNIZED_SCHEMA = (
-    "url string, warc_ts timestamp, block_id int, lang string, "
-    "norm_text string, doc_n_blocks int, doc_status string, forced boolean"
 )
 
 # Final extracted schema (SURVEY.md §1.3 `extracted`, sans part_id/lineage
@@ -68,7 +67,8 @@ EXTRACTED_CORE_SCHEMA = (
 # threshold is visible to the optimizer (ref conf mask re-check, SURVEY §4 O3).
 KEEP_PREDICATE = (
     "(block_id = -1) OR "
-    "(n_chars >= 25 AND n_chars <= 1000000 AND 3 * n_link_chars < n_chars)"
+    f"(n_chars >= {MIN_BLOCK_CHARS} AND n_chars <= {MAX_BLOCK_CHARS} "
+    "AND 3 * n_link_chars < n_chars)"
 )
 
 # With the O5 fallback ladder enabled, stage 1 marks the relaxed-pass winner
@@ -92,11 +92,6 @@ def make_detect_blocks(emit_filtered_text: bool = True, fallback: bool = False):
         return _detect_blocks_impl(batches, emit_filtered_text, fallback)
 
     return fn
-
-
-def detect_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage 1: pages -> candidate blocks (+1 sentinel per doc)."""
-    return _detect_blocks_impl(batches, True, False)
 
 
 def _detect_blocks_impl(
@@ -184,27 +179,6 @@ def recognize_norm_udf():
     return F.pandas_udf(_recognize_series, returnType="string").asNondeterministic()
 
 
-def recognize_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage 2: surviving blocks -> normalized text."""
-    for pdf in batches:
-        norm = [
-            recognize_block(text, lang) if block_id >= 0 else ""
-            for text, lang, block_id in zip(pdf["text"], pdf["lang"], pdf["block_id"])
-        ]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"],
-                "block_id": pdf["block_id"],
-                "lang": pdf["lang"],
-                "norm_text": norm,
-                "doc_n_blocks": pdf["doc_n_blocks"],
-                "doc_status": pdf["doc_status"],
-                "forced": pdf["forced"],
-            }
-        )
-
-
 def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas stage 3: partition-local reading-order reassembly.
 
@@ -280,26 +254,24 @@ def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-def make_extract_fused(fallback: bool = False):
-    """Build the fused stage fn; ``fallback=True`` enables the O5 ladder."""
+# --- fused stage (mapInArrow) ----------------------------------------------
+# The batch never round-trips through pandas: the url/warc_ts columns pass
+# through as raw Arrow arrays and outputs are built as Arrow arrays directly.
+# On the big-binary pages workload pandas materialization is a measurable
+# share of wall time (a passthrough mapInPandas costs ~3-4 s of an ~8 s
+# local[8] extraction; the mapInArrow passthrough ~1.5-3.5 s).
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _extract_fused_impl(batches, fallback)
+# The input columns the fused stage reads; any other input column (e.g. the
+# coverage query's n_crawl) rides through unchanged after the core columns.
+FUSED_INPUT_COLS = ("url", "warc_ts", "html", "lang")
 
-    return fn
+EXTRACTED_COVERAGE_SCHEMA = EXTRACTED_CORE_SCHEMA + ", n_crawl int"
 
-
-# --- Arrow-native fused stage (mapInArrow) ---------------------------------
-# Same extraction calls as the pandas stage (byte-identical by construction,
-# pinned by tests), but the batch never round-trips through pandas: the url/
-# warc_ts columns pass through as raw Arrow arrays and outputs are built as
-# Arrow arrays directly. On the big-binary pages workload the pandas
-# materialization is a measurable share of wall time (a passthrough
-# mapInPandas costs ~3-4 s of an ~8 s local[8] extraction; the mapInArrow
-# passthrough ~1.5-3.5 s), so the Arrow stage is the default production
-# path; the pandas twin remains for the differential test discipline.
 
 def make_extract_fused_arrow(fallback: bool = False):
+    """Build the fused stage fn; ``fallback=True`` enables the O5 ladder.
+    Output: the :data:`EXTRACTED_CORE_SCHEMA` columns, then every input
+    column not in :data:`FUSED_INPUT_COLS`, unchanged and in input order."""
     import pyarrow as pa
 
     spans_type = pa.list_(
@@ -337,6 +309,7 @@ def make_extract_fused_arrow(fallback: bool = False):
                 n_blocks.append(r.n_blocks)
                 n_kept.append(r.n_kept)
                 status.append(r.status)
+            extra = [n for n in b.schema.names if n not in FUSED_INPUT_COLS]
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(idx["url"]),
@@ -346,62 +319,10 @@ def make_extract_fused_arrow(fallback: bool = False):
                     pa.array(n_blocks, pa.int32()),
                     pa.array(n_kept, pa.int32()),
                     pa.array(status, pa.string()),
+                    *(b.column(idx[n]) for n in extra),
                 ],
                 names=["url", "warc_ts", "extracted_text", "spans",
-                       "n_blocks", "n_kept", "status"],
+                       "n_blocks", "n_kept", "status", *extra],
             )
 
     return fn
-
-
-def extract_fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused per-document stage: one Arrow pass, zero shuffles."""
-    return _extract_fused_impl(batches, False)
-
-
-EXTRACTED_COVERAGE_SCHEMA = EXTRACTED_CORE_SCHEMA + ", n_crawl int"
-
-
-def extract_fused_coverage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused stage + in-row coverage carry (VERDICT r2 #4): the crawl-text
-    length arrives as ONE integer per document (computed Catalyst-side — the
-    text column itself never crosses the Arrow channel) and rides through
-    extraction, so the coverage differential is per-row arithmetic
-    downstream — no corpus-wide url join at any scale. Same loop as the
-    plain fused stage (shared _extract_fused_impl) — no drift possible."""
-    return _extract_fused_impl(batches, False, passthrough=("n_crawl",))
-
-
-def _extract_fused_impl(
-    batches: Iterator[pd.DataFrame],
-    fallback: bool,
-    passthrough: tuple[str, ...] = (),
-) -> Iterator[pd.DataFrame]:
-    """Shared fused row loop; ``passthrough`` input columns ride along
-    unchanged and are appended after the core schema columns."""
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "url": [], "warc_ts": [], "extracted_text": [], "spans": [],
-            "n_blocks": [], "n_kept": [], "status": [],
-            **{c: [] for c in passthrough},
-        }
-        extra_cols = [pdf[c] for c in passthrough]
-        for url, ts, html, lang, *extras in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"], *extra_cols
-        ):
-            r = extract_document(url, html, lang, fallback)
-            rows["url"].append(url)
-            rows["warc_ts"].append(ts)
-            rows["extracted_text"].append(r.extracted_text)
-            rows["spans"].append(
-                [
-                    {"block_id": s.block_id, "start": s.start, "end": s.end, "lang": s.lang}
-                    for s in r.spans
-                ]
-            )
-            rows["n_blocks"].append(r.n_blocks)
-            rows["n_kept"].append(r.n_kept)
-            rows["status"].append(r.status)
-            for c, v in zip(passthrough, extras):
-                rows[c].append(v)
-        yield pd.DataFrame(rows)

@@ -6,8 +6,8 @@ semantics as a Structured Streaming job: ``readStream`` over the pages
 directory → the SAME fused extraction stage → parquet sink with checkpoint,
 under ``Trigger.AvailableNow`` — each invocation processes exactly the files
 that arrived since the last checkpoint and terminates. Byte-identity is
-unchanged because the streaming plan calls the identical ``extract_fused``
-Arrow stage.
+unchanged because both streaming extract paths call ``pipeline.run_extract``,
+the batch path's own mapInArrow stage plus part_id/lineage columns.
 
 Also included: a watermarked event-time tumbling-window aggregation over an
 events stream (late data dropped past the watermark) — the streaming form of
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from engine.stages import EXTRACTED_CORE_SCHEMA, extract_fused
+from engine import pipeline
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -45,12 +45,7 @@ def incremental_extract(
     the streaming twin of ``tableio.remaining`` + ``merge_by_url``.
     """
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-    extracted = (
-        pages.select("url", "warc_ts", "html", "lang")
-        .mapInPandas(extract_fused, schema=EXTRACTED_CORE_SCHEMA)
-        .withColumn("part_id", F.spark_partition_id())
-        .withColumn("lineage", F.lit(run_id))
-    )
+    extracted = pipeline.run_extract(pages, run_id=run_id)
     query = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)
@@ -418,16 +413,10 @@ def incremental_extract_warc(
         .select("path", "content")
     )
 
-    pages = (
-        files.mapInPandas(warc_parse_batches, schema=WARC_PAGES_SCHEMA)
-        .where("status = 'ok'")
-        .select("url", "warc_ts", "html", "lang")
+    pages = files.mapInPandas(warc_parse_batches, schema=WARC_PAGES_SCHEMA).where(
+        "status = 'ok'"
     )
-    extracted = (
-        pages.mapInPandas(extract_fused, schema=EXTRACTED_CORE_SCHEMA)
-        .withColumn("part_id", F.spark_partition_id())
-        .withColumn("lineage", F.lit(run_id))
-    )
+    extracted = pipeline.run_extract(pages, run_id=run_id)
     query = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)

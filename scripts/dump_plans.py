@@ -42,14 +42,13 @@ def main() -> None:
     sections.append((
         "Fused extraction (default, zero-shuffle)",
         "No Exchange anywhere; ReadSchema prunes the crawl `text` column; "
-        "the whole pipeline is scan → ArrowEvalPython → sink.",
+        "the whole pipeline is scan → MapInArrow → sink.",
         _plan(pipeline.run_fused(pages)),
     ))
     sections.append((
         "Staged extraction (inspection path)",
-        "Catalyst-side KEEP filter between the two Python stages; one "
-        "Exchange on url feeding both the window prefix-sum and the ordered "
-        "reassembly aggregate (same key — no second shuffle).",
+        "Catalyst-side KEEP filter between detect and the recognize Arrow "
+        "UDF; reassembly is a partition-local MapInPandas — zero Exchange.",
         _plan(pipeline.run_staged(pages), "simple"),
     ))
     sections.append((
@@ -121,8 +120,9 @@ def main() -> None:
     ))
     sections.append((
         "In-row coverage differential (extract_coverage)",
-        "n_crawl rides through the fused Arrow stage: no Join, no Exchange "
-        "(r2 joined extraction output back to the crawl text on url).",
+        "n_crawl rides through the fused MapInArrow stage (the same stage "
+        "as fused extraction): no Join, no Exchange (r2 joined extraction "
+        "output back to the crawl text on url).",
         _plan(em.queries()["extract_coverage"](spark, args.sf), "simple"),
     ))
     sections.append((

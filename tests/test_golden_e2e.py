@@ -28,7 +28,7 @@ def _collect_results(df) -> dict[str, dict]:
     return out
 
 
-@pytest.mark.parametrize("mode", ["fused", "staged", "staged_shuffle"])
+@pytest.mark.parametrize("mode", ["fused", "staged"])
 def test_pipeline_matches_goldens(spark, pages_unit_path, goldens_unit, mode):
     pages = spark.read.parquet(pages_unit_path)
     extracted = pipeline.run_extract(pages, mode=mode, num_parts=5, run_id="t")
@@ -55,25 +55,7 @@ def test_staged_equals_fused(spark, pages_small_path):
     pages = spark.read.parquet(pages_small_path)
     staged = _collect_results(pipeline.run_extract(pages, mode="staged", num_parts=7))
     fused = _collect_results(pipeline.run_extract(pages, mode="fused", num_parts=3))
-    shuffled = _collect_results(
-        pipeline.run_extract(pages, mode="staged_shuffle", num_parts=5)
-    )
     assert staged == fused
-    assert shuffled == fused
-
-
-def test_fused_arrow_equals_pandas(spark, pages_small_path):
-    """The mapInArrow production stage and its mapInPandas twin must emit
-    identical bytes — both call exactly the same extraction functions; the
-    only difference is the batch carrier (no pandas materialization)."""
-    pages = spark.read.parquet(pages_small_path)
-    arrow = _collect_results(pipeline.run_fused(pages, io="arrow"))
-    pandas = _collect_results(pipeline.run_fused(pages, io="pandas"))
-    assert arrow == pandas
-    # fallback ladder through the arrow carrier too
-    af = _collect_results(pipeline.run_fused(pages, fallback=True, io="arrow"))
-    pf = _collect_results(pipeline.run_fused(pages, fallback=True, io="pandas"))
-    assert af == pf
 
 
 def test_staged_local_plan_has_no_exchange(spark, pages_small_path):
@@ -93,7 +75,7 @@ def test_staged_local_plan_has_no_exchange(spark, pages_small_path):
     assert "BatchEvalPython" not in plan, plan
 
 
-@pytest.mark.parametrize("mode", ["fused", "staged", "staged_shuffle"])
+@pytest.mark.parametrize("mode", ["fused", "staged"])
 def test_fallback_ladder_matches_goldens(
     spark, pages_unit_path, goldens_unit_fallback, mode
 ):

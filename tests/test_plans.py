@@ -492,13 +492,15 @@ def test_coverage_plan_has_no_join_and_no_exchange(spark):
     """VERDICT r2 #4: the crawl-text coverage differential must be in-row —
     n_crawl rides through the fused Arrow stage, so the plan contains no
     Join and no Exchange (the r2 version shuffled the crawl text corpus-wide
-    on url)."""
+    on url). The carrier is the same mapInArrow stage as batch extraction,
+    never a pandas twin."""
     import __spark_entry__ as em
 
     df = em.queries()["extract_coverage"](spark, "/root/testdata/sf0.001")
     plan = _plan(df, "simple")
     assert "Join" not in plan, plan
     assert "Exchange" not in plan, plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_doc_chunks_plan_has_zero_exchange(spark):

@@ -5,10 +5,37 @@ to the batch pipeline over the union of all files."""
 from __future__ import annotations
 
 import os
+import re
 
 from fixtures.gen_pages import compute_goldens, gen_rows, write_parquet
 
 from engine.streaming import incremental_extract
+
+
+def _extracted_rows(rows) -> dict[str, tuple]:
+    """url -> the whole extracted row (text, spans, counts, status)."""
+    return {
+        r["url"]: (
+            r["extracted_text"],
+            [
+                {"block_id": s["block_id"], "start": s["start"],
+                 "end": s["end"], "lang": s["lang"]}
+                for s in (r["spans"] or [])
+            ],
+            r["n_blocks"],
+            r["n_kept"],
+            r["status"],
+        )
+        for r in rows
+    }
+
+
+def _extract_carriers(query) -> list[str]:
+    """Carrier node of every Python map stage in the finished query's last
+    executed plan, apart from the WARC parse stage."""
+    plan = query._jsq.explainInternal(False)
+    stages = re.findall(r"(MapIn(?:Arrow|Pandas)) (\w+)\(", plan)
+    return [carrier for carrier, fn in stages if fn != "warc_parse_batches"]
 
 
 def test_incremental_extract_matches_batch_goldens(spark, tmp_path):
@@ -27,15 +54,15 @@ def test_incremental_extract_matches_batch_goldens(spark, tmp_path):
 
     # new files land; second invocation processes ONLY them
     write_parquet(second, f"{pages_dir}/batch1.parquet")
-    incremental_extract(spark, pages_dir, out_dir, cp_dir, run_id="s2")
+    query = incremental_extract(spark, pages_dir, out_dir, cp_dir, run_id="s2")
+    assert _extract_carriers(query) == ["MapInArrow"]
     final = spark.read.parquet(out_dir)
     assert final.count() == 60
     assert final.filter("lineage = 's2'").count() == 20  # only the new files
     assert final.groupBy("url").count().filter("count > 1").count() == 0
 
-    goldens = {g["url"]: g["extracted_text"] for g in compute_goldens(rows)}
-    got = {r["url"]: r["extracted_text"] for r in final.collect()}
-    assert got == goldens  # byte-identical to the batch oracle
+    goldens = _extracted_rows(compute_goldens(rows))
+    assert _extracted_rows(final.collect()) == goldens  # whole-row identity
 
 
 def test_stateful_sessionize_matches_batch_query(spark, tmp_path):
@@ -427,16 +454,11 @@ def test_incremental_extract_warc_matches_batch(spark, pages_unit_path, tmp_path
 
     for f in os.listdir(str(tmp_path / "b2")):
         shutil.copy(str(tmp_path / "b2" / f), f"{wd}/late-{f}")
-    incremental_extract_warc(spark, wd, out, cp)
+    query = incremental_extract_warc(spark, wd, out, cp)
+    assert _extract_carriers(query) == ["MapInArrow"]
 
-    got = {
-        r["url"]: (r["extracted_text"], r["status"])
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        r["url"]: (r["extracted_text"], r["status"])
-        for r in run_fused(spark.read.parquet(pages_unit_path)).collect()
-    }
+    got = _extracted_rows(spark.read.parquet(out).collect())
+    want = _extracted_rows(run_fused(spark.read.parquet(pages_unit_path)).collect())
     assert got == want and len(got) == 64
 
 
