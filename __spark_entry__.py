@@ -737,18 +737,14 @@ shingles AS (SELECT doc_id, shingle FROM sh WHERE shingle IS NOT NULL)
 # 2⁶² (h < 2³², Aᵢ < 2²⁹) so Spark's wrapping long and DuckDB's checked
 # BIGINT agree exactly.
 #
-# Spark production path is shuffle-free: shingles stay an ARRAY inside each
-# row (split → transform(sequence(...))), the per-shingle hash and each
-# family minimum are per-row JVM expressions — no posexplode, no window,
-# ZERO Exchange; the plan is scan→project. At 100 TB this is the difference
-# between shuffling every token in the corpus and shuffling nothing. The
-# windowed form (`_SHINGLES_DUCK`) is retained only as the DuckDB
-# oracle's structural twin and for the Jaccard query, whose set-intersection
-# join genuinely needs shingle rows.
-# Constants + expression builders live in engine/minhash.py since r3 so the
-# incremental streaming path (engine/streaming.neardedup_stream) computes THE
-# SAME signatures by construction — the Spark SQL below is BUILT from those
-# builders, not a textual copy (an edit there propagates to both paths).
+# Spark signatures are shuffle-free: shingles stay inside each row (no
+# posexplode, no window, ZERO Exchange). `minhash_signatures` runs as one
+# Arrow pass (`_q_minhash_fast`); `minhash_lsh_pairs` builds its in-row SQL
+# signature columns from engine/minhash.py, which the incremental streaming
+# path (engine/streaming.neardedup_stream) shares, so both compute THE SAME
+# signatures by construction. The windowed form (`_SHINGLES_DUCK`) is the
+# DuckDB oracle's structural twin and serves the Jaccard query, whose
+# set-intersection join genuinely needs shingle rows.
 from engine import minhash as _mh  # noqa: E402
 from engine.minhash import A as _MH_A, B as _MH_B, P as _MH_P  # noqa: E402
 
@@ -766,20 +762,16 @@ _MINHASH_FAST_CTES = f"""
 WITH t AS (SELECT doc_id, split(text, ' ') AS toks FROM documents),
 s AS (SELECT doc_id, {_mh.HS_EXPR} AS hs FROM t WHERE size(toks) >= 3)
 """
-_MINHASH_FAST_SPARK = (
-    _MINHASH_FAST_CTES + f"SELECT doc_id, {_MINHASH_FAST_SIG_COLS} FROM s"
-)
 
 
 def _q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r8 execution of minhash_signatures (`_MINHASH_FAST_SPARK` above
-    stays as the documented construction + the pin's reference): signatures
-    are integer-exact (md5-hex prefix -> 32-bit int, universal multiply-mod
-    mins), so one Arrow-batched pass with a distinct-shingle digest memo
-    (shingles are Zipfian) and a vectorized per-family min replaces ~2.6M
-    interpreted conv/transform lambda evals per family at sf1.0. Same
-    tokenizer, same shingle join, same (h*A+B) % P families — pinned
-    row-equal in tests/test_substr_fast.py."""
+    """minhash_signatures as one Arrow-batched pass: signatures are
+    integer-exact (md5-hex prefix -> 32-bit int, universal multiply-mod
+    mins), so a distinct-shingle digest memo (shingles are Zipfian) and a
+    vectorized per-family min replace ~2.6M interpreted conv/transform
+    lambda evals per family at sf1.0. Same tokenizer, same shingle join,
+    same (h*A+B) % P families as `_MINHASH_FAST_CTES` — pinned against
+    the DuckDB oracle in tests/test_entry_contract.py."""
     from engine.minhash import A as _A_, B as _B_, P as _P_
 
     docs = _par_docs_text(spark, sf_dir)
@@ -799,7 +791,7 @@ def _q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
             offs: list[int] = [0]
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
-                    continue  # split(NULL) has no shingles in the SQL form
+                    continue  # split(NULL) has no shingles
                 toks = str(text).split(" ")
                 if len(toks) < 3:
                     continue
@@ -1099,33 +1091,18 @@ _JACCARD_SPARK_INROW = (
 )
 
 # SimHash-style fingerprint: 16 hex-digit dimensions of md5(token), majority bit
-# Spark production path is shuffle-free (same reasoning as MinHash): token
-# hashes stay an ARRAY in the row — md5 once per token via transform, then
-# each of the 16 dimension majorities is an in-row integer fold. No explode,
-# no groupBy: at corpus scale nothing moves to compute a fingerprint. The
-# exploded+grouped form remains as the DuckDB oracle below.
-_SIMHASH_SPARK = """
-WITH t AS (SELECT doc_id, transform(split(text, ' '), tok -> md5(tok)) AS ms
-           FROM documents)
-SELECT doc_id, %s AS fingerprint FROM t
-""" % " || ".join(
-    f"CASE WHEN 2 * aggregate(ms, CAST(0 AS BIGINT), "
-    f"(s, m) -> s + CAST(conv(substring(m, {p}, 1), 16, 10) AS BIGINT)) "
-    f">= 15 * size(ms) THEN '1' ELSE '0' END"
-    for p in range(1, 17)
-)
 def _q_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r8 execution of simhash_fingerprint (the `_SIMHASH_SPARK` SQL above
-    stays as the documented construction + the row-equality pin's
-    reference, tests/test_substr_fast.py): the 16 per-dimension majorities
-    are integer sums of md5-hex nibbles, so the whole fingerprint is
-    integer-exact in ANY implementation — here one Arrow-batched pass with
-    a distinct-token digest memo (corpora are Zipfian; the bench corpus
-    has 31 distinct tokens, so 2.7M tokens at sf1.0 cost 31 md5 calls per
-    task instead of 43M interpreted aggregate-lambda evaluations: measured
-    3.5 s -> sub-second). Same tokenizer (split on single spaces, empties
-    kept — Python str.split(' ') == Spark split(text, ' ', -1)), same md5,
-    same `2*sum >= 15*n` majority rule."""
+    """simhash_fingerprint as one shuffle-free Arrow-batched pass: the 16
+    per-dimension majorities are integer sums of md5-hex nibbles, so the
+    whole fingerprint is integer-exact in ANY implementation. A
+    distinct-token digest memo (corpora are Zipfian; the bench corpus has
+    31 distinct tokens) makes 2.7M tokens at sf1.0 cost 31 md5 calls per
+    task instead of 43M interpreted aggregate-lambda evaluations in an
+    in-row SQL fold (measured 3.5 s -> sub-second). Same tokenizer (split
+    on single spaces, empties kept — Python str.split(' ') == Spark
+    split(text, ' ', -1)), same md5, same `2*sum >= 15*n` majority rule as
+    the exploded+grouped DuckDB oracle below, which pins it
+    (tests/test_entry_contract.py)."""
     docs = _par_docs_text(spark, sf_dir)
 
     def fp(batches):
@@ -1184,40 +1161,17 @@ SELECT doc_id, %s AS fingerprint FROM dims
 )
 
 # Embedding brute-force cosine top-k (ANN baseline)
-_TOPK_SPARK = """
-WITH q AS (SELECT vec_id AS query_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-           FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id AS neighbor_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings WHERE vec_id >= 10),
-qn AS (SELECT query_id, e,
-              sqrt(aggregate(transform(e, x -> x * x), CAST(0 AS DOUBLE),
-                             (a, x) -> a + x)) AS nrm FROM q),
-cn AS (SELECT neighbor_id, e,
-              sqrt(aggregate(transform(e, x -> x * x), CAST(0 AS DOUBLE),
-                             (a, x) -> a + x)) AS nrm FROM c),
-sims AS (
-  SELECT qn.query_id, cn.neighbor_id,
-         aggregate(zip_with(qn.e, cn.e, (x, y) -> x * y), CAST(0 AS DOUBLE), (a, x) -> a + x)
-         / (qn.nrm * cn.nrm) AS sim
-  FROM qn CROSS JOIN cn)
-SELECT query_id, neighbor_id, rank, CAST(round(sim, 4) AS DOUBLE) AS sim_r FROM (
-  SELECT query_id, neighbor_id, sim,
-         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-  FROM sims) t
-WHERE rank <= 3
-"""
 def _q_embedding_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r8 execution of embedding_topk (the `_TOPK_SPARK` SQL above stays as
-    the documented construction and the pin's reference): the 10 x N
-    brute-force cosines move from interpreted aggregate/zip_with folds in a
-    CROSS JOIN (~38M lambda evals at sf1.0) into one Arrow-batched NumPy
-    pass. Float parity is bit-exact, not approximate: Spark's
-    ``aggregate(zip_with(a,b,(x,y)->x*y), 0D, (s,x)->s+x)`` is a strictly
-    sequential left fold, and ``np.add.accumulate`` over the identical
-    element products is the same sequence of IEEE additions — so dot, norm
-    (sqrt of the same fold), and sim are the same doubles the SQL form
-    produces (pinned row-equal at three SFs, tests/test_substr_fast.py).
-    The rank window + rounding stay in the original Spark SQL."""
+    """embedding_topk as one Arrow-batched NumPy pass: the 10 x N
+    brute-force cosines are computed per batch instead of as interpreted
+    aggregate/zip_with folds in a CROSS JOIN (~38M lambda evals at sf1.0).
+    Float parity with the Spark fold ``engine.ann.COSINE`` is bit-exact,
+    not approximate: ``aggregate(zip_with(a,b,(x,y)->x*y), 0D, (s,x)->s+x)``
+    is a strictly sequential left fold, and ``np.add.accumulate`` over the
+    identical element products is the same sequence of IEEE additions — so
+    dot, norm (sqrt of the same fold), and sim are the same doubles
+    (pinned on the raw `_topk_sims` doubles at sf0.001 and sf0.1,
+    tests/test_ann_fast.py). The rank window + rounding run in Spark SQL."""
     import numpy as np
 
     _load(spark, sf_dir, "embeddings")
@@ -1450,58 +1404,53 @@ _ANN_LSH_DUCK = _ann_lsh_sql("duck")
 # broadcastable codebook (map-side at 100 TB); queries probe their
 # `nprobe`=4 nearest lists and exact cosine runs only within probed lists —
 # the candidate join co-locates on list_id, never all-pairs.
-# constants + expression builders live in engine/ann.py (r4) so the
-# persisted-index workflow (engine.ann.build_ivf_index/ivf_topk) computes
-# THE SAME construction by definition — the minhash sharing discipline
+# the codebook rule and probe widths live in engine/ann.py (r4), which also
+# holds the persisted-index workflow (engine.ann.build_ivf_index/ivf_topk)
+# computing the same construction in Spark SQL — the minhash sharing
+# discipline
 from engine.ann import IVF_CENT_RULE as _IVF_CENT_RULE  # noqa: E402
 from engine.ann import IVF_NPROBE as _IVF_NPROBE  # noqa: E402
 
 
-def _ann_ivf_sql(dialect: str) -> str:
-    if dialect == "spark":
-        e_cte = (
-            "SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v, "
-            "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q "
-            "FROM embeddings"
-        )
-        from engine.ann import COSINE, DOT_Q
+# DuckDB oracle text shared by the two IVF builders below: quantized
+# embeddings, a codebook CTE, argmin assignment and top-nprobe probing under
+# the codebook's score (ties -> lowest cid), exact cosine re-rank.
+_IVF_E_CTE_DUCK = (
+    "SELECT vec_id, embedding::DOUBLE[] AS v, "
+    "list_transform(embedding::DOUBLE[], x -> floor(x * 1000)) AS q "
+    "FROM embeddings"
+)
+_IVF_DOT_Q_DUCK = "list_dot_product({a}, {b})"
+_IVF_COSINE_DUCK = (
+    "list_dot_product(a.v, d.v)"
+    " / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(d.v, d.v)))"
+)
 
-        dot_q = DOT_Q
-        cosine = COSINE.format(a="a.v", b="d.v")
-    else:
-        e_cte = (
-            "SELECT vec_id, embedding::DOUBLE[] AS v, "
-            "list_transform(embedding::DOUBLE[], x -> floor(x * 1000)) AS q "
-            "FROM embeddings"
-        )
-        dot_q = "list_dot_product({a}, {b})"
-        cosine = (
-            "list_dot_product(a.v, d.v)"
-            " / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(d.v, d.v)))"
-        )
+
+def _ivf_oracle_sql(cent_cte: str, score: Callable[[str, str], str], nprobe: int) -> str:
     return f"""
-WITH e AS ({e_cte}),
-cent AS (SELECT vec_id AS cid, q AS cq FROM e WHERE {_IVF_CENT_RULE}),
+WITH e AS ({_IVF_E_CTE_DUCK}),
+cent AS ({cent_cte}),
 assign AS (
   SELECT vec_id AS list_vec, cid AS list_id FROM (
     SELECT d.vec_id, c.cid,
            row_number() OVER (PARTITION BY d.vec_id
-                              ORDER BY {dot_q.format(a="d.q", b="c.cq")} DESC, c.cid) AS rn
+                              ORDER BY {score("d.q", "c.cq")}, c.cid) AS rn
     FROM e d CROSS JOIN cent c WHERE d.vec_id >= 10) t
   WHERE rn = 1),
 probes AS (
   SELECT vec_id AS query_id, cid AS probe_id FROM (
     SELECT qv.vec_id, c.cid,
            row_number() OVER (PARTITION BY qv.vec_id
-                              ORDER BY {dot_q.format(a="qv.q", b="c.cq")} DESC, c.cid) AS rn
+                              ORDER BY {score("qv.q", "c.cq")}, c.cid) AS rn
     FROM e qv CROSS JOIN cent c WHERE qv.vec_id < 10) t
-  WHERE rn <= {_IVF_NPROBE}),
+  WHERE rn <= {nprobe}),
 cands AS (
   SELECT p.query_id, s.list_vec AS neighbor_id
   FROM probes p JOIN assign s ON s.list_id = p.probe_id),
 sims AS (
   SELECT c.query_id, c.neighbor_id,
-         {cosine} AS sim
+         {_IVF_COSINE_DUCK} AS sim
   FROM cands c JOIN e a ON a.vec_id = c.query_id
                JOIN e d ON d.vec_id = c.neighbor_id)
 SELECT query_id, neighbor_id, rank, CAST(round(sim, 4) + 0 AS DOUBLE) AS sim_r FROM (
@@ -1513,8 +1462,15 @@ WHERE rank <= 3
 """
 
 
-_ANN_IVF_SPARK = _ann_ivf_sql("spark")
-_ANN_IVF_DUCK = _ann_ivf_sql("duck")
+def _ann_ivf_sql() -> str:
+    return _ivf_oracle_sql(
+        f"SELECT vec_id AS cid, q AS cq FROM e WHERE {_IVF_CENT_RULE}",
+        lambda a, b: f"{_IVF_DOT_Q_DUCK.format(a=a, b=b)} DESC",
+        _IVF_NPROBE,
+    )
+
+
+_ANN_IVF_DUCK = _ann_ivf_sql()
 
 
 # Trained-codebook IVF (r5, VERDICT r4 #1): the frozen Lloyd's k-means
@@ -1530,80 +1486,19 @@ from engine.ann import l2_q as _l2_q  # noqa: E402
 from engine.ann_codebook import TRAINED_CQ as _TRAINED_CQ  # noqa: E402
 
 
-def _ann_ivf_trained_sql(dialect: str, nprobe: int = _IVF_NPROBE) -> str:
-    if dialect == "spark":
-        e_cte = (
-            "SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v, "
-            "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q "
-            "FROM embeddings"
-        )
-        from engine.ann import COSINE, DOT_Q
-
-        dot_q = DOT_Q
-        cosine = COSINE.format(a="a.v", b="d.v")
-        cent_rows = ", ".join(
-            f"({cid}, array({', '.join(str(x) for x in cq)}))"
-            for cid, cq in enumerate(_TRAINED_CQ)
-        )
-        cent_cte = (
-            "SELECT cid, transform(cq, x -> CAST(x AS BIGINT)) AS cq "
-            f"FROM VALUES {cent_rows} AS t(cid, cq)"
-        )
-    else:
-        e_cte = (
-            "SELECT vec_id, embedding::DOUBLE[] AS v, "
-            "list_transform(embedding::DOUBLE[], x -> floor(x * 1000)) AS q "
-            "FROM embeddings"
-        )
-        dot_q = "list_dot_product({a}, {b})"
-        cosine = (
-            "list_dot_product(a.v, d.v)"
-            " / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(d.v, d.v)))"
-        )
-        cent_rows = ", ".join(
-            f"({cid}, [{', '.join(str(x) for x in cq)}])"
-            for cid, cq in enumerate(_TRAINED_CQ)
-        )
-        cent_cte = (
-            "SELECT cid, cq::DOUBLE[] AS cq "
-            f"FROM (VALUES {cent_rows}) t(cid, cq)"
-        )
-    return f"""
-WITH e AS ({e_cte}),
-cent AS ({cent_cte}),
-assign AS (
-  SELECT vec_id AS list_vec, cid AS list_id FROM (
-    SELECT d.vec_id, c.cid,
-           row_number() OVER (PARTITION BY d.vec_id
-                              ORDER BY {_l2_q("d.q", "c.cq", dot_q)}, c.cid) AS rn
-    FROM e d CROSS JOIN cent c WHERE d.vec_id >= 10) t
-  WHERE rn = 1),
-probes AS (
-  SELECT vec_id AS query_id, cid AS probe_id FROM (
-    SELECT qv.vec_id, c.cid,
-           row_number() OVER (PARTITION BY qv.vec_id
-                              ORDER BY {_l2_q("qv.q", "c.cq", dot_q)}, c.cid) AS rn
-    FROM e qv CROSS JOIN cent c WHERE qv.vec_id < 10) t
-  WHERE rn <= {nprobe}),
-cands AS (
-  SELECT p.query_id, s.list_vec AS neighbor_id
-  FROM probes p JOIN assign s ON s.list_id = p.probe_id),
-sims AS (
-  SELECT c.query_id, c.neighbor_id,
-         {cosine} AS sim
-  FROM cands c JOIN e a ON a.vec_id = c.query_id
-               JOIN e d ON d.vec_id = c.neighbor_id)
-SELECT query_id, neighbor_id, rank, CAST(round(sim, 4) + 0 AS DOUBLE) AS sim_r FROM (
-  SELECT query_id, neighbor_id, sim,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-  FROM sims) t
-WHERE rank <= 3
-"""
+def _ann_ivf_trained_sql(nprobe: int = _IVF_NPROBE) -> str:
+    cent_rows = ", ".join(
+        f"({cid}, [{', '.join(str(x) for x in cq)}])"
+        for cid, cq in enumerate(_TRAINED_CQ)
+    )
+    return _ivf_oracle_sql(
+        f"SELECT cid, cq::DOUBLE[] AS cq FROM (VALUES {cent_rows}) t(cid, cq)",
+        lambda a, b: _l2_q(a, b, _IVF_DOT_Q_DUCK),
+        nprobe,
+    )
 
 
-_ANN_IVF_TRAINED_SPARK = _ann_ivf_trained_sql("spark")
-_ANN_IVF_TRAINED_DUCK = _ann_ivf_trained_sql("duck")
+_ANN_IVF_TRAINED_DUCK = _ann_ivf_trained_sql()
 
 # High-recall operating point (VERDICT r5 #4): same trained index, probe
 # width widened to the smallest nprobe whose measured recall@3 >= 0.8
@@ -1611,18 +1506,17 @@ _ANN_IVF_TRAINED_DUCK = _ann_ivf_trained_sql("duck")
 # swept by scripts/sweep_ivf_recall.py; pinned in test_ann_index).
 from engine.ann import IVF_NPROBE_HIGH_RECALL as _IVF_NPROBE_HR  # noqa: E402
 
-_ANN_IVF_TRAINED_HR_SPARK = _ann_ivf_trained_sql("spark", _IVF_NPROBE_HR)
-_ANN_IVF_TRAINED_HR_DUCK = _ann_ivf_trained_sql("duck", _IVF_NPROBE_HR)
+_ANN_IVF_TRAINED_HR_DUCK = _ann_ivf_trained_sql(_IVF_NPROBE_HR)
 
 
-# --- fast Spark-side IVF execution (r8 optimization) -----------------------
-# The SQL form above (kept verbatim as the DuckDB oracle and as
-# documentation of WHAT is computed) materializes an N x K CROSS JOIN and
-# pushes it through a row_number window just to take an integer argmin per
-# vector: at the driver's sf1.0 (N=20k, K~645 sampled centroids) that is
-# 12.9M interpreted aggregate(zip_with(...)) rows plus a full window
-# shuffle — 133 s measured. The execution below computes the IDENTICAL
-# values (guide §4.2: hand whole Arrow batches to vectorized native code):
+# --- Spark-side IVF execution ----------------------------------------------
+# The oracle SQL above states WHAT is computed; run as written on Spark it
+# materializes an N x K CROSS JOIN and pushes it through a row_number window
+# just to take an integer argmin per vector: at the driver's sf1.0 (N=20k,
+# K~645 sampled centroids) that was 12.9M interpreted aggregate(zip_with(...))
+# rows plus a full window shuffle — 133 s measured. The execution below
+# computes the IDENTICAL values (guide §4.2: hand whole Arrow batches to
+# vectorized native code):
 #
 # - assignment/probing is ONE mapInPandas pass over the embeddings scan;
 #   per batch, the quantized integer dot products against ALL centroids are
@@ -1633,27 +1527,26 @@ _ANN_IVF_TRAINED_HR_DUCK = _ann_ivf_trained_sql("duck", _IVF_NPROBE_HR)
 #   columns are ordered by cid) reproduces the SQL's
 #   "ORDER BY score, cid / row_number() = 1" tie rule bit-for-bit.
 # - the probe side (vec_id < 10: ten rows) is collected once — quantized by
-#   the SAME Spark SQL expression as the oracle's e CTE — and its
-#   top-nprobe lists are computed in driver NumPy under the identical
-#   stable (score, cid) order; the list_id -> [query_id] dict rides into
-#   the mapInPandas closure, so candidate (query_id, neighbor_id) pairs
-#   are emitted IN the single pass: no N x K rows, no window Exchange, no
-#   probe/assign re-join.
-# - the exact-cosine re-rank keeps the ORIGINAL Spark SQL text (`sims` +
-#   rank CTEs with the same COSINE fold), so every float that reaches the
-#   output is produced by the same JVM expressions as before — results are
-#   value-identical by construction (pinned: tests/test_ann_fast.py
-#   row-equality against the pure-SQL form at two SFs).
+#   the SAME Spark SQL expression as engine.ann — and its top-nprobe lists
+#   are computed in driver NumPy under the identical stable (score, cid)
+#   order; the list_id -> [query_id] dict rides into the mapInPandas
+#   closure, so candidate (query_id, neighbor_id) pairs are emitted IN the
+#   single pass: no N x K rows, no window Exchange, no probe/assign re-join.
+# - the exact cosines are np.add.accumulate sequential folds, bit-identical
+#   to the engine.ann.COSINE fold, and the rank + rounding run in Spark SQL.
+#   Pinned: row-equal to engine.ann.ivf_topk over a persisted index at two
+#   SFs for all three variants (tests/test_ann_index.py) and to the DuckDB
+#   oracle (tests/test_entry_contract.py).
 _IVF_Q_EXPR = (
     "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 )
 
 
 # rank + rounding over (query_id, neighbor_id, sim) candidate rows — the
-# SAME window/round text as the oracled SQL form's tail. The sim doubles
-# are produced by np.add.accumulate sequential folds, which are
-# BIT-identical to the SQL COSINE aggregate folds (the embedding_topk
-# equality pin demonstrates this at three SFs).
+# SAME window/round text as the oracle's tail. The sim doubles are
+# produced by np.add.accumulate sequential folds, which are BIT-identical
+# to the engine.ann.COSINE aggregate fold (the embedding_topk raw-double
+# pin in tests/test_ann_fast.py checks this at sf0.001 and sf0.1).
 _IVF_RANK_SQL = """
 SELECT query_id, neighbor_id, rank, CAST(round(sim, 4) + 0 AS DOUBLE) AS sim_r FROM (
   SELECT query_id, neighbor_id, sim,
@@ -3339,7 +3232,8 @@ LEFT JOIN nov ON d.doc_id = nov.doc_id
 # tag-back join == count of keeper rows per owning doc — `nov`, computed
 # from the already-aggregated k, no second gram pass. The novelty division
 # sees the same integers, so the rounded double is identical. Pinned
-# row-equal to the r7 form in tests/test_substr_fast.py.
+# against the DuckDB oracle below at sf0.001 and sf0.01
+# (tests/test_entry_contract.py).
 # DuckDB twin: row_number window == min-struct keeper under the same
 # (doc_id, pos) order — the paragraph_dedup oracle discipline.
 _SQL_SUBSTR_DEDUP_DUCK = """
@@ -4510,9 +4404,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_topk": _q_embedding_topk_fast,
         "embedding_near_dup": _sql_query(_NEARDUP_SPARK, "embeddings"),
         "ann_lsh_candidates": _sql_query(_ANN_LSH_SPARK, "embeddings"),
-        # r8: NumPy-batched assignment (value-identical; the pure-SQL forms
-        # _ANN_IVF*_SPARK remain the documented construction and the
-        # row-equality pin's reference side, tests/test_ann_fast.py)
+        # NumPy-batched assignment, row-equal to engine.ann.ivf_topk
+        # (tests/test_ann_index.py) and to the DuckDB oracle
         "ann_ivf_topk": _mk_ivf_fast(trained=False, nprobe=_IVF_NPROBE),
         "ann_ivf_topk_trained": _mk_ivf_fast(trained=True, nprobe=_IVF_NPROBE),
         "ann_ivf_topk_trained_hr": _mk_ivf_fast(trained=True, nprobe=_IVF_NPROBE_HR),

@@ -363,28 +363,6 @@ def _attribution_join(
     )
 
 
-def incremental_event_rollup(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    events_schema: T.StructType,
-):
-    """Streaming windowed rollup with watermark, AvailableNow, append mode."""
-    stream = spark.readStream.schema(events_schema).parquet(events_dir)
-    rolled = windowed_event_counts(stream)
-    query = (
-        rolled.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
 def incremental_extract_warc(
     spark: SparkSession,
     warc_dir: str,

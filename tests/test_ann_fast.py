@@ -1,38 +1,47 @@
-"""r8 optimization pin: the NumPy-batched IVF execution (`_mk_ivf_fast`)
-must be row-identical to the pure-SQL forms it replaced (`_ANN_IVF_SPARK` /
-`_ANN_IVF_TRAINED_SPARK` / `_ANN_IVF_TRAINED_HR_SPARK`), which are still the
-oracled construction. The fast path moves ONLY the integer argmin/argmax
-(assignment + probe ranking) into a mapInPandas matmul; the exact-cosine
-re-rank keeps the original SQL text — so any divergence here is an integer
-tie-rule or quantization bug, never float noise."""
+"""Pins on the NumPy-batched embedding queries.
+
+Their outputs are compared with the DuckDB oracle in
+tests/test_entry_contract.py and, for IVF, with the persisted-index
+``engine.ann.ivf_topk`` in tests/test_ann_index.py. This file pins what
+those rounded comparisons cannot see: the raw cosine doubles are the
+``engine.ann.COSINE`` Spark fold bit for bit, and the IVF plan has no
+N x K cross join."""
 
 from __future__ import annotations
 
 import pytest
 
 import __spark_entry__ as em
+from engine.ann import COSINE
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.mark.parametrize("sf", ["0.001", "0.01"])
-@pytest.mark.parametrize(
-    "name, sql",
-    [
-        ("ann_ivf_topk", em._ANN_IVF_SPARK),
-        ("ann_ivf_topk_trained", em._ANN_IVF_TRAINED_SPARK),
-        ("ann_ivf_topk_trained_hr", em._ANN_IVF_TRAINED_HR_SPARK),
-    ],
-)
-def test_fast_ivf_equals_sql_form(spark, sf, name, sql):
+@pytest.mark.parametrize("sf", ["0.001", "0.1"])
+def test_embedding_topk_sims_equal_cosine_fold(spark, sf):
+    """np.add.accumulate over the element products is the same sequence of
+    IEEE additions as Spark's ``aggregate`` left fold, so the unrounded
+    ``sim`` of every (query, candidate) pair the fast query emits must
+    EQUAL engine.ann.COSINE evaluated in Spark — exact float equality,
+    checked before the rounding that the oracle comparisons see."""
     sf_dir = f"/root/testdata/sf{sf}"
-    fast = _rows(em.queries()[name](spark, sf_dir))
+    em.queries()["embedding_topk"](spark, sf_dir)  # registers _topk_sims
+    fast = {
+        (r["query_id"], r["neighbor_id"]): r["sim"]
+        for r in spark.table("_topk_sims").collect()
+    }
     em._load(spark, sf_dir, "embeddings")
-    ref = _rows(spark.sql(sql))
-    assert fast == ref
-    assert len(fast) > 0
+    vecs = "SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings"
+    ref = {
+        (r["query_id"], r["neighbor_id"]): r["sim"]
+        for r in spark.sql(
+            f"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
+            f"{COSINE.format(a='q.v', b='c.v')} AS sim "
+            f"FROM ({vecs} WHERE vec_id < 10) q CROSS JOIN ({vecs} WHERE vec_id >= 10) c"
+        ).collect()
+    }
+    assert fast.keys() == ref.keys() and len(ref) > 0
+    # float.hex compares bit patterns (NaN == NaN, 0.0 != -0.0)
+    diff = [(k, fast[k], ref[k]) for k in ref if fast[k].hex() != ref[k].hex()]
+    assert not diff, f"{len(diff)} of {len(ref)} sims differ, first: {diff[0]}"
 
 
 def test_fast_ivf_plan_has_no_cross_join_or_window(spark):

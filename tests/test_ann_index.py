@@ -1,5 +1,5 @@
 """Persisted IVF index (engine/ann, r4): build-once/probe-many equals the
-registry's per-query IVF computation exactly, and probing reads ONLY the
+registry's NumPy-batched IVF queries exactly, and probing reads ONLY the
 probed lists' partition files (dynamic partition pruning — the inverted-
 list scaling story, plan-pinned)."""
 
@@ -30,20 +30,28 @@ def test_index_layout_is_partitioned_lists(index_path):
     assert len(lists) >= 2, lists  # one directory per inverted list
 
 
-def test_persisted_index_equals_registry_query(spark, index_path):
+@pytest.mark.parametrize("sf", ["0.001", "0.01"])
+def test_persisted_index_equals_registry_query(spark, tmp_path, sf):
     """Same construction, same tie-breaks: probing the persisted index
-    reproduces the oracled ann_ivf_topk output row-for-row."""
+    reproduces the NumPy-batched ann_ivf_topk output row-for-row —
+    ivf_topk is the Spark SQL statement of the construction that query
+    computes."""
     import __spark_entry__ as em
 
+    sf_dir = f"/root/testdata/sf{sf}"
+    p = str(tmp_path / "ivf")
+    ann.build_ivf_index(spark, sf_dir, p)
     queries = (
-        spark.read.parquet(f"{SF}/embeddings.parquet").where("vec_id < 10")
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet").where("vec_id < 10")
     )
     got = sorted(
         tuple(r)
-        for r in ann.ivf_topk(spark, index_path, queries, nprobe=4, k=3).collect()
+        for r in ann.ivf_topk(
+            spark, p, queries, nprobe=ann.IVF_NPROBE, k=3
+        ).collect()
     )
     want = sorted(
-        tuple(r) for r in em.queries()["ann_ivf_topk"](spark, SF).collect()
+        tuple(r) for r in em.queries()["ann_ivf_topk"](spark, sf_dir).collect()
     )
     assert got == want and len(got) == 30
 
@@ -60,33 +68,40 @@ def test_probe_scan_is_partition_pruned(spark, index_path):
     assert "dynamicpruning" in plan.lower(), plan
 
 
-def test_trained_index_equals_registry_query(spark, tmp_path):
+@pytest.mark.parametrize("sf", ["0.001", "0.01"])
+def test_trained_index_equals_registry_query(spark, tmp_path, sf):
     """r5 (VERDICT r4 #1): the persisted index built from the FROZEN trained
-    codebook reproduces the oracled ann_ivf_topk_trained output row-for-row
-    — same quantization (floor(x*1000) in Spark SQL == math.floor in the
-    generator, both IEEE double), same L2 ranking, same tie-breaks."""
+    codebook reproduces the NumPy-batched ann_ivf_topk_trained output
+    (nprobe = IVF_NPROBE) and ann_ivf_topk_trained_hr output (nprobe =
+    IVF_NPROBE_HIGH_RECALL) row-for-row — same quantization (floor(x*1000)
+    in Spark SQL == math.floor in the generator, both IEEE double), same L2
+    ranking, same tie-breaks."""
     import __spark_entry__ as em
 
     from engine import ann_codebook
 
+    sf_dir = f"/root/testdata/sf{sf}"
     cb = spark.createDataFrame(
         [(i, c) for i, c in enumerate(ann_codebook.TRAINED_CENTROIDS)],
         "cid int, centroid array<double>",
     )
     p = str(tmp_path / "ivf_trained")
-    ann.build_ivf_index(spark, SF, p, codebook=cb)
+    ann.build_ivf_index(spark, sf_dir, p, codebook=cb)
     queries = (
-        spark.read.parquet(f"{SF}/embeddings.parquet").where("vec_id < 10")
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet").where("vec_id < 10")
     )
-    got = sorted(
-        tuple(r)
-        for r in ann.ivf_topk(spark, p, queries, nprobe=4, k=3).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in em.queries()["ann_ivf_topk_trained"](spark, SF).collect()
-    )
-    assert got == want and len(got) == 30
+    for name, nprobe in [
+        ("ann_ivf_topk_trained", ann.IVF_NPROBE),
+        ("ann_ivf_topk_trained_hr", ann.IVF_NPROBE_HIGH_RECALL),
+    ]:
+        got = sorted(
+            tuple(r)
+            for r in ann.ivf_topk(spark, p, queries, nprobe=nprobe, k=3).collect()
+        )
+        want = sorted(
+            tuple(r) for r in em.queries()[name](spark, sf_dir).collect()
+        )
+        assert got == want and len(got) == 30, name
 
 
 def test_trained_index_probe_is_partition_pruned(spark, tmp_path):
@@ -359,3 +374,21 @@ def test_compact_heals_interrupted_swap(spark, tmp_path):
     )
     got = sorted(tuple(r) for r in ann.ivf_topk(spark, idx, queries).collect())
     assert got == want
+
+
+def test_ivf_topk_restores_interrupted_swap(spark, tmp_path):
+    """ADVICE r8: a crash between the two renames of compact_ivf_lists
+    leaves the lists table only under a .gc-* sibling; a probe must put it
+    back and answer as before, without waiting for a maintenance op."""
+    import os
+
+    idx = str(tmp_path / "idx")
+    ann.build_ivf_index(spark, SF, idx)
+    queries = spark.read.parquet(f"{SF}/embeddings.parquet").where("vec_id < 10")
+    want = sorted(tuple(r) for r in ann.ivf_topk(spark, idx, queries).collect())
+
+    os.rename(f"{idx}/lists", f"{idx}/lists.gc-x")
+    got = sorted(tuple(r) for r in ann.ivf_topk(spark, idx, queries).collect())
+    assert got == want and len(got) == 30
+    assert os.path.exists(f"{idx}/lists")
+    assert not os.path.exists(f"{idx}/lists.gc-x")

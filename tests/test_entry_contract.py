@@ -1,6 +1,7 @@
 """Mirror of the driver's correctness gate: run every ``queries()`` entry on
-Spark and its ``oracle_sql()`` twin on DuckDB over the same sf0.001 parquet,
-compare row count, column names, and order-insensitive values."""
+Spark and its ``oracle_sql()`` twin on DuckDB over the same sf0.001 parquet
+(the fast-pathed queries also at larger scale factors), compare row count,
+column names, and order-insensitive values."""
 
 from __future__ import annotations
 
@@ -19,10 +20,10 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _duck_conn():
+def _duck_conn(sf_dir):
     con = duckdb.connect()
     for name in entry_mod._TABLES:
-        path = f"{SF_DIR}/{name}.parquet"
+        path = f"{sf_dir}/{name}.parquet"
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     return con
@@ -63,10 +64,25 @@ def test_hll_sketch_within_tolerance(spark):
         assert abs(r.a - r.e) <= max(2, 0.1 * r.e), r
 
 
-@pytest.mark.parametrize("name", sorted(entry_mod.queries().keys()))
-def test_query_matches_oracle(spark, name):
+# Queries whose Spark execution is not their oracle's construction (Arrow/
+# NumPy passes, single-pass dedup tallies) are also checked at sf0.01, and
+# embedding_topk at sf0.1.
+_FAST_PATHED = [
+    "minhash_signatures", "simhash_fingerprint", "embedding_topk",
+    "ann_ivf_topk", "ann_ivf_topk_trained", "ann_ivf_topk_trained_hr",
+    "substring_dedup", "paragraph_dedup",
+]
+_ORACLE_CASES = (
+    [pytest.param(n, SF_DIR, id=n) for n in sorted(entry_mod.queries())]
+    + [pytest.param(n, "/root/testdata/sf0.01", id=f"{n}-sf0.01") for n in _FAST_PATHED]
+    + [pytest.param("embedding_topk", "/root/testdata/sf0.1", id="embedding_topk-sf0.1")]
+)
+
+
+@pytest.mark.parametrize("name, sf_dir", _ORACLE_CASES)
+def test_query_matches_oracle(spark, name, sf_dir):
     q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+    sdf = q(spark, sf_dir)
     spark_cols = [c.lower() for c in sdf.columns]
     spark_rows = [tuple(r) for r in sdf.collect()]
 
@@ -75,7 +91,7 @@ def test_query_matches_oracle(spark, name):
         assert len(spark_rows) >= 0  # rows-only check
         return
 
-    con = _duck_conn()
+    con = _duck_conn(sf_dir)
     res = con.execute(oracles[name])
     duck_cols = [d[0].lower() for d in res.description]
     duck_rows = res.fetchall()
