@@ -18,9 +18,11 @@ metrics::
       → filter(non-empty norm)                 # empty-region drop (O8)
       → mapInPandas(assemble_blocks)           # reading-order A4, zero shuffle
 
-Both modes call the same ``extraction`` functions and are pinned
-byte-identical to the goldens (tests/test_golden_e2e.py); neither plan has
-an Exchange unless a salted repartition is asked for.
+Both modes call the same ``extraction.core`` functions — fused through
+``extract_document``, staged through its two halves ``detect_document``
+(stage 1) and ``assemble`` (stage 3) — and are pinned byte-identical to the
+goldens (tests/test_golden_e2e.py); neither plan has an Exchange unless a
+salted repartition is asked for.
 """
 
 from __future__ import annotations

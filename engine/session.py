@@ -16,8 +16,8 @@ from pyspark.sql import SparkSession
 # pages fits comfortably in the Python worker and (b) the JVM serializer and
 # the Python worker pipeline tightly instead of alternating on big chunks
 # (O6 analog at batch level; measured ~3-4x throughput vs 512-row batches on
-# the skewed bench corpus). Overridable via SPARK_ARROW_BATCH.
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_ARROW_BATCH", "128"))
+# the skewed bench corpus).
+ARROW_BATCH_ROWS = 128
 
 
 def get_spark(

@@ -68,7 +68,7 @@ def rowlevel_catalog_available(spark: SparkSession) -> bool:
 
 # Hash buckets for the merge layout. 64 keeps per-bucket rewrites ~1/64 of
 # the table; at real scale this maps to Iceberg `bucket(N, url)` partitioning.
-N_MERGE_BUCKETS = int(os.environ.get("SPARK_EXTRACT_MERGE_BUCKETS", "64"))
+N_MERGE_BUCKETS = 64
 
 
 def _is_bucketed(path: str) -> bool:

@@ -14,15 +14,15 @@ recognize/normalize → reading-order reassembly with ``"\\n".join``
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from extraction.html_clean import decode_html
 from extraction.normalize import normalize_text
-from extraction.routing import block_route, doc_route
+from extraction.routing import route_lang
 from extraction.segment import Block, segment_blocks
 
 
-@dataclass(frozen=True)
-class Span:
+class Span(NamedTuple):
     block_id: int
     start: int
     end: int
@@ -39,11 +39,6 @@ class ExtractResult:
     status: str = "ok"
 
 
-def recognize_block(text: str, route: str) -> str:
-    """Stage-2 unit: one raw block text → normalized text for its route."""
-    return normalize_text(text, route)
-
-
 def best_block(blocks: list[Block]) -> Block | None:
     """The relaxed-pass winner: highest score, ties to the lowest block_id.
 
@@ -57,6 +52,43 @@ def best_block(blocks: list[Block]) -> Block | None:
     return max(blocks, key=lambda b: (b.score, -b.block_id))
 
 
+def detect_document(
+    html: bytes | str | None, fallback: bool = False
+) -> tuple[list[Block], int]:
+    """Detect half: page payload → (candidate blocks, forced block_id).
+
+    ``forced_id`` is the O5 relaxed-pass winner (:func:`best_block`), or -1
+    when there is none. It is chosen only with ``fallback=True`` and only on
+    the DETECT-level condition "no block passed the keep rule" (ref: "no
+    regions detected"), never on the post-normalization outcome: a doc whose
+    kept blocks all normalize to empty stays ``'empty'``."""
+    raw = decode_html(html) if isinstance(html, (bytes, bytearray)) else (html or "")
+    blocks = segment_blocks(raw)
+    forced_id = -1
+    if fallback and blocks and not any(b.kept for b in blocks):
+        forced_id = best_block(blocks).block_id
+    return blocks, forced_id
+
+
+def assemble(
+    parts: list[tuple[int, str, str]], forced: bool
+) -> tuple[str, list[Span], str]:
+    """Assemble half: reading-ordered ``(block_id, route, norm_text)`` parts
+    with non-empty text → (extracted_text, spans, status).
+
+    Parts are joined with ``"\\n"``; each span is the prefix-sum offset of
+    its part. Status is ``'empty'`` without parts, else ``'fallback'`` when
+    they came from the O5 ladder (``forced``), else ``'ok'``."""
+    spans: list[Span] = []
+    pos = 0
+    for block_id, route, norm in parts:
+        end = pos + len(norm)
+        spans.append(Span(block_id, pos, end, route))
+        pos = end + 1  # +1 for the '\n' joiner
+    status = ("fallback" if forced else "ok") if parts else "empty"
+    return "\n".join(p[2] for p in parts), spans, status
+
+
 def extract_document(
     url: str, html: bytes | str, lang: str | None, fallback: bool = False
 ) -> ExtractResult:
@@ -67,52 +99,15 @@ def extract_document(
     the best-scoring block is kept unconditionally and the row is emitted
     with ``status='fallback'`` instead of giving up with ``'empty'``."""
     try:
-        raw = decode_html(html) if isinstance(html, (bytes, bytearray)) else (html or "")
-        blocks = segment_blocks(raw)
-        n_blocks = len(blocks)
-        droute = doc_route(lang)
-
-        parts: list[tuple[int, str, str]] = []  # (block_id, route, norm_text)
+        blocks, forced_id = detect_document(html, fallback)
+        parts: list[tuple[int, str, str]] = []
         for b in blocks:
-            if not b.kept:
-                continue
-            route = droute if droute is not None else block_route(b.text)
-            norm = recognize_block(b.text, route)
-            if norm:
-                parts.append((b.block_id, route, norm))
-
-        if not parts:
-            # The relaxed pass triggers on the DETECT-level condition "no
-            # block passed the keep rule" (ref: "no regions detected"), not
-            # on the post-normalization outcome — the staged pipeline decides
-            # `forced` in stage 1, before norms exist, and the two paths must
-            # agree byte-for-byte. A doc whose kept blocks all normalize to
-            # empty therefore stays 'empty' in both.
-            if fallback and not any(b.kept for b in blocks):
-                best = best_block(blocks)
-                if best is not None:
-                    route = droute if droute is not None else block_route(best.text)
-                    norm = recognize_block(best.text, route)
-                    if norm:
-                        return ExtractResult(
-                            url,
-                            norm,
-                            [Span(best.block_id, 0, len(norm), route)],
-                            n_blocks,
-                            1,
-                            "fallback",
-                        )
-            return ExtractResult(url, "", [], n_blocks, 0, "empty")
-
-        spans: list[Span] = []
-        pos = 0
-        texts: list[str] = []
-        for block_id, route, norm in parts:
-            start = pos
-            end = start + len(norm)
-            spans.append(Span(block_id, start, end, route))
-            texts.append(norm)
-            pos = end + 1  # +1 for the '\n' joiner
-        return ExtractResult(url, "\n".join(texts), spans, n_blocks, len(parts), "ok")
+            if b.kept or b.block_id == forced_id:
+                route = route_lang(b.text, lang)
+                norm = normalize_text(b.text, route)
+                if norm:
+                    parts.append((b.block_id, route, norm))
+        text, spans, status = assemble(parts, forced_id >= 0)
+        return ExtractResult(url, text, spans, len(blocks), len(parts), status)
     except Exception as exc:  # noqa: BLE001 — error rows, not exceptions
         return ExtractResult(url, "", [], 0, 0, f"error:{type(exc).__name__}")

@@ -34,6 +34,9 @@ from __future__ import annotations
 
 import re
 
+# Arabic blocks per the reference: U+0600–U+06FF (script_detection.py:20-21),
+# U+0750–U+077F and U+08A0–U+08FF (post_process.py:96-109). The one table
+# for both routing and normalization.
 _ARABIC_RANGES = ((0x0600, 0x06FF), (0x0750, 0x077F), (0x08A0, 0x08FF))
 _ARABIC_CLASS = "؀-ۿݐ-ݿࢠ-ࣿ"
 

@@ -22,22 +22,16 @@ from __future__ import annotations
 
 import re
 
+from extraction.normalize import _ARABIC_CLASS, _is_arabic_cp
+
 RTL_DOC_LANGS = frozenset({"ar", "ur", "ara", "urd", "arabic", "urdu", "fa", "ps"})
 LTR_DOC_LANGS = frozenset(
     {"en", "english", "de", "es", "fr", "it", "pt", "nl", "pl", "sv",
      "zh", "ja", "ko", "ru", "tr", "id", "vi", "th", "hi"}
 )
 
-# Arabic blocks per the reference: U+0600–U+06FF (script_detection.py:20-21),
-# U+0750–U+077F and U+08A0–U+08FF (post_process.py:96-109).
-_ARABIC_RANGES = ((0x0600, 0x06FF), (0x0750, 0x077F), (0x08A0, 0x08FF))
-_ARABIC_RE = re.compile("[؀-ۿݐ-ݿࢠ-ࣿ]+")
+_ARABIC_RE = re.compile("[" + _ARABIC_CLASS + "]+")
 _LATIN_RE = re.compile("[A-Za-z]+")
-
-
-def _is_arabic(ch: str) -> bool:
-    cp = ord(ch)
-    return any(lo <= cp <= hi for lo, hi in _ARABIC_RANGES)
 
 
 def doc_route(lang: str | None) -> str | None:
@@ -74,7 +68,7 @@ def _ref_block_route(text: str) -> str:
     n_arabic = 0
     n_latin = 0
     for ch in text:
-        if _is_arabic(ch):
+        if _is_arabic_cp(ord(ch)):
             n_arabic += 1
         elif ("a" <= ch <= "z") or ("A" <= ch <= "Z"):
             n_latin += 1

@@ -23,7 +23,6 @@ import argparse
 import datetime as dt
 import json
 import random
-from dataclasses import asdict
 
 EPOCH = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -244,7 +243,7 @@ def compute_goldens(rows: list[dict], fallback: bool = False) -> list[dict]:
             {
                 "url": res.url,
                 "extracted_text": res.extracted_text,
-                "spans": [asdict(s) for s in res.spans],
+                "spans": [s._asdict() for s in res.spans],
                 "n_blocks": res.n_blocks,
                 "n_kept": res.n_kept,
                 "status": res.status,

@@ -154,17 +154,44 @@ def test_extract_document_empty_and_error_paths():
     assert r2.status in ("empty", "ok")
 
 
+class _Evil:
+    """A payload that explodes inside the parse."""
+
+    def __bool__(self):
+        return True
+
+
 def test_extract_document_error_row_on_bad_payload():
     """A payload that explodes inside the parse becomes an error row, never
     an exception (ref skip-don't-crash, bilingual_ocr.py:240-243)."""
-
-    class Evil:
-        def __bool__(self):
-            return True
-
-    r = extract_document("u", Evil(), "en")  # type: ignore[arg-type]
+    r = extract_document("u", _Evil(), "en")  # type: ignore[arg-type]
     assert r.status.startswith("error:")
     assert r.extracted_text == "" and r.n_kept == 0
+
+
+def test_staged_error_row_matches_extract_document():
+    """The staged carriers, run without Spark on the same payload: stage 1
+    emits only the sentinel carrying the error status, and stage 3 turns it
+    into exactly the row extract_document returns."""
+    import pandas as pd
+
+    from engine.stages import _recognize_series, assemble_blocks, make_detect_blocks
+
+    ts = pd.Timestamp("2026-01-01")
+    pages = pd.DataFrame({"url": ["u"], "warc_ts": [ts], "html": [_Evil()], "lang": ["en"]})
+    (blocks,) = make_detect_blocks(emit_filtered_text=False)(iter([pages]))
+    assert list(blocks["block_id"]) == [-1]
+    assert blocks["doc_status"][0].startswith("error:")
+
+    blocks["norm_text"] = _recognize_series(blocks["text"], blocks["lang"])
+    (out,) = assemble_blocks(iter([blocks]))
+    r = extract_document("u", _Evil(), "en")  # type: ignore[arg-type]
+    assert (r.extracted_text, r.spans, r.n_blocks, r.n_kept) == ("", [], 0, 0)
+    assert r.status == blocks["doc_status"][0]
+    assert out.to_dict("records") == [{
+        "url": "u", "warc_ts": ts, "extracted_text": r.extracted_text, "spans": r.spans,
+        "n_blocks": r.n_blocks, "n_kept": r.n_kept, "status": r.status,
+    }]
 
 
 def test_extract_document_deterministic():

@@ -6,9 +6,14 @@ byte-identity)."""
 
 from __future__ import annotations
 
+import datetime
+import gzip
+
 import pytest
 
 from engine import pipeline
+from extraction.segment import CHUNK_CHARS
+from fixtures.gen_pages import write_parquet
 
 
 def _collect_results(df) -> dict[str, dict]:
@@ -51,11 +56,41 @@ def test_pipeline_matches_goldens(spark, pages_unit_path, goldens_unit, mode):
     assert not mismatches, f"{len(mismatches)} mismatches: {mismatches[:5]}"
 
 
-def test_staged_equals_fused(spark, pages_small_path):
-    pages = spark.read.parquet(pages_small_path)
-    staged = _collect_results(pipeline.run_extract(pages, mode="staged", num_parts=7))
-    fused = _collect_results(pipeline.run_extract(pages, mode="fused", num_parts=3))
+def _crafted_rows() -> list[dict]:
+    """Edge pages the generated corpus lacks, each with the status the
+    oracle gives it whether or not the fallback is on."""
+    long_p = b"<p>" + b"main content words here " * 4 + b"</p>"
+    giant = b"<p>" + b"lorem ipsum " * (CHUNK_CHARS // 6) + b"</p>"
+    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+    return [
+        {"url": f"crafted://{name}", "warc_ts": ts, "html": html, "text": "",
+         "lang": lang, "status": status}
+        for name, html, lang, status in (
+            ("empty", b"", "en", "empty"),
+            ("gzip", gzip.compress(long_p), "en", "ok"),
+            # its kept block normalizes to empty: no relaxed pass
+            ("ur-latin", long_p, "ur", "empty"),
+            ("giant-block", giant, "", "ok"),
+        )
+    ]
+
+
+@pytest.mark.parametrize("fallback", [False, True])
+def test_staged_equals_fused(spark, pages_small_path, tmp_path, fallback):
+    crafted = _crafted_rows()
+    crafted_path = str(tmp_path / "crafted.parquet")
+    write_parquet(crafted, crafted_path)
+    pages = spark.read.parquet(pages_small_path).unionByName(spark.read.parquet(crafted_path))
+    staged = _collect_results(
+        pipeline.run_extract(pages, mode="staged", num_parts=7, fallback=fallback)
+    )
+    fused = _collect_results(
+        pipeline.run_extract(pages, mode="fused", num_parts=3, fallback=fallback)
+    )
     assert staged == fused
+    assert [fused[r["url"]]["status"] for r in crafted] == [r["status"] for r in crafted]
+    assert fused["crafted://giant-block"]["n_blocks"] > 1
+    assert any(r["status"] == "fallback" for r in fused.values()) == fallback
 
 
 def test_staged_local_plan_has_no_exchange(spark, pages_small_path):
