@@ -1040,15 +1040,18 @@ def register_jvm_media(spark) -> bool:
     gate creates its own SparkSession without spark.jars; previously this
     raised and all four ``*_jvm`` rows went red). Before giving up, the jar
     is resolved exactly as engine.session.get_spark does and ADD JAR'd onto
-    the LIVE session, then registration is retried. The done-flag lives in
-    the SESSION's runtime conf, not an id(spark) cache: a new session can
-    reuse a collected session's object id (review r4)."""
+    the LIVE session, then registration is retried; a fallback emits one
+    RuntimeWarning per session, when it is first decided (the twins equal
+    the JVM results only on complete/PNM/bad-magic payloads). The done-flag
+    lives in the SESSION's runtime conf, not an id(spark) cache: a new
+    session can reuse a collected session's object id (review r4)."""
     flag = spark.conf.get("spark.mediadec.registered", None)
     if flag == "true":
         return True
     if flag == "fallback":
         return False
     import os
+    import warnings
 
     from pyspark.sql.types import StructType
 
@@ -1067,6 +1070,15 @@ def register_jvm_media(spark) -> bool:
             _register_all()
         except Exception:  # noqa: BLE001 — Python twins are value-pinned
             spark.conf.set("spark.mediadec.registered", "fallback")
+            warnings.warn(
+                "mediadec JVM UDFs could not be loaded: the *_jvm entry "
+                "points fall back to the Python twins (decode_images, "
+                "decode_audio, resize_decoded, gif_frames), whose results "
+                "equal the JVM path only on complete, PNM and bad-magic "
+                "payloads",
+                RuntimeWarning,
+                stacklevel=2,
+            )
             return False
     spark.conf.set("spark.mediadec.registered", "true")
     return True

@@ -7,7 +7,7 @@ and the anti-join resume at the scaling corpus' skewed size distribution
     python scripts/soak.py [--docs 100000] [--out /tmp/soak_extracted]
 
 Exit 0 = all invariants held (counts, zero resume work, zero dupes,
-update-wins lineage).
+update-wins lineage, one data file per bucket after the merges).
 """
 
 from __future__ import annotations
@@ -20,6 +20,14 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+def max_files_per_bucket(path: str) -> int:
+    return max(
+        sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
+        if d.startswith("bucket=")
+    )
 
 
 def main() -> None:
@@ -62,6 +70,12 @@ def main() -> None:
     updated = final.filter("lineage = 'soak2'").count()
     assert final.count() == args.docs and dupes == 0 and updated == 5000
     print(f"phase3: idempotent re-merge ok (rows={args.docs}, dupes=0, updated=5000)")
+
+    # merges group rows by bucket before writing: at this table size every
+    # bucket is far below the rebalance split size, so one file per bucket
+    most = max_files_per_bucket(args.out)
+    print(f"files: at most {most} data file(s) per bucket")
+    assert most == 1, most
     spark.stop()
 
 

@@ -309,7 +309,8 @@ def test_register_falls_back_to_python_twins_when_jar_unavailable(
     )
     monkeypatch.setattr(mm, "_mediadec_jar_path", lambda: "/nonexistent/x.jar")
     try:
-        assert mm.register_jvm_media(spark) is False
+        with pytest.warns(RuntimeWarning, match="fall back to the Python twins"):
+            assert mm.register_jvm_media(spark) is False
         # flag caches the decision for the session
         assert spark.conf.get("spark.mediadec.registered") == "fallback"
         pal = bytes(v for i in range(8) for v in (40 + i * 10,) * 3)

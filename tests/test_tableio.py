@@ -101,6 +101,69 @@ def test_merge_rewrites_only_dirty_buckets(spark, pages_unit_path, tmp_path):
     assert final.filter(f"url = '{one_url}'").first()["lineage"] == "b"
 
 
+def _files_per_bucket(path):
+    return {d: len(files) for d, files in _bucket_state(path).items()}
+
+
+def _stats_rows(spark, n, start=0):
+    from datetime import datetime, timedelta, timezone
+
+    t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    return spark.createDataFrame(
+        [(f"u{i}", i, t0 + timedelta(minutes=i), f"t{i}")
+         for i in range(start, start + n)],
+        "url string, doc_id long, warc_ts timestamp, extracted_text string",
+    )
+
+
+def test_merge_writes_one_file_per_bucket(spark, tmp_path):
+    """Merges group rows by bucket before the write (Iceberg's hash write
+    distribution): a many-task input still leaves exactly one data file in
+    every bucket dir — on the new-table, flat-migration and incremental
+    branches — and repeated merges do not grow the file count."""
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 96).repartition(8),
+                         n_buckets=8)
+    counts = _files_per_bucket(path)
+    assert len(counts) == 8 and set(counts.values()) == {1}, counts
+
+    for k in range(3):
+        upd = _stats_rows(spark, 40, start=30 * k).repartition(8)
+        tableio.merge_by_url(spark, path, upd)
+        assert _files_per_bucket(path) == counts, k
+    assert spark.read.parquet(path).count() == 100  # u0..u99
+
+    flat = str(tmp_path / "flat")
+    tableio.write_table(_stats_rows(spark, 64).repartition(8), flat)
+    tableio.merge_by_url(spark, flat, _stats_rows(spark, 8, start=60), n_buckets=8)
+    assert set(_files_per_bucket(flat).values()) == {1}
+
+
+def test_merge_stats_equal_full_refresh(spark, tmp_path):
+    """The merge reads each dirty bucket's stats once, from the staged tmp
+    dir, and records them as exact: after each incremental merge the
+    recorded stats equal a full recomputation over the live table."""
+    import json
+
+    path = str(tmp_path / "t")
+    layout = os.path.join(path, "_layout.json")
+
+    def recorded():
+        with open(layout, encoding="utf-8") as f:
+            return json.load(f)["stats"]
+
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 64).repartition(4),
+                         n_buckets=8)
+    for upd in (_stats_rows(spark, 16, start=200), _stats_rows(spark, 24, start=50)):
+        tableio.merge_by_url(spark, path, upd.repartition(4))
+        merged = recorded()
+        tableio._refresh_stats(spark, path)
+        assert recorded() == merged
+    assert len(merged) == 8 and all(
+        set(s) == {"doc_id", "warc_ts"} for s in merged.values()
+    )
+
+
 def test_read_url_prunes_to_one_bucket(spark, pages_unit_path, tmp_path):
     """Point lookup reads only the bucket the url hashes into: result equals
     the full-table filter, its scan lists exactly one bucket=N directory,
@@ -206,8 +269,17 @@ def test_compact_buckets_preserves_content(spark, tmp_path):
     path = str(tmp_path / "tbl")
     rows = [(f"u{i}", f"t{i}", 1) for i in range(64)]
     df = spark.createDataFrame(rows, "url string, extracted_text string, ver long")
-    # high-parallelism merge -> several files per bucket
     tableio.merge_by_url(spark, path, df.repartition(8), n_buckets=4)
+    # merges write one file per bucket: give one bucket a second file (a
+    # second writer generation appending new urls that hash into it)
+    from pyspark.sql import functions as F
+
+    b0 = f"{path}/bucket=0"
+    more = spark.createDataFrame(
+        [(f"u{i}", f"t{i}", 2) for i in range(64, 128)], df.schema
+    ).where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    more.coalesce(1).write.mode("append").parquet(b0)
+    spark.catalog.refreshByPath(path)
     before = sorted(tuple(r) for r in spark.read.parquet(path).drop("bucket").collect())
     multi = [
         d for d in os.listdir(path)
