@@ -340,8 +340,8 @@ FROM g GROUP BY user_id
 """
 # Built-in session_window twin (new in r3): the same gap sessionization via
 # Spark's native session_window aggregate (SURVEY §2.5/§2.9 — the operator a
-# Spark user reaches for first; the gaps-and-islands SQL above and the
-# stateful streaming sessionizer are its equivalents, all three pinned).
+# Spark user reaches for first; the gaps-and-islands SQL above is its
+# equivalent, both pinned).
 # Spark merge rule: windows [ts, ts+gap) merge when they OVERLAP, i.e. a new
 # session starts when the gap is >= 30 min — the oracle mirrors >= exactly.
 _SQL_SESSION_WINDOW_SPARK = """
@@ -682,7 +682,7 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
 """
 
 
-# Event-time tumbling window rollup (batch form of streaming windowed agg)
+# Event-time tumbling window rollup
 _SQL_WINDOW_ROLLUP_SPARK = """
 SELECT CAST(unix_timestamp(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
        event_type,
@@ -740,9 +740,8 @@ shingles AS (SELECT doc_id, shingle FROM sh WHERE shingle IS NOT NULL)
 # Spark signatures are shuffle-free: shingles stay inside each row (no
 # posexplode, no window, ZERO Exchange). `minhash_signatures` runs as one
 # Arrow pass (`_q_minhash_fast`); `minhash_lsh_pairs` builds its in-row SQL
-# signature columns from engine/minhash.py, which the incremental streaming
-# path (engine/streaming.neardedup_stream) shares, so both compute THE SAME
-# signatures by construction. The windowed form (`_SHINGLES_DUCK`) is the
+# signature columns from engine/minhash.py, which the other near-dedup
+# queries share, so all compute THE SAME signatures by construction. The windowed form (`_SHINGLES_DUCK`) is the
 # DuckDB oracle's structural twin and serves the Jaccard query, whose
 # set-intersection join genuinely needs shingle rows.
 from engine import minhash as _mh  # noqa: E402
@@ -842,8 +841,8 @@ def _mh_bands(cast: str) -> str:
 # so results stay hash-equal, and a planted 60-clone fixture pins the
 # capped path in pytest. The oversized set is a tiny aggregate on the SAME
 # (band, key) partitioning as the join — no extra corpus scan or shuffle.
-# The constant lives in engine/minhash.py (r4) so the incremental streaming
-# path applies the SAME cap by construction.
+# The constant lives in engine/minhash.py (r4) next to the signature
+# expressions it caps.
 _LSH_BUCKET_CAP = _mh.LSH_BUCKET_CAP
 _MINHASH_PAIRS_TAIL = f"""
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

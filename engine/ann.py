@@ -299,9 +299,12 @@ def _restore_ivf_lists(index_path: str) -> None:
     :func:`compact_ivf_lists` leaves NO lists table at the live path — if
     so, rename the newest ``.gc-*`` sibling back. Runs on every probe
     (:func:`ivf_topk`) as well as on the maintenance ops, so readers never
-    wait for the next maintenance op to find a working index."""
+    wait for the next maintenance op to find a working index. A restore
+    is announced with one RuntimeWarning naming the index and the dir put
+    back."""
     import glob as _glob
     import os
+    import warnings
 
     lists_path = f"{index_path}/lists"
     if os.path.exists(lists_path):
@@ -309,6 +312,13 @@ def _restore_ivf_lists(index_path: str) -> None:
     asides = sorted(_glob.glob(f"{lists_path}.gc-*"), key=os.path.getmtime)
     if asides:
         os.rename(asides[-1], lists_path)
+        warnings.warn(
+            f"IVF index {index_path}: lists table missing after an "
+            f"interrupted compaction swap; restored {asides[-1]} to "
+            f"{lists_path}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def _heal_ivf_lists(index_path: str) -> None:

@@ -1,7 +1,7 @@
-"""MinHash signature / LSH banding expression builders — shared by the batch
-registry queries (``__spark_entry__``) and the incremental streaming path
-(``engine/streaming.neardedup_stream``), so both compute THE SAME signatures
-by construction.
+"""MinHash signature / LSH banding expression builders shared by the batch
+registry queries in ``__spark_entry__`` (``minhash_signatures``,
+``minhash_lsh_pairs``, ``ngram_jaccard_pairs``), so every near-dedup query
+computes THE SAME shingles and signatures by construction.
 
 Construction (public MinHash/LSH formulation, cf. Broder '97 / MMDS ch.3):
 one md5 per token 3-shingle (first 8 hex → 32-bit int) and 8 universal
@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
-
 P = 4294967311  # smallest prime > 2^32
 A = [
     (int(hashlib.md5(f"mh:a:{i}".encode()).hexdigest()[:8], 16) % (2**29 - 1)) | 1
@@ -29,9 +27,9 @@ ROWS_PER_BAND = 2
 
 # A degenerate band key shared by B documents emits B² candidate pairs;
 # standard practice drops oversized buckets (members are caught by other
-# bands or are junk). ONE constant shared by the batch query
-# (`__spark_entry__` minhash_lsh_pairs + its DuckDB oracle) and the
-# incremental streaming path (ADVICE r3 #1) so both cap identically.
+# bands or are junk). ONE constant for every query that caps
+# (`__spark_entry__` minhash_lsh_pairs and its DuckDB oracle text), so all
+# cap identically.
 LSH_BUCKET_CAP = 50
 
 # in-row token 3-shingle array over a `toks` array column — the ONE shingle
@@ -66,19 +64,3 @@ def band_struct_exprs() -> str:
         f"CAST(sig{ROWS_PER_BAND * b + 1} AS STRING))"
         for b in range(N_BANDS)
     )
-
-
-def signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, text) -> (doc_id, sig0..sig7). Shuffle-free: scan → project.
-    Docs with fewer than 3 tokens have no shingles and are dropped (they
-    cannot near-duplicate anything under this scheme)."""
-    toks = df.selectExpr(f"{id_col} AS doc_id", f"split({text_col}, ' ') AS toks")
-    hs = toks.where("size(toks) >= 3").selectExpr("doc_id", f"{HS_EXPR} AS hs")
-    return hs.selectExpr("doc_id", *sig_col_exprs())
-
-
-def bands(sig_df: DataFrame) -> DataFrame:
-    """(doc_id, sig0..7) -> (doc_id, band, key): tiny banded key rows."""
-    return sig_df.selectExpr(
-        "doc_id", f"explode(array({band_struct_exprs()})) AS bk"
-    ).selectExpr("doc_id", "bk.band AS band", "bk.key AS key")

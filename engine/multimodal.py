@@ -10,9 +10,10 @@ scanline unfiltering), BMP (24-bit BI_RGB), GIF (real LZW), JPEG
 animated-GIF frame demux (``gif_frames``) as a REAL 1-row→N-frames
 operator (r4). Production decode additionally runs JVM-native via
 ``engine/java/mediadec`` (``decode_images_jvm`` et al.); the pure-Python
-decoders here are its differential oracle. Remaining formats (WebP/AVIF,
-general video demux) stay behind an import gate with deterministic fakes
-so outputs remain reproducible and oracle-checkable.
+decoders here are its differential oracle. Formats with no decoder here
+(WebP/AVIF) decode to an error row, and the two remaining stubs
+(``extract_binary_meta``, ``resize_images``) emit deterministic fakes so
+outputs stay reproducible and oracle-checkable.
 """
 
 from __future__ import annotations
@@ -28,13 +29,6 @@ META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, payload_sha string, "
     "fake_width bigint, fake_height bigint"
 )
-
-try:  # pragma: no cover - import gate for environments that have PIL
-    from PIL import Image  # type: ignore
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
 
 
 class ImageDecodeError(ValueError):
@@ -745,33 +739,9 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, int]:
     return rate, channels, n, sum_sq
 
 
-def decode_image(payload: bytes):
-    """Decode an image payload by magic byte dispatch.
-
-    PNM, PNG, BMP, GIF (real LZW), and JPEG (baseline + progressive,
-    engine/jpeg) all
-    decode for REAL via pure-Python parsers — no media library needed; all
-    five paths are live and oracle-checked in this sandbox. Remaining
-    formats (WebP/AVIF/...) require PIL, absent from this container, and
-    raise NotImplementedError behind the gate."""
-    if payload[:2] in _PNM_CHANNELS:
-        return decode_pnm(payload)
-    if payload[:8] == _PNG_MAGIC:
-        return decode_png(payload)
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "JPEG/WebP decode requires PIL; this container ships without "
-            "media libraries — PNM and PNG decode natively above"
-        )
-    import io
-
-    return Image.open(io.BytesIO(payload))  # pragma: no cover
-
-
 def _decode_raster(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Gate-safe dispatch: PNM / PNG / BMP / GIF by magic, ImageDecodeError
-    otherwise (never NotImplementedError — batch decode emits error rows,
-    not raises)."""
+    """Magic-byte dispatch: PNM / PNG / BMP / GIF / JPEG, ImageDecodeError
+    otherwise (batch decode turns it into an error row, never a raise)."""
     if payload[:2] in _PNM_CHANNELS:
         return decode_pnm(payload)
     if payload[:8] == _PNG_MAGIC:
@@ -948,40 +918,6 @@ def _resize_batches(target_w: int, target_h: int):
 def resize_images(df: DataFrame, target_w: int = 64, target_h: int = 64) -> DataFrame:
     """(doc_id, payload) -> deterministic fake thumbnails (decode stubbed)."""
     return df.mapInPandas(_resize_batches(target_w, target_h), schema=RESIZE_SCHEMA)
-
-
-FRAMES_SCHEMA = "doc_id bigint, frame_idx bigint, frame_sha string, n_bytes bigint"
-
-
-def _frame_sample_batches(every_n: int, frame_bytes: int = 4096):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "frame_sha": [], "n_bytes": []}
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = p or b""
-                # STUB frame-sample (1 row -> N frame rows): a real impl
-                # demuxes video; the fake slices fixed-size "frames" and
-                # keeps every `every_n`-th — exercising the explode-shaped
-                # output a real frame sampler needs.
-                n_frames = max(1, len(p) // frame_bytes)
-                for i in range(0, n_frames, every_n):
-                    frame = p[i * frame_bytes : (i + 1) * frame_bytes]
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["frame_sha"].append(hashlib.sha256(frame).hexdigest())
-                    rows["n_bytes"].append(len(frame))
-            yield pd.DataFrame(rows)
-
-    return fn
-
-
-def sample_frames(
-    df: DataFrame, every_n: int = 10, frame_bytes: int = 4096
-) -> DataFrame:
-    """(doc_id, payload) -> every-Nth fake frame rows (demux stubbed)."""
-    return df.mapInPandas(
-        _frame_sample_batches(every_n, frame_bytes), schema=FRAMES_SCHEMA
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,18 @@
 """Alternate ingestion sources (SURVEY §2.1 S1): crawl dumps land as JSONL
-(and event logs as CSV) at least as often as parquet. These readers produce
-the exact pages/events schemas the parquet path uses, so every downstream
-stage is source-agnostic — byte identity across sources is test-pinned.
+or as Common Crawl WARC/WET/WAT archives at least as often as parquet.
+These readers produce the exact pages schema the parquet path uses, so
+every downstream stage is source-agnostic — byte identity across sources is
+test-pinned.
 
 JSON cannot carry binary, so the JSONL interchange format stores ``html``
 base64-encoded (``html_b64``); the reader decodes it back to ``binary``
 JVM-side (``unbase64`` — no Python in the path). Schemas are explicit:
 schema inference would re-scan the source and can drift column types.
+
+The three archive formats are one record codec with three record kinds
+(``response`` / ``conversion`` / ``metadata``): one header builder, one
+member walk, one per-kind parse, one driver-side and one distributed
+archive writer.
 """
 
 from __future__ import annotations
@@ -45,17 +51,6 @@ PAGES_JSONL_SCHEMA = T.StructType(
     ]
 )
 
-EVENTS_CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
 def write_pages_jsonl(pages: DataFrame, path: str) -> None:
     """Parquet-schema pages -> JSONL interchange (html base64-encoded)."""
     pages.select(
@@ -82,13 +77,6 @@ def read_pages_jsonl(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_events_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV event log -> the canonical events DataFrame (explicit schema +
-    header; timestamps parsed in the session timezone, which the engine
-    pins to UTC)."""
-    return spark.read.schema(EVENTS_CSV_SCHEMA).option("header", "true").csv(path)
-
-
 # ---------------------------------------------------------------------------
 # WARC (ISO 28500) — the actual Common Crawl interchange format (VERDICT r3
 # next-round #3): gzip MEMBERS, one record per member, each record =
@@ -110,11 +98,56 @@ def read_events_csv(spark: SparkSession, path: str) -> DataFrame:
 # the next inflate and the scan continues; consecutive failures coalesce
 # into ONE error row per corrupt region. The cdx-indexed reader remains
 # the strictly better path (per-record parallelism, exact one-member loss).
+#
+# WET and WAT (below) are the same codec with another record kind: WET
+# carries `conversion` records, WAT `metadata` records.
 # ---------------------------------------------------------------------------
 
 WARC_PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, lang string, status string"
 )
+
+# record kind (its WARC-Type) -> the row columns its parse yields; the
+# matching schemas are WARC_PAGES_SCHEMA, WET_PAGES_SCHEMA, WAT_PAGES_SCHEMA
+_KIND_COLUMNS = {
+    "response": ("url", "warc_ts", "html", "lang", "status"),
+    "conversion": ("url", "warc_ts", "text", "lang", "status"),
+    "metadata": ("url", "warc_ts", "payload", "status"),
+}
+
+
+def _warc_record(
+    kind: str,
+    url: str,
+    ts,
+    body: bytes,
+    content_type: bytes,
+    lang: str | None = None,
+    refers_to: str | None = None,
+) -> bytes:
+    """One uncompressed WARC/1.0 record of WARC-Type ``kind`` around
+    ``body``. ``ts`` is a datetime (UTC). Language travels in
+    WARC-Identified-Content-Language, the field Common Crawl itself uses;
+    ``refers_to`` names the kind of the record this one describes
+    (WARC-Refers-To carries that record's deterministic id)."""
+    headers = [
+        b"WARC/1.0",
+        b"WARC-Type: " + kind.encode(),
+        b"WARC-Record-ID: " + _record_id(url, ts, kind),
+    ]
+    if refers_to is not None:
+        headers.append(b"WARC-Refers-To: " + _record_id(url, ts, refers_to))
+    headers += [
+        b"WARC-Target-URI: " + url.encode(),
+        b"WARC-Date: " + ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
+    ]
+    if lang is not None:
+        headers.append(b"WARC-Identified-Content-Language: " + lang.encode())
+    headers += [
+        b"Content-Type: " + content_type,
+        b"Content-Length: " + str(len(body)).encode(),
+    ]
+    return b"\r\n".join(headers) + b"\r\n\r\n" + body + b"\r\n\r\n"
 
 
 def encode_warc_record(
@@ -122,49 +155,115 @@ def encode_warc_record(
 ) -> bytes:
     """One WARC/1.0 response record (uncompressed): WARC headers + an HTTP
     response envelope around the html bytes. ``warc_ts`` is a datetime
-    (UTC). Language travels in WARC-Identified-Content-Language, the field
-    Common Crawl itself uses."""
+    (UTC)."""
     body = (
         b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
         + b"Content-Length: " + str(len(html)).encode() + b"\r\n\r\n" + html
     )
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: response",
-        b"WARC-Record-ID: " + _record_id(url, warc_ts, "response"),
-        b"WARC-Target-URI: " + url.encode(),
-        b"WARC-Date: " + warc_ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
-    ]
-    if lang is not None:
-        headers.append(b"WARC-Identified-Content-Language: " + lang.encode())
-    headers += [
-        b"Content-Type: application/http; msgtype=response",
-        b"Content-Length: " + str(len(body)).encode(),
-    ]
-    return b"\r\n".join(headers) + b"\r\n\r\n" + body + b"\r\n\r\n"
+    return _warc_record(
+        "response", url, warc_ts, body,
+        b"application/http; msgtype=response", lang,
+    )
 
 
-def write_pages_warc(rows, path: str, records_per_file: int = 0) -> None:
-    """Fixture/driver-side writer: rows of (url, warc_ts, html, lang) ->
-    one or more .warc.gz files, each record its own gzip member (the spec's
-    record-at-time compression, what makes cdx offset indexing possible).
-    ``records_per_file`` splits the archive (0 = single file)."""
+def _warc_row(url, warc_ts, html, lang) -> bytes:
+    return encode_warc_record(url, warc_ts, bytes(html), lang)
+
+
+def _write_archives(
+    rows, path: str, suffix: str, encode, records_per_file: int = 0
+) -> list[tuple[str, int, int]]:
+    """Driver-side archive writer behind every ``write_pages_*`` fixture:
+    rows -> ``part-NNNNN<suffix>`` archives, each record its own gzip member
+    (the spec's record-at-time compression, what makes cdx offset indexing
+    possible). ``encode`` turns one row into one uncompressed record;
+    ``records_per_file`` splits the archive (0 = single file). Returns
+    ``(file, offset, length)`` per record, in row order."""
     import gzip
     import os
 
     os.makedirs(path, exist_ok=True)
-    chunks: list[list] = []
     rows = list(rows)
     step = records_per_file or len(rows) or 1
-    for i in range(0, len(rows), step):
-        chunks.append(rows[i : i + step])
-    for fi, chunk in enumerate(chunks):
+    entries = []
+    for fi in range(0, (len(rows) + step - 1) // step):
+        name = f"part-{fi:05d}{suffix}"
         out = bytearray()
-        for url, warc_ts, html, lang in chunk:
-            rec = encode_warc_record(url, warc_ts, bytes(html), lang)
-            out += gzip.compress(rec)
-        with open(os.path.join(path, f"part-{fi:05d}.warc.gz"), "wb") as f:
+        for row in rows[fi * step : (fi + 1) * step]:
+            member = gzip.compress(encode(*row))
+            entries.append((name, len(out), len(member)))
+            out += member
+        with open(os.path.join(path, name), "wb") as f:
             f.write(bytes(out))
+    return entries
+
+
+def _write_distributed(
+    df: DataFrame, path: str, cols: tuple[str, ...], suffix: str, encode
+) -> DataFrame:
+    """Distributed archive export behind the ``*_distributed`` writers:
+    each partition writes ONE ``part-<partition id><suffix>`` archive
+    (records as individual gzip members, partition id in the file name for
+    determinism) — no driver-side collect, the 100 TB shape. ``encode``
+    turns one row of ``cols`` (url and warc_ts first) into one record.
+    Returns a (file, n_records) manifest frame; evaluating it performs the
+    write."""
+    import os
+
+    os.makedirs(path, exist_ok=True)
+
+    def write_part(batches):
+        import gzip
+        import os as _os
+        import uuid as _uuid
+        from datetime import datetime
+
+        import pandas as pd
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        name = f"part-{pid:05d}{suffix}"
+        # tmp name unique per ATTEMPT: a speculative/zombie attempt must
+        # never interleave writes into a sibling attempt's file — each
+        # writes its own tmp, the atomic rename makes the last one win
+        # (attempts produce identical content)
+        tmp = _os.path.join(path, f"_tmp-{_uuid.uuid4().hex[:8]}-{name}")
+        n = 0
+        f = None
+        try:
+            for pdf in batches:
+                for u, ts, *rest in zip(*(pdf[c] for c in cols)):
+                    if f is None:
+                        f = open(tmp, "wb")
+                    # null warc_ts (NaT through pandas): WARC-Date is
+                    # mandatory — record the Unix epoch rather than
+                    # failing the task or dropping the row
+                    if ts is None or pd.isna(ts):
+                        ts = datetime(1970, 1, 1)
+                    # member-at-a-time append: constant memory per task,
+                    # never the whole archive in a bytearray
+                    f.write(gzip.compress(encode(u, ts, *rest)))
+                    n += 1
+        finally:
+            if f is not None:
+                f.close()
+        if n:
+            _os.rename(tmp, _os.path.join(path, name))
+            yield pd.DataFrame({"file": [name], "n_records": [n]})
+        else:
+            yield pd.DataFrame({"file": pd.Series([], dtype="object"),
+                                "n_records": pd.Series([], dtype="int64")})
+
+    return df.select(*cols).mapInPandas(
+        write_part, schema="file string, n_records long"
+    )
+
+
+def write_pages_warc(rows, path: str, records_per_file: int = 0) -> None:
+    """Fixture/driver-side writer: rows of (url, warc_ts, html, lang) ->
+    one or more .warc.gz files, each record its own gzip member.
+    ``records_per_file`` splits the archive (0 = single file)."""
+    _write_archives(rows, path, ".warc.gz", _warc_row, records_per_file)
 
 
 def _walk_warc_members(blob: bytes, src: str):
@@ -237,59 +336,84 @@ def _rec_ts(fields):
     return datetime.strptime(fields[b"warc-date"].decode(), "%Y-%m-%dT%H:%M:%SZ")
 
 
-def _parse_warc_stream(blob: bytes, src: str):
-    """Yield (url, warc_ts, html, lang, status) tuples from a multi-member
-    .warc.gz byte string. Non-response records are skipped; malformed
-    members/records yield error rows tagged with the source file."""
-    for kind, a, b in _walk_warc_members(blob, src):
-        if kind == "err":
-            yield (_rec_url(b, src), None, None, None, a)
+def _parse_stream(blob: bytes, src: str, kind: str):
+    """Yield one row tuple (``_KIND_COLUMNS[kind]``) per ``kind`` record of
+    a multi-member archive byte string: ``response`` -> WARC pages (the
+    page is the body of the record's HTTP envelope), ``conversion`` -> WET
+    text, ``metadata`` -> WAT JSON payload. Records of other types
+    (warcinfo/request/...) are skipped; malformed members/records yield
+    error rows tagged with the source file."""
+    cols = _KIND_COLUMNS[kind]
+    nulls = (None,) * (len(cols) - 2)
+    for tag, a, b in _walk_warc_members(blob, src):
+        if tag == "err":
+            yield (_rec_url(b, src), *nulls, a)
             continue
         fields, content = a, b
-        if fields.get(b"warc-type") != b"response":
-            continue  # warcinfo/request/metadata records: not pages
+        if fields.get(b"warc-type") != kind.encode():
+            continue
         url = _rec_url(fields, src)
         try:
             ts = _rec_ts(fields)
         except (KeyError, ValueError):
-            yield (url, None, None, None, "error:malformed warc fields")
+            yield (url, *nulls, "error:malformed warc fields")
             continue
-        hsep = content.find(b"\r\n\r\n")
-        if not content.startswith(b"HTTP/") or hsep < 0:
-            yield (url, None, None, None, "error:malformed http envelope")
+        if kind == "response":
+            hsep = content.find(b"\r\n\r\n")
+            if not content.startswith(b"HTTP/") or hsep < 0:
+                yield (url, *nulls, "error:malformed http envelope")
+                continue
+            payload = content[hsep + 4 :]
+        else:
+            payload = content.decode("utf-8", "replace")
+        if "lang" not in cols:
+            yield (url, ts, payload, "ok")
             continue
         lang = fields.get(b"warc-identified-content-language")
         yield (
             url,
             ts,
-            content[hsep + 4 :],
+            payload,
             lang.decode("utf-8", "replace") if lang is not None else None,
             "ok",
         )
 
 
-def warc_parse_batches(batches):
-    """mapInPandas stage body shared by the batch and STREAMING WARC
-    readers (review r4 — previously copy-pasted): (path, content) file
-    batches -> WARC_PAGES_SCHEMA row batches."""
+def _parse_batches(batches, kind: str):
+    """mapInPandas stage body of every archive reader: (path, content) file
+    batches -> row batches of ``kind`` records."""
     import pandas as pd
 
+    cols = _KIND_COLUMNS[kind]
     for pdf in batches:
-        rows = {k: [] for k in ("url", "warc_ts", "html", "lang", "status")}
+        rows = {k: [] for k in cols}
         for src, blob in zip(pdf["path"], pdf["content"]):
-            for tup in _parse_warc_stream(bytes(blob), str(src)):
-                for k, v in zip(rows, tup):
+            for tup in _parse_stream(bytes(blob), str(src), kind):
+                for k, v in zip(cols, tup):
                     rows[k].append(v)
         yield pd.DataFrame(rows)
+
+
+def _read_archives(spark: SparkSession, pattern: str, parse, schema: str):
+    """binaryFile scan of the archives matching ``pattern`` -> ``parse``
+    over them: one Arrow-batched parse task per archive file, corrupt
+    members -> error rows with resync."""
+    files = spark.read.format("binaryFile").load(pattern)
+    return files.select("path", "content").mapInPandas(parse, schema=schema)
+
+
+def warc_parse_batches(batches):
+    """Parse stage of the WARC reader: (path, content) file batches ->
+    WARC_PAGES_SCHEMA row batches."""
+    yield from _parse_batches(batches, "response")
 
 
 def read_pages_warc(spark: SparkSession, path: str) -> DataFrame:
     """.warc.gz archive dir -> canonical pages frame (url, warc_ts,
     html binary, lang, status). One parse task per archive file
     (binaryFile scan), Arrow-batched; corrupt members -> error rows."""
-    files = spark.read.format("binaryFile").load(f"{path}/*.warc.gz")
-    return files.select("path", "content").mapInPandas(
-        warc_parse_batches, schema=WARC_PAGES_SCHEMA
+    return _read_archives(
+        spark, f"{path}/*.warc.gz", warc_parse_batches, WARC_PAGES_SCHEMA
     )
 
 
@@ -311,161 +435,45 @@ def encode_wet_record(
     url: str, warc_ts, text: str, lang: str | None = None
 ) -> bytes:
     """One WARC/1.0 conversion record: WARC headers + utf-8 plain text."""
-    body = text.encode("utf-8")
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: conversion",
-        b"WARC-Record-ID: " + _record_id(url, warc_ts, "conversion"),
-        b"WARC-Target-URI: " + url.encode(),
-        b"WARC-Date: " + warc_ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
-    ]
-    if lang is not None:
-        headers.append(b"WARC-Identified-Content-Language: " + lang.encode())
-    headers += [
-        b"Content-Type: text/plain",
-        b"Content-Length: " + str(len(body)).encode(),
-    ]
-    return b"\r\n".join(headers) + b"\r\n\r\n" + body + b"\r\n\r\n"
+    return _warc_record(
+        "conversion", url, warc_ts, text.encode("utf-8"), b"text/plain", lang
+    )
+
+
+def _wet_row(url, warc_ts, text, lang) -> bytes:
+    # None text -> empty body, the same record from either writer
+    return encode_wet_record(
+        str(url), warc_ts, "" if text is None else str(text),
+        None if lang is None else str(lang),
+    )
 
 
 def write_pages_wet(rows, path: str, records_per_file: int = 0) -> None:
     """(url, warc_ts, text, lang) rows -> .warc.wet.gz archives, one gzip
-    member per conversion record (record-at-time compression, same layout
-    discipline as write_pages_warc)."""
-    import gzip
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    rows = list(rows)
-    step = records_per_file or len(rows) or 1
-    for fi in range(0, (len(rows) + step - 1) // step):
-        chunk = rows[fi * step : (fi + 1) * step]
-        out = bytearray()
-        for url, warc_ts, text, lang in chunk:
-            # None text -> empty body (matches the distributed writer)
-            out += gzip.compress(
-                encode_wet_record(url, warc_ts, "" if text is None else str(text), lang)
-            )
-        with open(os.path.join(path, f"part-{fi:05d}.warc.wet.gz"), "wb") as f:
-            f.write(bytes(out))
+    member per conversion record (the write_pages_warc layout)."""
+    _write_archives(rows, path, ".warc.wet.gz", _wet_row, records_per_file)
 
 
 def write_pages_wet_distributed(df: DataFrame, path: str) -> DataFrame:
     """Distributed WET export: each partition writes ONE .warc.wet.gz
-    archive (records as individual gzip members, partition id in the file
-    name for determinism) — no driver-side collect, the 100 TB shape.
-    ``df``: (url, warc_ts, text, lang). Returns a (file, n_records)
-    manifest frame; evaluating it performs the write."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-
-    def write_part(batches):
-        import gzip
-        import os as _os
-        import uuid as _uuid
-        from datetime import datetime
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}.warc.wet.gz"
-        # tmp name unique per ATTEMPT: a speculative/zombie attempt must
-        # never interleave writes into a sibling attempt's file — each
-        # writes its own tmp, the atomic rename makes the last one win
-        # (attempts produce identical content)
-        tmp = _os.path.join(path, f"_tmp-{_uuid.uuid4().hex[:8]}-{name}")
-        n = 0
-        f = None
-        try:
-            for pdf in batches:
-                for u, ts, t, lg in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["text"], pdf["lang"]
-                ):
-                    if f is None:
-                        f = open(tmp, "wb")
-                    # null warc_ts (NaT through pandas): WARC-Date is
-                    # mandatory — record the Unix epoch rather than
-                    # failing the task or dropping the row
-                    if ts is None or pd.isna(ts):
-                        ts = datetime(1970, 1, 1)
-                    # member-at-a-time append: constant memory per task,
-                    # never the whole archive in a bytearray
-                    f.write(
-                        gzip.compress(
-                            encode_wet_record(
-                                str(u), ts, "" if t is None else str(t),
-                                None if lg is None else str(lg),
-                            )
-                        )
-                    )
-                    n += 1
-        finally:
-            if f is not None:
-                f.close()
-        if n:
-            _os.rename(tmp, _os.path.join(path, name))
-            yield pd.DataFrame({"file": [name], "n_records": [n]})
-        else:
-            yield pd.DataFrame({"file": pd.Series([], dtype="object"),
-                                "n_records": pd.Series([], dtype="int64")})
-
-    return df.select("url", "warc_ts", "text", "lang").mapInPandas(
-        write_part, schema="file string, n_records long"
+    archive, no driver-side collect. ``df``: (url, warc_ts, text, lang).
+    Returns a (file, n_records) manifest frame; evaluating it performs the
+    write."""
+    return _write_distributed(
+        df, path, ("url", "warc_ts", "text", "lang"), ".warc.wet.gz", _wet_row
     )
 
 
-def _parse_wet_stream(blob: bytes, src: str):
-    """Yield (url, warc_ts, text, lang, status) from a .warc.wet.gz byte
-    string — conversion records only (warcinfo headers are skipped); the
-    shared member walk supplies resync + typed error rows."""
-    for kind, a, b in _walk_warc_members(blob, src):
-        if kind == "err":
-            yield (_rec_url(b, src), None, None, None, a)
-            continue
-        fields, content = a, b
-        if fields.get(b"warc-type") != b"conversion":
-            continue
-        url = _rec_url(fields, src)
-        try:
-            ts = _rec_ts(fields)
-        except (KeyError, ValueError):
-            yield (url, None, None, None, "error:malformed warc fields")
-            continue
-        lang = fields.get(b"warc-identified-content-language")
-        yield (
-            url,
-            ts,
-            content.decode("utf-8", "replace"),
-            lang.decode("utf-8", "replace") if lang is not None else None,
-            "ok",
-        )
-
-
-def wet_parse_batches(batches):
-    """mapInPandas stage body shared by the batch and STREAMING WET readers
-    (same discipline as warc_parse_batches — one parse loop, two scan
-    shapes): (path, content) file batches -> WET_PAGES_SCHEMA row
-    batches."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {k: [] for k in ("url", "warc_ts", "text", "lang", "status")}
-        for src, blob in zip(pdf["path"], pdf["content"]):
-            for tup in _parse_wet_stream(bytes(blob), str(src)):
-                for k, v in zip(rows, tup):
-                    rows[k].append(v)
-        yield pd.DataFrame(rows)
+def _wet_parse_batches(batches):
+    yield from _parse_batches(batches, "conversion")
 
 
 def read_pages_wet(spark: SparkSession, path: str) -> DataFrame:
     """.warc.wet.gz archive dir -> (url, warc_ts, text, lang, status).
     Same scan shape as read_pages_warc: one Arrow-batched parse task per
     archive file; corrupt members -> error rows with resync."""
-    files = spark.read.format("binaryFile").load(f"{path}/*.wet.gz")
-    return files.select("path", "content").mapInPandas(
-        wet_parse_batches, schema=WET_PAGES_SCHEMA
+    return _read_archives(
+        spark, f"{path}/*.wet.gz", _wet_parse_batches, WET_PAGES_SCHEMA
     )
 
 
@@ -518,133 +526,46 @@ def encode_wat_record(url: str, warc_ts, payload: bytes) -> bytes:
     WARC-Refers-To recomputes the response record's deterministic id, so
     a WAT archive written next to a WARC archive of the same pages
     cross-references it exactly."""
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: metadata",
-        b"WARC-Record-ID: " + _record_id(url, warc_ts, "metadata"),
-        b"WARC-Refers-To: " + _record_id(url, warc_ts, "response"),
-        b"WARC-Target-URI: " + url.encode(),
-        b"WARC-Date: " + warc_ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode(),
-        b"Content-Type: application/json",
-        b"Content-Length: " + str(len(payload)).encode(),
-    ]
-    return b"\r\n".join(headers) + b"\r\n\r\n" + payload + b"\r\n\r\n"
+    return _warc_record(
+        "metadata", url, warc_ts, payload, b"application/json",
+        refers_to="response",
+    )
+
+
+def _wat_row(url, warc_ts, html) -> bytes:
+    url = str(url)
+    payload = build_wat_payload(url, warc_ts, b"" if html is None else html)
+    return encode_wat_record(url, warc_ts, payload)
 
 
 def write_pages_wat(rows, path: str, records_per_file: int = 0) -> None:
     """(url, warc_ts, html) rows -> .warc.wat.gz archives, one gzip member
-    per metadata record (record-at-time compression, cdx-indexable — the
-    write_pages_warc layout discipline)."""
-    import gzip
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    rows = list(rows)
-    step = records_per_file or len(rows) or 1
-    for fi in range(0, (len(rows) + step - 1) // step):
-        chunk = rows[fi * step : (fi + 1) * step]
-        out = bytearray()
-        for url, warc_ts, html in chunk:
-            payload = build_wat_payload(url, warc_ts, html)
-            out += gzip.compress(encode_wat_record(url, warc_ts, payload))
-        with open(os.path.join(path, f"part-{fi:05d}.warc.wat.gz"), "wb") as f:
-            f.write(bytes(out))
+    per metadata record (the write_pages_warc layout)."""
+    _write_archives(rows, path, ".warc.wat.gz", _wat_row, records_per_file)
 
 
 def write_pages_wat_distributed(df: DataFrame, path: str) -> DataFrame:
     """Distributed WAT export: each partition writes ONE .warc.wat.gz
-    archive — the write_pages_wet_distributed shape (member-at-a-time
-    append, attempt-unique tmp + atomic rename, no driver collect).
-    ``df``: (url, warc_ts, html). Returns a (file, n_records) manifest
-    frame; evaluating it performs the write."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-
-    def write_part(batches):
-        import gzip
-        import os as _os
-        import uuid as _uuid
-        from datetime import datetime
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}.warc.wat.gz"
-        tmp = _os.path.join(path, f"_tmp-{_uuid.uuid4().hex[:8]}-{name}")
-        n = 0
-        f = None
-        try:
-            for pdf in batches:
-                for u, ts, h in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                    if f is None:
-                        f = open(tmp, "wb")
-                    if ts is None or pd.isna(ts):
-                        ts = datetime(1970, 1, 1)  # WARC-Date is mandatory
-                    payload = build_wat_payload(
-                        str(u), ts, b"" if h is None else bytes(h)
-                    )
-                    f.write(
-                        gzip.compress(encode_wat_record(str(u), ts, payload))
-                    )
-                    n += 1
-        finally:
-            if f is not None:
-                f.close()
-        if n:
-            _os.rename(tmp, _os.path.join(path, name))
-            yield pd.DataFrame({"file": [name], "n_records": [n]})
-        else:
-            yield pd.DataFrame({"file": pd.Series([], dtype="object"),
-                                "n_records": pd.Series([], dtype="int64")})
-
-    return df.select("url", "warc_ts", "html").mapInPandas(
-        write_part, schema="file string, n_records long"
+    archive — the write_pages_wet_distributed shape. ``df``: (url,
+    warc_ts, html). Returns a (file, n_records) manifest frame; evaluating
+    it performs the write."""
+    return _write_distributed(
+        df, path, ("url", "warc_ts", "html"), ".warc.wat.gz", _wat_row
     )
 
 
-def _parse_wat_stream(blob: bytes, src: str):
-    """Yield (url, warc_ts, payload, status) from a .warc.wat.gz byte
-    string — metadata records only; the shared member walk supplies
-    resync + typed error rows."""
-    for kind, a, b in _walk_warc_members(blob, src):
-        if kind == "err":
-            yield (_rec_url(b, src), None, None, a)
-            continue
-        fields, content = a, b
-        if fields.get(b"warc-type") != b"metadata":
-            continue
-        url = _rec_url(fields, src)
-        try:
-            ts = _rec_ts(fields)
-        except (KeyError, ValueError):
-            yield (url, None, None, "error:malformed warc fields")
-            continue
-        yield (url, ts, content.decode("utf-8", "replace"), "ok")
-
-
 def wat_parse_batches(batches):
-    """mapInPandas stage body for the WAT reader: (path, content) file
-    batches -> WAT_PAGES_SCHEMA row batches (the warc/wet discipline)."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {k: [] for k in ("url", "warc_ts", "payload", "status")}
-        for src, blob in zip(pdf["path"], pdf["content"]):
-            for tup in _parse_wat_stream(bytes(blob), str(src)):
-                for k, v in zip(rows, tup):
-                    rows[k].append(v)
-        yield pd.DataFrame(rows)
+    """Parse stage of the WAT reader and the incremental host-edge stream:
+    (path, content) file batches -> WAT_PAGES_SCHEMA row batches."""
+    yield from _parse_batches(batches, "metadata")
 
 
 def read_pages_wat(spark: SparkSession, path: str) -> DataFrame:
     """.warc.wat.gz archive dir -> (url, warc_ts, payload json-string,
     status). One Arrow-batched parse task per archive file; corrupt
     members -> error rows with resync."""
-    files = spark.read.format("binaryFile").load(f"{path}/*.wat.gz")
-    return files.select("path", "content").mapInPandas(
-        wat_parse_batches, schema=WAT_PAGES_SCHEMA
+    return _read_archives(
+        spark, f"{path}/*.wat.gz", wat_parse_batches, WAT_PAGES_SCHEMA
     )
 
 
@@ -656,41 +577,22 @@ def write_pages_warc_indexed(
     readers can range-read individual gzip members). One `index.cdxj` JSONL per archive dir
     (not underscore-prefixed: Hadoop path filters treat `_*` as hidden
     metadata and would skip it)."""
-    import gzip
     import json
     import os
 
-    os.makedirs(path, exist_ok=True)
     rows = list(rows)
-    step = records_per_file or len(rows) or 1
-    index = []
-    for fi in range(0, (len(rows) + step - 1) // step):
-        chunk = rows[fi * step : (fi + 1) * step]
-        name = f"part-{fi:05d}.warc.gz"
-        out = bytearray()
-        for url, warc_ts, html, lang in chunk:
-            member = gzip.compress(encode_warc_record(url, warc_ts, bytes(html), lang))
-            index.append(
-                {
-                    "file": name,
-                    "offset": len(out),
-                    "length": len(member),
-                    "url": url,
-                }
-            )
-            out += member
-        with open(os.path.join(path, name), "wb") as f:
-            f.write(bytes(out))
+    entries = _write_archives(rows, path, ".warc.gz", _warc_row, records_per_file)
     with open(os.path.join(path, "index.cdxj"), "w") as f:
-        for rec in index:
+        for (name, offset, length), row in zip(entries, rows):
+            rec = {"file": name, "offset": offset, "length": length, "url": row[0]}
             f.write(json.dumps(rec) + "\n")
 
 
 def read_pages_warc_indexed(
     spark: SparkSession, path: str, num_partitions: int | None = None
 ) -> DataFrame:
-    """Offset-indexed WARC read — the scale path the streaming reader's
-    docstring promises: parallelism is per-RECORD (index rows repartition
+    """Offset-indexed WARC read — the scale path the WARC section notes
+    above promise: parallelism is per-RECORD (index rows repartition
     across executors; each task range-reads + inflates only its members),
     not per-archive, and a corrupt member costs exactly ONE record with no
     false-magic risk (the plain scan's resync can only bound the loss to
@@ -701,9 +603,7 @@ def read_pages_warc_indexed(
     index for its archives)."""
     import os
 
-    import os as _os
-
-    if not _os.path.exists(f"{path}/index.cdxj"):
+    if not os.path.exists(f"{path}/index.cdxj"):
         raise FileNotFoundError(
             f"{path}/index.cdxj not found — indexed WARC reads need the "
             "sidecar written by write_pages_warc_indexed (plain archives: "
@@ -721,7 +621,7 @@ def read_pages_warc_indexed(
         import pandas as pd
 
         for pdf in batches:
-            rows = {k: [] for k in ("url", "warc_ts", "html", "lang", "status")}
+            rows = {k: [] for k in _KIND_COLUMNS["response"]}
             handles: dict = {}
 
             def emit(src, status):
@@ -758,7 +658,7 @@ def read_pages_warc_indexed(
                     except OSError:
                         emit(f"{name}@{off_i}", "error:missing archive")
                         continue
-                    for tup in _parse_warc_stream(blob, f"{name}@{off_i}"):
+                    for tup in _parse_stream(blob, f"{name}@{off_i}", "response"):
                         for k, v in zip(rows, tup):
                             rows[k].append(v)
             finally:

@@ -686,19 +686,3 @@ def compact(
     if done:
         spark.catalog.refreshByPath(target_path)
     return done
-
-
-def snapshot_diff(
-    spark: SparkSession, table_ident: str, v_from: int, v_to: int
-) -> DataFrame:
-    """CDC-style changelog between two snapshots of a row-level-catalog
-    table (r4, built on VERSION AS OF): rows present only in ``v_to`` come
-    back tagged ``_change='insert'``, rows present only in ``v_from``
-    tagged ``_change='delete'``; an UPDATE appears as its delete+insert
-    pair — standard changelog semantics (Iceberg's changelog scan /
-    incremental read analog). EXCEPT ALL keeps duplicate multiplicity."""
-    a = spark.sql(f"SELECT * FROM {table_ident} VERSION AS OF {v_from}")
-    b = spark.sql(f"SELECT * FROM {table_ident} VERSION AS OF {v_to}")
-    added = b.exceptAll(a).withColumn("_change", F.lit("insert"))
-    removed = a.exceptAll(b).withColumn("_change", F.lit("delete"))
-    return added.unionByName(removed)

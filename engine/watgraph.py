@@ -22,6 +22,10 @@ actually runs, fed by :func:`engine.sources.read_pages_wat`:
   checkpoint cannot recompute), so the CALLER releases via
   :func:`engine.session.release_local_checkpoint` when done, the same
   contract as ``local_checkpoint_tracked`` itself.
+- :func:`fold_edge_deltas` — re-aggregates the per-micro-batch edge deltas
+  of ``engine.streaming.incremental_host_edges`` into the current graph
+  (edge weights are additive, so the fold equals :func:`host_edges` over
+  every archive ingested).
 
 Row-equality with the oracled ``domain_rank`` (same edges, k=3, d=0.85)
 and the zero-residual-persist release are pinned in tests/test_watgraph.
@@ -75,25 +79,6 @@ def fold_edge_deltas(deltas: DataFrame) -> DataFrame:
     — the property the streaming twin (engine.streaming.
     incremental_host_edges) is pinned against."""
     return deltas.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-
-
-def degrees(edges: DataFrame) -> DataFrame:
-    """(host, n_in, n_out) — distinct-neighbor degrees from the host-level
-    edge table; two partial-aggs over |edges| rows, joined on host."""
-    n_out = edges.groupBy(F.col("src").alias("host")).agg(
-        F.count("*").cast("bigint").alias("n_out")
-    )
-    n_in = edges.groupBy(F.col("dst").alias("host")).agg(
-        F.count("*").cast("bigint").alias("n_in")
-    )
-    return (
-        n_out.join(n_in, "host", "full_outer")
-        .selectExpr(
-            "host",
-            "coalesce(n_in, CAST(0 AS BIGINT)) AS n_in",
-            "coalesce(n_out, CAST(0 AS BIGINT)) AS n_out",
-        )
-    )
 
 
 def domain_rank(

@@ -70,7 +70,7 @@ def main() -> None:
         encode_png,
         encode_wav,
     )
-    from engine.sources import _parse_warc_stream, encode_warc_record
+    from engine.sources import _parse_stream, encode_warc_record
 
     pal = bytes(v for i in range(8) for v in (40 + i * 10,) * 3)
 
@@ -126,7 +126,7 @@ def main() -> None:
 
         blob = gzip.compress(rec)
         try:
-            list(_parse_warc_stream(_mutate(rng, blob), "fuzz"))
+            list(_parse_stream(_mutate(rng, blob), "fuzz", "response"))
             counts["ok"] += 1
         except Exception as exc:  # noqa: BLE001
             leaks.append(("warc", type(exc).__name__, str(exc)[:80]))

@@ -1,6 +1,7 @@
-"""Multimodal binary plumbing: schemas, batch shapes, explode semantics, and
-determinism. PNM (binary PGM/PPM) decodes for REAL via the pure-Python
-parser; compressed formats stay PIL-gated (no media libs in sandbox)."""
+"""Multimodal binary plumbing: schemas, batch shapes and determinism. PNM
+(binary PGM/PPM) decodes for REAL via the pure-Python parser, and the raster
+dispatcher routes it there by magic; undecodable payloads become error
+rows."""
 
 from __future__ import annotations
 
@@ -11,14 +12,12 @@ from pyspark.sql import functions as F
 
 from engine.multimodal import (
     ImageDecodeError,
-    decode_image,
     decode_images,
     decode_pnm,
     extract_binary_meta,
     resize_decoded,
     resize_images,
-    sample_frames,
-    _HAS_PIL,
+    _decode_raster,
 )
 
 
@@ -44,39 +43,18 @@ def test_resize_produces_bounded_binary(spark, payloads):
         assert (r["width"], r["height"]) == (32, 32)
 
 
-def test_frame_sample_explodes_rows(spark, payloads):
-    big = payloads.withColumn(
-        "payload", F.expr("cast(repeat(cast(payload as string), 200) as binary)")
-    )
-    frames = sample_frames(big, every_n=5).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert any(len(v) > 1 for v in by_doc.values())  # 1 row -> N frame rows
-    for idxs in by_doc.values():
-        assert idxs == sorted(idxs)
-        assert all(i % 5 == 0 for i in idxs)
-
-
 def test_deterministic_across_runs(spark, payloads):
     a = sorted(map(tuple, resize_images(payloads).collect()))
     b = sorted(map(tuple, resize_images(payloads).collect()))
     assert a == b
 
 
-def test_decode_stub_raises_without_pil():
-    if _HAS_PIL:
-        pytest.skip("PIL present in this environment")
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG\r\n")
-
-
 def test_decode_pnm_real_path():
     pix = bytes(range(24))  # 4x2 RGB
     assert decode_pnm(b"P6\n# c\n4 2\n255\n" + pix) == (4, 2, 3, pix)
     assert decode_pnm(b"P5 2 2 255\n" + bytes(4))[:3] == (2, 2, 1)
-    # decode_image routes PNM to the native parser even without PIL
-    assert decode_image(b"P6\n4 2\n255\n" + pix) == (4, 2, 3, pix)
+    # the raster dispatcher routes PNM to the native parser by magic
+    assert _decode_raster(b"P6\n4 2\n255\n" + pix) == (4, 2, 3, pix)
     for bad in (
         b"GIF89a",                      # unsupported magic
         b"P6\n4 2\n255\n" + pix[:7],    # truncated raster

@@ -1,6 +1,6 @@
-"""Source-agnosticism (S1): the JSONL and CSV readers produce the same
-frames as the parquet path — extraction output is byte-identical across
-sources, and event aggregates match exactly."""
+"""Source-agnosticism (S1): the JSONL and WARC/WET/WAT readers produce the
+same frames as the parquet path — extraction output is byte-identical
+across sources — and corrupt archives become error rows, never raises."""
 
 from __future__ import annotations
 
@@ -38,33 +38,6 @@ def test_jsonl_binary_roundtrip_exact(spark, pages_unit_path, tmp_path):
         for r in df.select("url", F.sha2("html", 256).alias("h")).collect()
     }
     assert sha(pages_pq) == sha(pages_jl)
-
-
-def test_csv_events_aggregate_matches_parquet(spark, tmp_path):
-    ev_pq = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    csv = str(tmp_path / "events_csv")
-    (ev_pq.select(
-        "event_id", "user_id", "event_type",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"), "value",
-    ).write.option("header", "true").mode("overwrite").csv(csv))
-    ev_csv = sources.read_events_csv(spark, csv)
-
-    def agg(df):
-        return {
-            (r["event_type"], r["n"], r["sv"])
-            for r in df.groupBy("event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.round(F.col("value") * 10000).cast("long")).alias("sv"),
-            )
-            .collect()
-        }
-
-    assert agg(ev_pq) == agg(ev_csv)
-    # timestamps parsed identically (UTC-pinned session)
-    a = ev_pq.select(F.max(F.unix_timestamp("ts")).alias("m")).first()["m"]
-    b = ev_csv.select(F.max(F.unix_timestamp("ts")).alias("m")).first()["m"]
-    assert a == b
 
 
 def test_orc_sink_roundtrip(spark, tmp_path):
@@ -293,7 +266,7 @@ def test_warc_indexed_corrupt_index_entries_are_error_rows(spark, pages_unit_pat
 
 
 def test_warc_resync_mutation_fuzz():
-    """Bounded fuzz of the r5 resync path (no Spark — _parse_warc_stream
+    """Bounded fuzz of the r5 resync path (no Spark — _parse_stream
     directly): random byte mutations / truncations / injections into a
     10-member archive must never raise, never duplicate a record, and
     every record reported 'ok' with an original url must be byte-identical
@@ -332,7 +305,7 @@ def test_warc_resync_mutation_fuzz():
                 for _ in range(rng.randrange(1, 64))
             )
             mut = mut[:at] + noise + mut[at:]
-        out = list(sources._parse_warc_stream(bytes(mut), "fuzz"))  # no raise
+        out = list(sources._parse_stream(bytes(mut), "fuzz", "response"))  # no raise
         ok = [(u, h) for u, ts, h, lg, st in out if st == "ok"]
         urls = [u for u, _ in ok]
         assert len(urls) == len(set(urls)), f"trial {trial}: duplicated record"
@@ -613,15 +586,15 @@ def test_wet_wat_resync_mutation_fuzz():
         for u, p in wat_src.items()
     )
     cases = [
-        (wet_blob, sources._parse_wet_stream, {u: t for u, t in wet_src.items()}),
+        (wet_blob, "conversion", {u: t for u, t in wet_src.items()}),
         (
             wat_blob,
-            sources._parse_wat_stream,
+            "metadata",
             {u: p.decode() for u, p in wat_src.items()},
         ),
     ]
     rng = random.Random(7)
-    for blob, parse, want in cases:
+    for blob, kind, want in cases:
         for trial in range(300):
             mut = bytearray(blob)
             op = trial % 3
@@ -638,7 +611,7 @@ def test_wet_wat_resync_mutation_fuzz():
                     for _ in range(rng.randrange(1, 64))
                 )
                 mut = mut[:at] + noise + mut[at:]
-            out = list(parse(bytes(mut), "fuzz"))  # must never raise
+            out = list(sources._parse_stream(bytes(mut), "fuzz", kind))  # no raise
             ok = [(t[0], t[2]) for t in out if t[-1] == "ok"]
             urls = [u for u, _ in ok]
             assert len(urls) == len(set(urls)), f"trial {trial}: duplicate"

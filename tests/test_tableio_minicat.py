@@ -211,24 +211,6 @@ def test_expire_snapshots_procedure(spark, mini_table):
     assert [tuple(x) for x in r2] == [(0, 3)]
 
 
-def test_snapshot_diff_changelog(spark, mini_table):
-    """r4 CDC: the changelog between two snapshots — an upsert shows the
-    updated row as delete+insert and the new row as insert."""
-    _df(spark, BASE).writeTo(mini_table).append()                     # v1
-    tableio.merge_by_url_iceberg(spark, mini_table, _df(spark, UPD))  # v2
-    diff = sorted(
-        tuple(r) for r in tableio.snapshot_diff(spark, mini_table, 1, 2).collect()
-    )
-    assert diff == sorted([
-        ("u2", "TWO", 2, "insert"),
-        ("u4", "FOUR", 2, "insert"),
-        ("u2", "two", 1, "delete"),
-    ])
-    # reverse direction swaps the tags
-    rev = {tuple(r) for r in tableio.snapshot_diff(spark, mini_table, 2, 1).collect()}
-    assert ("u2", "two", 1, "insert") in rev and ("u4", "FOUR", 2, "delete") in rev
-
-
 def test_alter_table_add_column_evolution(spark, mini_table):
     """r4 append-only schema evolution: ADD COLUMN appends a nullable
     column; pre-evolution rows read back null-padded (the shape of reading
