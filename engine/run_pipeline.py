@@ -16,6 +16,7 @@ single clean run (tested in tests/test_resume.py).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -26,9 +27,46 @@ import uuid
 # spark-submit runs this file directly; make the repo root importable.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from py4j.protocol import Py4JJavaError  # noqa: E402
+from pyspark.sql import DataFrame, Observation, functions as F  # noqa: E402
+
 from engine import metrics as M  # noqa: E402
 from engine import pipeline, tableio  # noqa: E402
 from engine.session import get_spark  # noqa: E402
+
+
+@contextlib.contextmanager
+def _phase(sc, name: str, phases_ms: dict):
+    """Label the Spark jobs of one pipeline phase with ``name`` (the job
+    description; the caller's job group is left as it is) and add the
+    phase's wall time to ``phases_ms``."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    t0 = time.monotonic()
+    try:
+        yield
+    finally:
+        phases_ms[name] = phases_ms.get(name, 0) + int((time.monotonic() - t0) * 1000)
+        sc.setJobDescription(prev)
+
+
+def _counted(df: DataFrame, name: str, counts: dict) -> DataFrame:
+    """``df`` with an observed row count, read back by :func:`_count` once
+    an action has run the plan — the count rides on that job."""
+    obs = Observation()
+    counts[name] = (obs, df)
+    return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+
+def _count(obs: Observation, df: DataFrame) -> int:
+    """The count :func:`_counted` observed. When AQE proves a subtree empty
+    at runtime it drops it from the final plan, and the observations inside
+    it with it (their query stage still ran, maybe on rows a later gate
+    removed): only then is ``df`` counted with a job of its own."""
+    try:
+        return obs.get["n"]
+    except Py4JJavaError:
+        return df.count()
 
 
 def main() -> None:
@@ -156,6 +194,9 @@ def main() -> None:
                     )
                 rules.append((kind, pattern))
         pages = urlgate.gate_urls(pages, urlgate.rules_df(spark, rules))
+    sc = spark.sparkContext
+    phases_ms: dict[str, int] = {}
+    counts: dict[str, tuple[Observation, DataFrame]] = {}
     if args.wat_out:
         from engine import sources
 
@@ -166,74 +207,109 @@ def main() -> None:
         # job before the main pipeline, and without the persist the raw
         # source parse (jsonl/warc/wet resync) would run twice end-to-end.
         pages = raw_pages_persisted = pages.persist()
-        sources.write_pages_wat_distributed(
-            pages.select("url", "warc_ts", "html"), args.wat_out
-        ).collect()  # tiny manifest (one row per file): forces the write
+        with _phase(sc, "wat_export", phases_ms):
+            sources.write_pages_wat_distributed(
+                pages.select("url", "warc_ts", "html"), args.wat_out
+            ).collect()  # tiny manifest (one row per file): forces the write
     else:
         raw_pages_persisted = None
+    pages = _counted(pages, "pages_in", counts)
     if args.resume:
-        pages = tableio.remaining(pages, args.out)
+        pages = _counted(tableio.remaining(pages, args.out), "to_extract", counts)
 
     t0 = time.monotonic()
-    if args.emit_blocks:
-        # MUST run before merge_by_url: with --resume, `pages` lazily embeds
-        # a scan of the pre-merge output dir (tableio.remaining anti-join);
-        # the merge replaces that dir, so a detect() evaluated afterwards
-        # would read deleted files or anti-join against the merged table
-        # (ADVICE r1). Writing blocks first materializes against the
-        # pre-merge snapshot.
-        blocks = pipeline.detect(pages, num_parts=args.parts)
-        tableio.write_table(blocks, f"{args.out}_blocks")
-    extracted = pipeline.run_extract(
-        pages, mode=args.mode, num_parts=args.parts, run_id=args.run_id,
-        fallback=args.fallback,
-    )
-    if args.quality_min is not None:
-        from engine.logreg import quality_p_expr
-        from engine.logreg_model import TRAINED_WEIGHTS
+    with _phase(sc, "extract_stage", phases_ms):
+        if args.emit_blocks:
+            # MUST run before merge_by_url: with --resume, `pages` lazily
+            # embeds a scan of the pre-merge output dir (tableio.remaining
+            # anti-join); the merge changes that dir, so a detect() evaluated
+            # afterwards would read deleted files or anti-join against the
+            # merged table (ADVICE r1). Writing blocks first materializes
+            # against the pre-merge snapshot.
+            blocks = pipeline.detect(pages, num_parts=args.parts)
+            tableio.write_table(blocks, f"{args.out}_blocks")
+        extracted = _counted(
+            pipeline.run_extract(
+                pages, mode=args.mode, num_parts=args.parts, run_id=args.run_id,
+                fallback=args.fallback,
+            ),
+            "extracted",
+            counts,
+        )
+        if args.quality_min is not None:
+            from engine.logreg import quality_p_expr
+            from engine.logreg_model import TRAINED_WEIGHTS
 
-        p = quality_p_expr(
-            TRAINED_WEIGHTS,
-            text="coalesce(extracted_text, '')",
-            n_chars="length(coalesce(extracted_text, ''))",
-        )
-        extracted = extracted.where(
-            "status NOT IN ('ok', 'fallback') "
-            f"OR ({p}) >= {float(args.quality_min)!r}"
-        )
-    # Stage the run output once: merge_by_url evaluates its updates twice
-    # (bucket census + merged write) — merging the live extraction lineage
-    # would run the whole extraction twice.
-    staging = f"{args.out}.staging-{uuid.uuid4().hex[:8]}"
-    tableio.write_table(extracted, staging)
+            p = quality_p_expr(
+                TRAINED_WEIGHTS,
+                text="coalesce(extracted_text, '')",
+                n_chars="length(coalesce(extracted_text, ''))",
+            )
+            extracted = _counted(
+                extracted.where(
+                    "status NOT IN ('ok', 'fallback') "
+                    f"OR ({p}) >= {float(args.quality_min)!r}"
+                ),
+                "quality_kept",
+                counts,
+            )
+        # Stage the run output once: merge_by_url reads its updates three
+        # times (census, overlap check, write) and the run's metrics come
+        # from the same rows — reading the live extraction lineage would
+        # run the whole extraction each time. The gate counters ride on
+        # this write.
+        staging = f"{args.out}.staging-{uuid.uuid4().hex[:8]}"
+        tableio.write_table(extracted, staging)
+    seen = {k: _count(*v) for k, v in counts.items()}
+    gates = {
+        "pages_in": seen["pages_in"],
+        "resume_skipped": seen["pages_in"] - seen.get("to_extract", seen["pages_in"]),
+        "extracted": seen["extracted"],
+        "quality_dropped": seen["extracted"] - seen.get("quality_kept", seen["extracted"]),
+    }
     if raw_pages_persisted is not None:
         # last consumer of the raw pages lineage has materialized
         raw_pages_persisted.unpersist()
     try:
-        tableio.merge_by_url(spark, args.out, tableio.read_table(spark, staging))
+        staged = tableio.read_table(spark, staging)
+        with _phase(sc, "merge", phases_ms):
+            merge = tableio.merge_by_url(spark, args.out, staged)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        # run-scoped accounting from the run's own staged rows: one small
+        # aggregation, no scan of the merged table
+        with _phase(sc, "metrics", phases_ms):
+            metrics_df = M.partition_metrics(staged, args.run_id, wall_ms)
+            per_part = metrics_df.collect()
+            tableio.append_run(
+                spark, f"{args.out}_metrics", args.run_id, per_part, metrics_df.schema
+            )
+            tableio.write_lineage(
+                spark, args.out, args.run_id,
+                [(r["part_id"], r["docs_in"]) for r in per_part], gates,
+            )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    wall_ms = int((time.monotonic() - t0) * 1000)
 
-    tableio.write_lineage(spark, args.out, args.run_id)
-    final = spark.read.parquet(args.out)
-    metrics_df = M.partition_metrics(final, args.run_id, wall_ms)
-    tableio.write_table(metrics_df, f"{args.out}_metrics")
-
-    n = final.count()
     if args.wet_out:
         from engine import sources
 
-        # the extracted table carries no lang column (language is an input
-        # attribute); WET's language header is optional — emit without it
-        wet_src = final.where("status IN ('ok', 'fallback')").selectExpr(
-            "url", "warc_ts", "coalesce(extracted_text, '') AS text",
-            "CAST(NULL AS STRING) AS lang",
-        )
-        # distributed: each partition writes its own archive, no collect
-        manifest = sources.write_pages_wet_distributed(wet_src, args.wet_out)
-        manifest.collect()  # tiny (one row per written file): forces the write
-    print(json.dumps({"rows": n, "wall_ms": wall_ms, "mode": args.mode}))
+        with _phase(sc, "wet_export", phases_ms):
+            # the extracted table carries no lang column (language is an
+            # input attribute); WET's language header is optional — emit
+            # without it
+            wet_src = spark.read.parquet(args.out).where(
+                "status IN ('ok', 'fallback')"
+            ).selectExpr(
+                "url", "warc_ts", "coalesce(extracted_text, '') AS text",
+                "CAST(NULL AS STRING) AS lang",
+            )
+            # distributed: each partition writes its own archive, no collect
+            manifest = sources.write_pages_wet_distributed(wet_src, args.wet_out)
+            manifest.collect()  # tiny (one row per written file): forces the write
+    print(json.dumps({
+        "rows": tableio.table_rows(spark, args.out), "wall_ms": wall_ms,
+        "mode": args.mode, "phases_ms": phases_ms, "merge": merge, "gates": gates,
+    }))
     spark.stop()
 
 

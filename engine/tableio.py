@@ -9,22 +9,31 @@ provided over plain parquet directories (SURVEY.md §7.3 H5):
   the updates are replaced (anti-join + union), others kept. The table is
   laid out in ``bucket=N`` subdirectories keyed by ``pmod(xxhash64(url),
   n_buckets)`` (the parquet emulation of Iceberg's bucket partition
-  transform): a merge reads and rewrites ONLY the dirty buckets — the ones
-  the updates hash into — so incremental-merge cost is O(updates), not
-  O(table) (VERDICT r1). Rows are grouped by bucket before every bucketed
-  write (the analog of Iceberg's ``write.distribution-mode=hash``), so each
-  merge leaves one data file per rewritten bucket and merges do not
-  accumulate small files. Per-bucket min/max stats are read once per
-  merge, from the staged dirty buckets. Each bucket swap is atomic
-  (write-tmp + rename); a crash between bucket swaps leaves a prefix
-  merged, and re-running the same merge converges (idempotence test).
+  transform): a merge touches ONLY the dirty buckets — the ones the
+  updates hash into — so incremental-merge cost is O(updates), not
+  O(table) (VERDICT r1). One census aggregation of the updates by bucket
+  yields the dirty set with per-bucket row counts and min/max. When no
+  update url exists yet (the ``--resume`` case) the merge APPENDS: one
+  new data file per dirty bucket, renamed into the live bucket dir, no
+  existing file rewritten (Iceberg's append snapshot). Otherwise each
+  dirty bucket is rewritten into one data file (rows are grouped by
+  bucket before every bucketed write, the analog of Iceberg's
+  ``write.distribution-mode=hash``) and swapped in whole (write-tmp +
+  rename). Recorded ranges are widened before any rename; a crash
+  between renames leaves a prefix merged, and re-running the same merge
+  converges (idempotence and kill-point tests).
+- ``_layout.json``  — bucket count, per-bucket min/max ``stats`` and row
+  counts (``rows``), the Iceberg manifest analog: ``read_range`` prunes
+  on the stats and ``table_rows`` sums the counts without a scan.
 - ``remaining``     — checkpointed-resume anti-join (J3): pages minus already-
   extracted urls. No forced broadcast: the done set is parquet-backed, so
   Catalyst's size statistics broadcast it when small and fall back to a
   shuffled join when not (an unconditional hint OOMs at table scale,
   ADVICE r1).
-- ``write_lineage`` — per-run lineage JSON next to the data (run_id +
-  per-partition row counts), the fallback for Iceberg snapshot metadata.
+- ``write_lineage`` / ``append_run`` — per-run lineage JSON next to the data
+  (the run's partition row counts, the table total from the layout) and
+  the append-by-run ``_metrics`` table, the fallback for Iceberg snapshot
+  metadata.
 
 When an Iceberg catalog is configured (``spark.sql.catalog.*``), the same
 calls route to real ``MERGE INTO`` SQL — the switch is config, not code
@@ -38,6 +47,7 @@ import json
 import os
 import shutil
 import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -85,17 +95,24 @@ def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _write_buckets(df: DataFrame, path: str) -> None:
+def _write_buckets(df: DataFrame, path: str, tasks: int | None = None) -> None:
     """Write ``df`` (with its ``bucket`` column) as ``bucket=N`` dirs under
     ``path``, rows grouped by bucket first — the analog of Iceberg's hash
     write distribution (``write.distribution-mode=hash``). Without it every
     input task writes its own file into every bucket it touches. With AQE
     the rebalance keeps a small bucket in one task (one file per bucket)
     and splits a bucket larger than ``advisoryPartitionSizeInBytes``, so
-    large buckets still write in parallel."""
-    df.hint("rebalance", "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
+    large buckets still write in parallel.
+
+    ``tasks`` hash-partitions into exactly that many tasks instead, which
+    AQE leaves as they are: every bucket is written by one task, so as
+    exactly one file, and small buckets are not coalesced into one task
+    that writes every file in turn."""
+    grouped = (
+        df.hint("rebalance", "bucket") if tasks is None
+        else df.repartition(tasks, "bucket")
+    )
+    grouped.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame | None:
@@ -103,6 +120,23 @@ def read_table(spark: SparkSession, path: str) -> DataFrame | None:
         return None
     # `bucket` is merge-layout plumbing, not part of the logical schema
     return spark.read.parquet(path).drop("bucket")
+
+
+def _read_layout(path: str) -> dict | None:
+    layout_file = os.path.join(path, "_layout.json")
+    if not os.path.exists(layout_file):
+        return None
+    with open(layout_file, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def _save_layout(path: str, layout: dict) -> None:
+    """Replace ``_layout.json`` atomically (write a sibling, then
+    ``os.replace``): a crash mid-write never leaves a torn manifest."""
+    tmp = os.path.join(path, "_layout.json.tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(layout, f)
+    os.replace(tmp, os.path.join(path, "_layout.json"))
 
 
 def _write_layout(path: str, n_buckets: int, sort_by: str | None = None) -> None:
@@ -114,16 +148,11 @@ def _write_layout(path: str, n_buckets: int, sort_by: str | None = None) -> None
     layout: dict = {"n_buckets": n_buckets}
     if sort_by is not None:
         layout["sort_by"] = sort_by
-    with open(os.path.join(path, "_layout.json"), "w", encoding="utf-8") as f:
-        json.dump(layout, f)
+    _save_layout(path, layout)
 
 
 def _layout_sort_by(path: str) -> str | None:
-    layout = os.path.join(path, "_layout.json")
-    if not os.path.exists(layout):
-        return None
-    with open(layout, encoding="utf-8") as f:
-        return json.load(f).get("sort_by")
+    return (_read_layout(path) or {}).get("sort_by")
 
 
 # Columns whose per-bucket min/max are recorded in _layout.json (r5,
@@ -138,83 +167,77 @@ def _stat_cast(df: DataFrame, col: str):
     return F.col(col).cast("double") if dict(df.dtypes)[col] == "timestamp" else F.col(col)
 
 
-def _collect_bucket_stats(spark: SparkSession, base: str, dirs) -> dict:
-    """{bucket id (str) -> {col -> [min, max]}} over the given bucket dirs
-    (partition-discovered against ``base``)."""
-    if not dirs:
-        return {}
-    df = spark.read.option("basePath", base).parquet(*dirs)
+def _bucket_stats(df: DataFrame) -> tuple[dict, dict]:
+    """One aggregation of ``df`` by its ``bucket`` column. Returns
+    ``(stats, rows)``: {bucket id (str) -> {col -> [min, max]}} for the
+    STATS_COLS present (empty when none is), and {bucket id -> row count}."""
     cols = [c for c in STATS_COLS if c in df.columns]
-    if not cols:
-        return {}
-    aggs = []
+    aggs = [F.count(F.lit(1)).alias("rows")]
     for c in cols:
         e = _stat_cast(df, c)
         aggs += [F.min(e).alias(f"mn_{c}"), F.max(e).alias(f"mx_{c}")]
-    return {
+    got = df.groupBy("bucket").agg(*aggs).collect()
+    stats = {
         str(r["bucket"]): {c: [r[f"mn_{c}"], r[f"mx_{c}"]] for c in cols}
-        for r in df.groupBy("bucket").agg(*aggs).collect()
-    }
+        for r in got
+    } if cols else {}
+    return stats, {str(r["bucket"]): r["rows"] for r in got}
 
 
-def _record_stats(path: str, fresh: dict) -> None:
-    """Merge per-bucket min/max entries into ``_layout.json`` as the exact
-    values for those buckets (no-op without a layout file or entries)."""
-    layout_file = os.path.join(path, "_layout.json")
-    if not fresh or not os.path.exists(layout_file):
+def _record_stats(path: str, stats: dict, rows: dict) -> None:
+    """Merge per-bucket min/max entries and row counts into
+    ``_layout.json`` as the exact values for those buckets (no-op without a
+    layout file or entries). Counts live in their own ``rows`` map:
+    ``read_range`` and the widening pass read ``stats`` per column."""
+    layout = _read_layout(path)
+    if layout is None or not (stats or rows):
         return
-    with open(layout_file, encoding="utf-8") as f:
-        layout = json.load(f)
-    layout.setdefault("stats", {}).update(fresh)
-    with open(layout_file, "w", encoding="utf-8") as f:
-        json.dump(layout, f)
+    if stats:
+        layout.setdefault("stats", {}).update(stats)
+    layout.setdefault("rows", {}).update(rows)
+    _save_layout(path, layout)
 
 
 def _refresh_stats(spark: SparkSession, path: str) -> None:
     """Recompute every bucket's min/max for the STATS_COLS present in the
-    table schema and merge them into ``_layout.json`` — the Iceberg manifest
-    min/max analog."""
-    if not os.path.exists(os.path.join(path, "_layout.json")):
+    table schema, and its row count, and merge them into ``_layout.json``
+    — the Iceberg manifest min/max and record-count analog."""
+    if _read_layout(path) is None:
         return
     dirs = [
         os.path.join(path, d)
         for d in sorted(os.listdir(path))
         if d.startswith("bucket=")
     ]
-    _record_stats(path, _collect_bucket_stats(spark, path, dirs))
+    if dirs:
+        _record_stats(
+            path, *_bucket_stats(spark.read.option("basePath", path).parquet(*dirs))
+        )
 
 
-def _widen_stats_for_swap(
-    spark: SparkSession, path: str, tmp: str, buckets
-) -> dict:
+def table_rows(spark: SparkSession, path: str) -> int:
+    """The table's row count: the sum of the per-bucket counts in
+    ``_layout.json`` when it records them (no scan), else a count."""
+    rows = (_read_layout(path) or {}).get("rows")
+    if rows is not None:
+        return sum(rows.values())
+    return read_table(spark, path).count()
+
+
+def _widen_stats(path: str, buckets, incoming: dict) -> None:
     """Pre-swap stats widening (review r5): the bucket-dir renames and the
     post-swap stats write are not atomic, and stale-but-NARROW stats
     would make read_range silently skip buckets holding just-merged rows
     if a crash lands between them. Before any rename, each dirty bucket's
     recorded range is widened to the UNION of its current range and the
-    incoming tmp data's range — correct for both the pre- and post-swap
-    table at every crash point (min/max pruning only needs a superset).
-    Buckets with no recorded entry stay unrecorded (already conservative);
-    a column whose incoming range is unknown is dropped from the entry.
-
-    Returns the per-bucket stats read from ``tmp`` (collected even when the
-    layout records no stats yet): after the swap each dirty bucket dir IS
-    its ``tmp`` dir, so the merge records these as the exact entries
-    instead of re-reading the swapped buckets."""
-    tmp_dirs = [
-        os.path.join(tmp, f"bucket={b}")
-        for b in buckets
-        if os.path.exists(os.path.join(tmp, f"bucket={b}"))
-    ]
-    incoming = _collect_bucket_stats(spark, tmp, tmp_dirs)
-    layout_file = os.path.join(path, "_layout.json")
-    if not os.path.exists(layout_file):
-        return incoming
-    with open(layout_file, encoding="utf-8") as f:
-        layout = json.load(f)
-    stats = layout.get("stats")
+    ``incoming`` range — correct for both the pre- and post-swap table at
+    every crash point (min/max pruning only needs a superset). Buckets
+    with no recorded entry stay unrecorded (already conservative); a
+    column whose incoming range is unknown is dropped from the entry."""
+    layout = _read_layout(path)
+    stats = (layout or {}).get("stats")
     if not stats:
-        return incoming
+        return
     changed = False
     for b in buckets:
         old = stats.get(str(b))
@@ -231,14 +254,32 @@ def _widen_stats_for_swap(
                 or lo_hi[1] is None
             ):
                 del old[col]  # unknown range on either side: no pruning
-                changed = True
             else:
                 old[col] = [min(lo_hi[0], inc[0]), max(lo_hi[1], inc[1])]
-                changed = True
+            changed = True
     if changed:
-        with open(layout_file, "w", encoding="utf-8") as f:
-            json.dump(layout, f)
-    return incoming
+        _save_layout(path, layout)
+
+
+def _widen_stats_for_swap(
+    spark: SparkSession, path: str, tmp: str, buckets
+) -> tuple[dict, dict]:
+    """:func:`_widen_stats` with the incoming ranges read from the staged
+    ``tmp`` dirs of a bucket rewrite. Returns their ``(stats, rows)``
+    (collected even when the layout records no stats yet): after the swap
+    each dirty bucket dir IS its ``tmp`` dir, so the merge records these as
+    the exact entries instead of re-reading the swapped buckets."""
+    tmp_dirs = [
+        os.path.join(tmp, f"bucket={b}")
+        for b in buckets
+        if os.path.exists(os.path.join(tmp, f"bucket={b}"))
+    ]
+    stats, rows = (
+        _bucket_stats(spark.read.option("basePath", tmp).parquet(*tmp_dirs))
+        if tmp_dirs else ({}, {})
+    )
+    _widen_stats(path, buckets, stats)
+    return stats, rows
 
 
 def read_range(
@@ -265,11 +306,10 @@ def read_range(
 
     lo_v, hi_v = plain(lo), plain(hi)
     pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    layout_file = os.path.join(path, "_layout.json")
-    if not _is_bucketed(path) or not os.path.exists(layout_file):
+    layout = _read_layout(path)
+    if not _is_bucketed(path) or layout is None:
         return read_table(spark, path).filter(pred)
-    with open(layout_file, encoding="utf-8") as f:
-        stats = json.load(f).get("stats", {})
+    stats = layout.get("stats", {})
     dirs, skipped = [], 0
     for d in sorted(os.listdir(path)):
         if not d.startswith("bucket="):
@@ -299,11 +339,9 @@ def read_url(spark: SparkSession, path: str, url: str) -> DataFrame | None:
     Returns None when the table does not exist."""
     if not os.path.exists(path):
         return None
-    layout = os.path.join(path, "_layout.json")
-    if not _is_bucketed(path) or not os.path.exists(layout):
+    layout_doc = _read_layout(path)
+    if not _is_bucketed(path) or layout_doc is None:
         return read_table(spark, path).filter(F.col("url") == url)
-    with open(layout, encoding="utf-8") as f:
-        layout_doc = json.load(f)
     if layout_doc.get("sort_by") is not None:
         # range layout (write_table_sorted): bucket placement follows the
         # sort column, not the url hash — the pruned full-table plan is the
@@ -445,20 +483,42 @@ def merge_by_url(
     target_path: str,
     updates: DataFrame,
     n_buckets: int = N_MERGE_BUCKETS,
-) -> None:
+) -> dict | None:
     """MERGE INTO target USING updates ON url — parquet-fallback emulation.
 
     MATCHED → UPDATE * (update row wins), NOT MATCHED → INSERT *.
     Idempotent: merging the same updates twice equals merging once.
-    Incremental: only buckets the updates hash into are read and rewritten,
-    each into a single data file (rows are grouped by bucket before the
-    write, see :func:`_write_buckets`), so repeated merges keep one file per
-    bucket. The dirty buckets' min/max stats are aggregated once, from the
-    staged tmp dirs before the swap, and recorded as exact after it.
-    Routes to :func:`merge_by_url_iceberg` when ``target_path`` is a catalog
-    table identifier (no '/') and Iceberg is available.
+    Incremental: only buckets the updates hash into (the dirty buckets) are
+    touched. One aggregation of the updates by bucket (the census) yields
+    the dirty set with each dirty bucket's row count and min/max; one
+    url-only semi-join of the updates against the dirty buckets then picks
+    the write:
 
-    ``updates`` is evaluated twice (bucket census + merged write) — callers
+    - no update url exists yet (the ``--resume`` case, after the anti-join
+      in :func:`remaining`): **append**. The updates are written to a tmp
+      sibling, one file per dirty bucket, and each file is moved into its
+      live bucket dir with one atomic rename; no existing file is rewritten
+      (Iceberg's append snapshot). Each append adds a file per dirty
+      bucket; a later rewrite of that bucket, or :func:`compact`, folds
+      them back into one (Iceberg's ``rewrite_data_files``).
+    - some update url exists: **rewrite** each dirty bucket into a single
+      data file (rows grouped by bucket, see :func:`_write_buckets`) and
+      swap it in whole.
+
+    Stats and row counts are widened/recorded without re-reading the live
+    table: before any rename the recorded ranges are widened to cover the
+    incoming rows, so :func:`read_range` never skips a row at any crash
+    point. A crash before the renames leaves only the tmp sibling, which
+    the next merge deletes (:func:`_heal_swaps`); a crash between renames
+    leaves a prefix of buckets merged, and re-running the same merge finds
+    the overlap, takes the rewrite path and converges.
+
+    Returns ``{"path", "dirty_buckets", "rows_in"}`` with ``path`` one of
+    ``new``, ``migrate``, ``append``, ``rewrite``, ``noop``. Routes to
+    :func:`merge_by_url_iceberg` when ``target_path`` is a catalog table
+    identifier (no '/') and Iceberg is available; that route returns None.
+
+    ``updates`` is read three times (census, overlap check, write) — callers
     merging an expensive lineage should materialize it first
     (``engine/run_pipeline.py`` stages the run output to parquet before
     merging for exactly this reason).
@@ -469,34 +529,39 @@ def merge_by_url(
         # catalog table ident → native MERGE INTO (Iceberg in production;
         # the in-repo MiniCatalog exercises the same statement offline)
         merge_by_url_iceberg(spark, target_path, updates)
-        return
+        return None
     # An existing table's recorded layout wins over the caller's n_buckets
     # (ADVICE r2 #1): hashing updates with a different bucket count than the
     # table's real layout would scatter rows into wrong buckets and break
     # the point lookup. The bucket count is a table property, not a call
     # parameter — exactly like Iceberg's partition spec.
-    layout_file = os.path.join(target_path, "_layout.json")
-    if os.path.exists(layout_file):
-        with open(layout_file, encoding="utf-8") as f:
-            layout_doc = json.load(f)
-        if layout_doc.get("sort_by") is not None:
+    layout = _read_layout(target_path) if os.path.exists(target_path) else None
+    if layout is not None:
+        if layout.get("sort_by") is not None:
             raise ValueError(
                 f"{target_path} is a range layout (sort_by="
-                f"{layout_doc['sort_by']!r}); merge_by_url upserts into "
+                f"{layout['sort_by']!r}); merge_by_url upserts into "
                 "url-hash layouts only — rewrite via write_table_sorted"
             )
-        n_buckets = layout_doc["n_buckets"]
+        n_buckets = layout["n_buckets"]
     upd = _with_bucket(updates, n_buckets)
+    in_stats, in_rows = _bucket_stats(upd)  # the census
+    dirty = sorted(int(b) for b in in_rows)
+
+    def summary(path: str) -> dict:
+        return {"path": path, "dirty_buckets": len(dirty),
+                "rows_in": sum(in_rows.values())}
+
     if not os.path.exists(target_path):
-        if updates.isEmpty():
+        if not dirty:
             write_table(updates, target_path)  # keep a readable empty schema
-            return
+            return summary("new")
         tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
         _write_buckets(upd, tmp)
         os.rename(tmp, target_path)
         _write_layout(target_path, n_buckets)
-        _refresh_stats(spark, target_path)
-        return
+        _record_stats(target_path, in_stats, in_rows)  # the table IS upd
+        return summary("new")
     if not _is_bucketed(target_path):
         # one-time migration of a flat write_table layout: everything dirty
         existing = read_table(spark, target_path)
@@ -508,34 +573,78 @@ def merge_by_url(
         os.rename(tmp, target_path)
         _write_layout(target_path, n_buckets)
         _refresh_stats(spark, target_path)
-        return
+        return summary("migrate")
     _heal_swaps(target_path)  # restore any bucket a prior crash left aside
-    dirty = sorted(
-        r["bucket"] for r in upd.select("bucket").distinct().collect()
-    )
-    if not dirty:  # empty updates: no-op, untouched table
-        return
-    dirty_dirs = [
-        f"{target_path}/bucket={b}"
-        for b in dirty
-        if os.path.exists(f"{target_path}/bucket={b}")
-    ]
-    if dirty_dirs:
-        existing_dirty = (
-            spark.read.option("basePath", target_path).parquet(*dirty_dirs)
+    if layout is None:
+        _write_layout(target_path, n_buckets)
+        layout = {}
+    if "rows" not in layout:
+        warnings.warn(
+            f"{target_path}: _layout.json records no per-bucket row counts; "
+            "counting every bucket once",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        # done-url side is a fresh DF with parquet size stats on the other
-        # side; no forced broadcast (ADVICE r1) — Catalyst/AQE picks.
-        kept = existing_dirty.join(upd.select("url"), "url", "left_anti")
-        merged = kept.unionByName(upd)
-    else:
-        merged = upd
+        _refresh_stats(spark, target_path)
+    if not dirty:  # empty updates: no-op, untouched table
+        return summary("noop")
+    live = {b for b in dirty if os.path.exists(f"{target_path}/bucket={b}")}
+    existing_dirty = (
+        spark.read.option("basePath", target_path).parquet(
+            *(f"{target_path}/bucket={b}" for b in sorted(live))
+        )
+        if live else None
+    )
     tag = uuid.uuid4().hex[:8]
     tmp = f"{target_path}.tmp-{tag}"
-    _write_buckets(merged, tmp)
+    # done-url side is a fresh DF with parquet size stats on the other
+    # side; no forced broadcast (ADVICE r1) — Catalyst/AQE picks. A count,
+    # not isEmpty(): an empty result would make take(1) rescan in
+    # growing partition batches, one job each.
+    if existing_dirty is None or existing_dirty.select("url").join(
+        upd.select("url"), "url", "left_semi"
+    ).count() == 0:
+        # the empty union types the appended files exactly like a rewrite
+        # of the bucket would (unionByName coercion)
+        appended = (
+            upd if existing_dirty is None
+            else existing_dirty.limit(0).unionByName(upd)
+        )
+        _write_buckets(
+            appended, tmp, min(len(dirty), spark.sparkContext.defaultParallelism)
+        )
+        _widen_stats(target_path, dirty, in_stats)
+        for b in dirty:
+            src, dst = f"{tmp}/bucket={b}", f"{target_path}/bucket={b}"
+            if b not in live:
+                os.rename(src, dst)
+                continue
+            for name in sorted(os.listdir(src)):
+                if name.startswith("."):
+                    continue  # checksums move with their data file
+                os.rename(os.path.join(src, name), os.path.join(dst, name))
+                crc = f".{name}.crc"
+                if os.path.exists(os.path.join(src, crc)):
+                    os.rename(os.path.join(src, crc), os.path.join(dst, crc))
+        shutil.rmtree(tmp)
+        spark.catalog.refreshByPath(target_path)
+        # a bucket that held rows keeps its widened entry, now the exact
+        # range of old ∪ incoming (or unrecorded, if it was); a new bucket
+        # holds only the incoming rows. Never record the incoming range
+        # alone for a bucket that held rows: read_range would skip them.
+        old_rows = _read_layout(target_path)["rows"]
+        _record_stats(
+            target_path,
+            {str(b): in_stats[str(b)] for b in dirty
+             if b not in live and str(b) in in_stats},
+            {b: old_rows.get(b, 0) + n for b, n in in_rows.items()},
+        )
+        return summary("append")
+    kept = existing_dirty.join(upd.select("url"), "url", "left_anti")
+    _write_buckets(kept.unionByName(upd), tmp)
     # widen BEFORE the swap so a crash at any point leaves conservative
     # (superset) ranges; tightened to exact after the swap succeeds
-    fresh = _widen_stats_for_swap(spark, target_path, tmp, dirty)
+    fresh_stats, fresh_rows = _widen_stats_for_swap(spark, target_path, tmp, dirty)
     # aside-dir two-rename swap (ADVICE r5): the old rmtree(dst)+rename
     # left a crash window where the bucket's data was simply gone. Now the
     # live dir moves aside first and is deleted LAST, so every intermediate
@@ -556,12 +665,11 @@ def merge_by_url(
     # the swap replaced files under an existing path: drop Spark's shared
     # file-status cache entries so later reads don't chase deleted parts
     spark.catalog.refreshByPath(target_path)
-    if not os.path.exists(os.path.join(target_path, "_layout.json")):
-        _write_layout(target_path, n_buckets)
     # every dirty bucket holds an update row, so each swapped bucket dir is
-    # exactly the tmp dir the widening pass read: its stats are the exact
-    # entries, and the merge aggregates the dirty buckets once
-    _record_stats(target_path, fresh)
+    # exactly the tmp dir the widening pass read: its stats and counts are
+    # the exact entries, and the merge aggregates the dirty buckets once
+    _record_stats(target_path, fresh_stats, fresh_rows)
+    return summary("rewrite")
 
 
 def remaining(pages: DataFrame, extracted_path: str) -> DataFrame:
@@ -579,26 +687,75 @@ def remaining(pages: DataFrame, extracted_path: str) -> DataFrame:
     return pages.join(done.select("url"), "url", "left_anti")
 
 
-def write_lineage(spark: SparkSession, target_path: str, run_id: str) -> str:
-    """Record per-partition row counts for the run next to the table."""
-    df = spark.read.parquet(target_path)
-    counts = (
-        df.groupBy("part_id", "lineage").count().orderBy("lineage", "part_id").collect()
-    )
+def write_lineage(
+    spark: SparkSession,
+    target_path: str,
+    run_id: str,
+    partitions,
+    gates: dict | None = None,
+) -> str:
+    """Record the run's lineage next to the table: ``partitions`` is
+    ``[(part_id, rows)]`` over the run's own rows, ``run_rows`` their sum,
+    ``total_rows`` the table total from the layout counts
+    (:func:`table_rows`, no scan) and ``gates`` the run's gate counters."""
     payload = {
         "run_id": run_id,
         "partitions": [
-            {"part_id": r["part_id"], "lineage": r["lineage"], "rows": r["count"]}
-            for r in counts
+            {"part_id": p, "lineage": run_id, "rows": n}
+            for p, n in sorted(partitions)
         ],
-        "total_rows": sum(r["count"] for r in counts),
+        "run_rows": sum(n for _, n in partitions),
+        "total_rows": table_rows(spark, target_path),
     }
+    if gates is not None:
+        payload["gates"] = gates
     lineage_dir = f"{target_path}_lineage"
     os.makedirs(lineage_dir, exist_ok=True)
     lineage_path = f"{lineage_dir}/{run_id}.json"
     with open(lineage_path, "w", encoding="utf-8") as f:
         json.dump(payload, f, indent=2)
     return lineage_path
+
+
+def append_run(
+    spark: SparkSession, path: str, run_id: str, rows, schema
+) -> None:
+    """Append-by-run table: a run's few driver-side ``rows`` (Spark
+    ``schema``, with a ``run_id`` column) become ``path/run-<run_id>.parquet``,
+    written to a hidden tmp file and moved in with ``os.replace``. Re-running
+    a run id replaces its rows; every other run's rows survive, including
+    those in files an earlier Spark writer left (rows of ``run_id`` are
+    filtered out of those). ``spark.read.parquet(path)`` reads all runs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def replace(name: str, table) -> None:
+        """Swap ``path/name`` for ``table``; delete it when ``table`` is None."""
+        crc = os.path.join(path, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)  # a stale checksum would fail the next read
+        if table is None:
+            os.remove(os.path.join(path, name))
+            return
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
+
+    os.makedirs(path, exist_ok=True)
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet") or name.startswith((".", "_", "run-")):
+            continue
+        old = pq.read_table(os.path.join(path, name))
+        keep = old.filter(pc.not_equal(old["run_id"], run_id))
+        if keep.num_rows < old.num_rows:
+            replace(name, keep if keep.num_rows else None)
+    replace(
+        f"run-{run_id}.parquet",
+        pa.Table.from_pylist([r.asDict() for r in rows], schema=to_arrow_schema(schema)),
+    )
+    spark.catalog.refreshByPath(path)
 
 
 def _heal_swaps(target_path: str) -> None:
@@ -637,11 +794,12 @@ def compact(
     spark: SparkSession, target_path: str, max_files_per_bucket: int = 1
 ) -> list[int]:
     """Small-file compaction for the bucketed parquet table — the fallback's
-    analog of Iceberg's ``rewrite_data_files`` (r4). ``merge_by_url``
-    already writes one file per bucket (only a bucket above the rebalance
-    split size gets several); files added by appends or other writers still
-    pile up, and this rewrites each bucket directory holding more than
-    ``max_files_per_bucket`` data files into a single file. Clean buckets
+    analog of Iceberg's ``rewrite_data_files`` (r4). A ``merge_by_url``
+    rewrite leaves one file per bucket (only a bucket above the rebalance
+    split size gets several); its append path adds one file per dirty
+    bucket, and files from other writers pile up too. This rewrites each
+    bucket directory holding more than ``max_files_per_bucket`` data files
+    into a single file. Clean buckets
     are untouched (their files keep identity and mtime — same discipline
     as the dirty-bucket merge).
     Returns the compacted bucket ids.

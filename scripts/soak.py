@@ -1,13 +1,14 @@
 """100k-document end-to-end soak: extract → bucketed merge → resume →
-idempotent re-merge. The long-haul twin of tests/test_resume.py at 1000×
+append of fresh urls → idempotent re-merge. The long-haul twin of tests/test_resume.py at 1000×
 the fixture size, exercising memory behavior, the dirty-bucket merge path,
 and the anti-join resume at the scaling corpus' skewed size distribution
 (0.5–2 MB giant pages included).
 
     python scripts/soak.py [--docs 100000] [--out /tmp/soak_extracted]
 
-Exit 0 = all invariants held (counts, zero resume work, zero dupes,
-update-wins lineage, one data file per bucket after the merges).
+Exit 0 = all invariants held (counts, zero resume work, zero dupes, the
+fresh-url resume appends at most one file per bucket, update-wins lineage,
+and the re-merge folds every bucket back to one data file).
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ def main() -> None:
     ap.add_argument("--master", default="local[32]")
     args = ap.parse_args()
 
+    from pyspark.sql import functions as F
+
     from engine import pipeline, tableio
     from engine.session import get_spark
 
@@ -63,16 +66,36 @@ def main() -> None:
     assert todo == 0, todo
     print("phase2: resume finds zero remaining work")
 
+    # fresh urls nothing has extracted yet: the resume merges them through
+    # the insert-only append path, one new file per dirty bucket
+    fresh = pages.limit(1000).withColumn("url", F.concat("url", F.lit("#fresh")))
+    todo = tableio.remaining(fresh, args.out)
+    # materialized: the merge reads its updates three times, and the lazy
+    # anti-join would re-run the extraction each time
+    upd = pipeline.run_extract(todo, mode="fused", run_id="soak_fresh").localCheckpoint()
+    got = tableio.merge_by_url(spark, args.out, upd)
+    n_fresh = fresh.count()
+    grown = spark.read.parquet(args.out)
+    dupes = grown.groupBy("url").count().filter("count > 1").count()
+    assert got["path"] == "append", got
+    assert grown.count() == args.docs + n_fresh and dupes == 0, (grown.count(), dupes)
+    most = max_files_per_bucket(args.out)
+    assert most <= 2, most
+    print(f"phase2b: resume appended {n_fresh} fresh rows "
+          f"({got['dirty_buckets']} buckets, at most {most} files each, dupes=0)")
+
     upd = pipeline.run_extract(pages.limit(5000), mode="fused", run_id="soak2")
     tableio.merge_by_url(spark, args.out, upd)
     final = spark.read.parquet(args.out)
     dupes = final.groupBy("url").count().filter("count > 1").count()
     updated = final.filter("lineage = 'soak2'").count()
-    assert final.count() == args.docs and dupes == 0 and updated == 5000
-    print(f"phase3: idempotent re-merge ok (rows={args.docs}, dupes=0, updated=5000)")
+    n_rows = args.docs + n_fresh
+    assert final.count() == n_rows and dupes == 0 and updated == 5000
+    print(f"phase3: idempotent re-merge ok (rows={n_rows}, dupes=0, updated=5000)")
 
-    # merges group rows by bucket before writing: at this table size every
-    # bucket is far below the rebalance split size, so one file per bucket
+    # the re-merge dirties every bucket and rewrites each into one file (at
+    # this table size every bucket is far below the rebalance split size),
+    # folding the appended files back
     most = max_files_per_bucket(args.out)
     print(f"files: at most {most} data file(s) per bucket")
     assert most == 1, most

@@ -103,7 +103,11 @@ def test_lineage_written(spark, pages_unit_path, tmp_path):
     out = str(tmp_path / "extracted")
     pages = spark.read.parquet(pages_unit_path)
     tableio.merge_by_url(spark, out, pipeline.run_extract(pages, num_parts=2, run_id="L"))
-    path = tableio.write_lineage(spark, out, "L")
+    parts = [
+        (r["part_id"], r["count"])
+        for r in spark.read.parquet(out).groupBy("part_id").count().collect()
+    ]
+    path = tableio.write_lineage(spark, out, "L", parts)
     assert os.path.exists(path)
     payload = json.load(open(path))
     assert payload["total_rows"] == 64
@@ -238,3 +242,180 @@ def test_cli_quality_min_gates_extracted_docs(spark, pages_small_path, tmp_path)
         for r in base.where("status NOT IN ('ok', 'fallback')").collect()
     }
     assert base_fail and base_fail <= got
+
+
+def _run_cli(spark, args, capsys=None):
+    """``run_pipeline.main`` on ``args`` in the test session; returns the
+    parsed JSON line when ``capsys`` is given."""
+    import json
+    import sys
+    from unittest import mock
+
+    from engine import run_pipeline
+
+    argv = ["run_pipeline.py", *args, "--master", spark.sparkContext.master]
+    if capsys is not None:
+        capsys.readouterr()
+    with mock.patch.object(sys, "argv", argv), \
+            mock.patch.object(run_pipeline, "get_spark", lambda master=None: spark), \
+            mock.patch.object(spark, "stop", lambda: None):
+        run_pipeline.main()
+    if capsys is not None:
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    return None
+
+
+def test_two_resume_runs_keep_run_scoped_metrics_and_lineage(
+    spark, pages_small_path, tmp_path, capsys
+):
+    """Each --resume run's _metrics and lineage count that run's own rows:
+    the first run's _metrics rows survive the second run, each run's
+    sum(docs_in) equals the rows it staged, lineage partitions hold only
+    the run's rows while total_rows is the table count, and re-running a
+    run id replaces its _metrics rows instead of adding to them."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    pages = spark.read.parquet(pages_small_path)
+    half = str(tmp_path / "half.parquet")
+    pages.filter("xxhash64(url) % 2 = 0").write.parquet(half)
+    n_half, n_all = spark.read.parquet(half).count(), pages.count()
+    out = str(tmp_path / "extracted")
+
+    def docs_in(run_id):
+        return [
+            r["docs_in"]
+            for r in spark.read.parquet(f"{out}_metrics")
+            .where(F.col("run_id") == run_id).collect()
+        ]
+
+    def lineage(run_id):
+        with open(f"{out}_lineage/{run_id}.json", encoding="utf-8") as f:
+            return json.load(f)
+
+    first = _run_cli(spark, ["--pages", half, "--out", out, "--resume",
+                             "--run-id", "r1"], capsys)
+    assert first["merge"]["path"] == "new" and first["rows"] == n_half
+    second = _run_cli(spark, ["--pages", pages_small_path, "--out", out,
+                              "--resume", "--run-id", "r2"], capsys)
+    assert (second["merge"]["path"], second["merge"]["rows_in"]) == (
+        "append", n_all - n_half
+    )
+    assert second["rows"] == n_all == spark.read.parquet(out).count()
+    assert sum(docs_in("r1")) == n_half  # the first run's rows survive
+    assert sum(docs_in("r2")) == n_all - n_half
+    for run_id, n in (("r1", n_half), ("r2", n_all - n_half)):
+        lin = lineage(run_id)
+        staged = {
+            r["part_id"]: r["count"]
+            for r in spark.read.parquet(out).where(F.col("lineage") == run_id)
+            .groupBy("part_id").count().collect()
+        }
+        assert {p["part_id"]: p["rows"] for p in lin["partitions"]} == staged
+        assert {p["lineage"] for p in lin["partitions"]} == {run_id}
+        assert lin["run_rows"] == n
+    assert lineage("r2")["total_rows"] == spark.read.parquet(out).count()
+
+    # re-run r2 over every page: its rows are replaced, r1's stay
+    again = _run_cli(spark, ["--pages", pages_small_path, "--out", out,
+                             "--run-id", "r2"], capsys)
+    assert again["merge"]["path"] == "rewrite"
+    assert sum(docs_in("r2")) == n_all
+    assert sum(docs_in("r1")) == n_half
+    assert lineage("r2")["total_rows"] == n_all
+
+
+def test_cli_gate_counters_match_hand_counts(spark, pages_small_path, tmp_path, capsys):
+    """The run's gate counters (observed on the staging write, no extra
+    job) equal counts made by hand from the input, the blocklist, the
+    resumed table and a rescoring of the extracted rows; the lineage JSON
+    and the JSON line carry the same counters."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from engine.logreg import quality_p_expr
+    from engine.logreg_model import TRAINED_WEIGHTS
+
+    pages = spark.read.parquet(pages_small_path)
+    urls = {r["url"] for r in pages.select("url").collect()}
+    victim_host = sorted(urls)[0].split("/")[2]
+    blocked = {u for u in urls if u.split("/")[2] == victim_host}
+    rules = tmp_path / "rules.tsv"
+    rules.write_text("host\t" + victim_host + "\n", encoding="utf-8")
+    out = str(tmp_path / "extracted")
+    tableio.merge_by_url(
+        spark, out,
+        pipeline.run_extract(pages.filter("xxhash64(url) % 2 = 0"), run_id="seed"),
+    )
+    done = {r["url"] for r in spark.read.parquet(out).select("url").collect()}
+    q = 0.62
+    got = _run_cli(spark, [
+        "--pages", pages_small_path, "--out", out, "--resume", "--run-id", "r2",
+        "--blocklist", str(rules), "--quality-min", str(q),
+    ], capsys)
+
+    todo = urls - blocked - done
+    p = quality_p_expr(
+        TRAINED_WEIGHTS,
+        text="coalesce(extracted_text, '')",
+        n_chars="length(coalesce(extracted_text, ''))",
+    )
+    ungated = pipeline.run_extract(pages.where(F.col("url").isin(sorted(todo))))
+    dropped = ungated.where(
+        f"status IN ('ok', 'fallback') AND ({p}) < {q!r}"
+    ).count()
+    want = {
+        "pages_in": len(urls - blocked),
+        "resume_skipped": len((urls - blocked) & done),
+        "extracted": len(todo),
+        "quality_dropped": dropped,
+    }
+    assert blocked and want["resume_skipped"] and dropped  # every gate fired
+    assert got["gates"] == want
+    with open(f"{out}_lineage/r2.json", encoding="utf-8") as f:
+        lin = json.load(f)
+    assert lin["gates"] == want
+    assert lin["run_rows"] == len(todo) - dropped
+
+
+def test_cli_labels_phase_jobs(spark, pages_unit_path, tmp_path, capsys):
+    """Every phase's Spark jobs carry the phase name as their description,
+    and the JSON line reports each phase's wall time."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def jobs():
+        js = store.jobsList(None)
+        return {
+            int(js.apply(i).jobId()): js.apply(i).description()
+            for i in range(js.size())
+        }
+
+    seen = set(jobs())
+    out = str(tmp_path / "extracted")
+    got = _run_cli(spark, [
+        "--pages", pages_unit_path, "--out", out, "--run-id", "r1",
+        "--wat-out", str(tmp_path / "wat"), "--wet-out", str(tmp_path / "wet"),
+    ], capsys)
+    phases = {"wat_export", "extract_stage", "merge", "metrics", "wet_export"}
+    labels = {d.get() for j, d in jobs().items() if j not in seen and d.isDefined()}
+    assert phases <= labels, labels
+    assert set(got["phases_ms"]) == phases
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+def test_cli_gate_counters_when_every_page_is_done(
+    spark, pages_unit_path, tmp_path, capsys
+):
+    """A --resume run whose pages are all done: the repartitioned stage is
+    empty, AQE drops the rest of the plan with the observations in it, and
+    the counters still report every page as skipped."""
+    out = str(tmp_path / "extracted")
+    args = ["--pages", pages_unit_path, "--out", out, "--parts", "3"]
+    _run_cli(spark, args + ["--run-id", "r1"])
+    got = _run_cli(spark, args + ["--resume", "--run-id", "r2"], capsys)
+    assert got["gates"] == {"pages_in": 64, "resume_skipped": 64,
+                            "extracted": 0, "quality_dropped": 0}
+    assert got["merge"] == {"path": "noop", "dirty_buckets": 0, "rows_in": 0}
+    assert got["rows"] == 64

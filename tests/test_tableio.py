@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
+
 from engine import pipeline, tableio
 
 
@@ -139,10 +141,21 @@ def test_merge_writes_one_file_per_bucket(spark, tmp_path):
     assert set(_files_per_bucket(flat).values()) == {1}
 
 
+def _bucket_of(spark, urls, n_buckets):
+    return {
+        r["url"]: r["b"]
+        for r in spark.createDataFrame([(u,) for u in urls], "url string")
+        .select("url", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int").alias("b"))
+        .collect()
+    }
+
+
 def test_merge_stats_equal_full_refresh(spark, tmp_path):
-    """The merge reads each dirty bucket's stats once, from the staged tmp
-    dir, and records them as exact: after each incremental merge the
-    recorded stats equal a full recomputation over the live table."""
+    """The merge records each dirty bucket's stats and row count without
+    re-reading the live table — from the census on the append path (widened
+    old ∪ incoming for a bucket that held rows, the census entry for a new
+    bucket), from the staged tmp dir on the rewrite path. After each merge
+    the recorded stats and counts equal a full recomputation."""
     import json
 
     path = str(tmp_path / "t")
@@ -150,18 +163,176 @@ def test_merge_stats_equal_full_refresh(spark, tmp_path):
 
     def recorded():
         with open(layout, encoding="utf-8") as f:
-            return json.load(f)["stats"]
+            doc = json.load(f)
+        return doc["stats"], doc["rows"]
 
-    tableio.merge_by_url(spark, path, _stats_rows(spark, 64).repartition(4),
-                         n_buckets=8)
-    for upd in (_stats_rows(spark, 16, start=200), _stats_rows(spark, 24, start=50)):
-        tableio.merge_by_url(spark, path, upd.repartition(4))
+    # the base fills buckets 0-3 of 8, so the first update also opens new ones
+    base = _stats_rows(spark, 64).where(F.pmod(F.xxhash64("url"), F.lit(8)) < 4)
+    tableio.merge_by_url(spark, path, base.repartition(4), n_buckets=8)
+    assert set(recorded()[1]) == {"0", "1", "2", "3"}
+    for upd, want in (
+        (_stats_rows(spark, 16, start=200), "append"),
+        (_stats_rows(spark, 24, start=50), "rewrite"),
+    ):
+        before = set(recorded()[1])
+        got = tableio.merge_by_url(spark, path, upd.repartition(4))
+        assert got["path"] == want, got
         merged = recorded()
         tableio._refresh_stats(spark, path)
         assert recorded() == merged
-    assert len(merged) == 8 and all(
-        set(s) == {"doc_id", "warc_ts"} for s in merged.values()
+        assert sum(merged[1].values()) == spark.read.parquet(path).count()
+        assert tableio.table_rows(spark, path) == spark.read.parquet(path).count()
+        if want == "append":
+            assert set(merged[1]) > before  # new buckets were opened
+    assert len(merged[0]) == 8 and all(
+        set(s) == {"doc_id", "warc_ts"} for s in merged[0].values()
     )
+
+
+def test_layout_without_counts_is_recounted_once(spark, tmp_path):
+    """A layout written before per-bucket row counts existed gets them from
+    one full stats pass on the next merge, which says so with a warning."""
+    import json
+
+    import pytest
+
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 40), n_buckets=4)
+    layout = os.path.join(path, "_layout.json")
+    with open(layout, encoding="utf-8") as f:
+        doc = json.load(f)
+    del doc["rows"]
+    with open(layout, "w", encoding="utf-8") as f:
+        json.dump(doc, f)
+    with pytest.warns(RuntimeWarning, match="row counts"):
+        got = tableio.merge_by_url(spark, path, _stats_rows(spark, 8, start=100))
+    assert (got["path"], got["rows_in"]) == ("append", 8)
+    assert tableio.table_rows(spark, path) == 48 == spark.read.parquet(path).count()
+
+
+def test_disjoint_appends_then_rewrite_and_compact_fold_buckets(spark, tmp_path):
+    """Updates whose urls are all new take the append path: each adds one
+    file per dirty bucket and rewrites no existing file, clean buckets keep
+    their files and mtimes, so k appends leave at most 1+k files per
+    bucket. An update that matches one existing url takes the rewrite
+    path, which folds its dirty buckets back to one file; ``compact`` folds
+    the rest."""
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 64).repartition(4),
+                         n_buckets=8)
+    k = 3
+    for i in range(k):
+        upd = _stats_rows(spark, 5, start=1000 + 10 * i)
+        dirty = {f"bucket={b}" for b in _bucket_of(
+            spark, [r["url"] for r in upd.collect()], 8).values()}
+        before = _bucket_state(path)
+        got = tableio.merge_by_url(spark, path, upd.repartition(3))
+        assert got == {"path": "append", "dirty_buckets": len(dirty), "rows_in": 5}
+        after = _bucket_state(path)
+        assert before.keys() == after.keys()
+        assert dirty < set(after)  # some buckets stay clean
+        for d in after:
+            if d in dirty:  # old files untouched, one new file next to them
+                assert set(before[d]) < set(after[d])
+                assert len(after[d]) == len(before[d]) + 1
+            else:
+                assert after[d] == before[d], d
+    assert 1 < max(_files_per_bucket(path).values()) <= 1 + k
+    final = spark.read.parquet(path)
+    assert final.count() == 64 + 5 * k
+    assert final.groupBy("url").count().filter("count > 1").count() == 0
+
+    # one existing url in the update: rewrite, its buckets back to one file
+    upd = _stats_rows(spark, 1, start=1000).unionByName(
+        _stats_rows(spark, 2, start=3000)
+    ).withColumn("extracted_text", F.lit("again"))
+    got = tableio.merge_by_url(spark, path, upd)
+    assert got["path"] == "rewrite", got
+    rewritten = {f"bucket={b}" for b in _bucket_of(
+        spark, ["u1000", "u3000", "u3001"], 8).values()}
+    counts = _files_per_bucket(path)
+    assert all(counts[d] == 1 for d in rewritten), counts
+    assert tableio.read_url(spark, path, "u1000").first()["extracted_text"] == "again"
+    want = sorted(tuple(r) for r in spark.read.parquet(path).drop("bucket").collect())
+    assert len(want) == 64 + 5 * k + 2
+
+    tableio.compact(spark, path)
+    assert set(_files_per_bucket(path).values()) == {1}
+    got = sorted(tuple(r) for r in spark.read.parquet(path).drop("bucket").collect())
+    assert got == want
+
+
+def test_append_kill_points_recover_to_one_clean_merge(spark, tmp_path, monkeypatch):
+    """The append moves files into live bucket dirs one ``os.rename`` at a
+    time. A crash after any number of moves leaves a table with no duplicate
+    url whose every row is its pre-merge or its merged version, and
+    ``read_range`` still finds every row (stats are widened before the
+    first move). Re-running the merge equals one clean merge."""
+    import pytest
+
+    def rows(p):
+        return {
+            r["url"]: r.asDict()
+            for r in spark.read.parquet(p).drop("bucket").collect()
+        }
+
+    def check_ranges(p):
+        full = spark.read.parquet(p).drop("bucket")
+        for lo, hi in ((0, 47), (100, 123), (110, 111)):
+            got = tableio.read_range(spark, p, "doc_id", lo, hi)
+            want = full.where(f"doc_id BETWEEN {lo} AND {hi}")
+            assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    # buckets 0-2 of 4 hold rows; the update also opens bucket 3
+    base = _stats_rows(spark, 48).where(F.pmod(F.xxhash64("url"), F.lit(4)) < 3)
+    upd = _stats_rows(spark, 24, start=100)
+    clean = str(tmp_path / "clean")
+    tableio.merge_by_url(spark, clean, base, n_buckets=4)
+    pre = rows(clean)
+
+    moves = []
+    real_rename = os.rename
+
+    def counting(src, dst):
+        moves.append(src)
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", counting)
+    assert tableio.merge_by_url(spark, clean, upd)["path"] == "append"
+    monkeypatch.setattr(os, "rename", real_rename)
+    post = rows(clean)
+    assert len(post) == len(pre) + 24 and len(moves) > 3
+
+    class Crash(Exception):
+        pass
+
+    for k in sorted({0, 1, len(moves) // 2, len(moves) - 1}):
+        path = str(tmp_path / f"t{k}")
+        tableio.merge_by_url(spark, path, base, n_buckets=4)
+        done = []
+
+        def crashing(src, dst):
+            if len(done) == k:
+                raise Crash(k)
+            done.append(src)
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", crashing)
+        with pytest.raises(Crash):
+            tableio.merge_by_url(spark, path, upd)
+        monkeypatch.setattr(os, "rename", real_rename)
+        spark.catalog.refreshByPath(path)
+        df = spark.read.parquet(path)
+        assert df.groupBy("url").count().filter("count > 1").count() == 0, k
+        got = rows(path)
+        assert set(pre) <= set(got), k
+        assert all(r == pre.get(u) or r == post[u] for u, r in got.items()), k
+        check_ranges(path)
+
+        tableio.merge_by_url(spark, path, upd)  # re-run converges
+        assert rows(path) == post, k
+        assert tableio.table_rows(spark, path) == len(post), k
+        check_ranges(path)
 
 
 def test_read_url_prunes_to_one_bucket(spark, pages_unit_path, tmp_path):
@@ -650,3 +821,37 @@ def test_merge_crash_states_read_consistently_and_self_heal(spark, tmp_path):
     assert not os.path.exists(stale)
     got = table()
     assert ("u3", "newest", 4) in got and len(got) == len(before)
+
+
+def test_append_run_replaces_its_rows_and_keeps_other_runs(spark, tmp_path):
+    """The append-by-run table: each run's rows live in one file; writing a
+    run id again replaces exactly its rows. Rows a Spark writer left
+    (a table written before per-run files) keep every other run's rows,
+    lose the re-run id's, and the table reads with the same schema."""
+    path = str(tmp_path / "m")
+    schema = "part_id int, docs_in long, run_id string, wall_ms int"
+    legacy = spark.createDataFrame(
+        [(0, 5, "r0", 1), (1, 6, "r0", 1), (0, 7, "r1", 2)], schema
+    )
+    tableio.write_table(legacy.coalesce(1), path)
+    spark.createDataFrame([(1, 8, "r1", 2)], schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+
+    def table():
+        df = spark.read.parquet(path)
+        assert df.dtypes == legacy.dtypes
+        return sorted(tuple(r) for r in df.collect())
+
+    r1 = spark.createDataFrame([(0, 3, "r1", 9), (1, 4, "r1", 9)], schema)
+    tableio.append_run(spark, path, "r1", r1.collect(), r1.schema)
+    assert table() == [(0, 3, "r1", 9), (0, 5, "r0", 1), (1, 4, "r1", 9), (1, 6, "r0", 1)]
+
+    r1 = spark.createDataFrame([(2, 10, "r1", 11)], schema)
+    tableio.append_run(spark, path, "r1", r1.collect(), r1.schema)
+    r2 = spark.createDataFrame([], schema)
+    tableio.append_run(spark, path, "r2", r2.collect(), r2.schema)
+    assert table() == [(0, 5, "r0", 1), (1, 6, "r0", 1), (2, 10, "r1", 11)]
+    assert sorted(f for f in os.listdir(path) if f.startswith("run-")) == [
+        "run-r1.parquet", "run-r2.parquet"
+    ]
