@@ -766,11 +766,12 @@ s AS (SELECT doc_id, {_mh.HS_EXPR} AS hs FROM t WHERE size(toks) >= 3)
 def _q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """minhash_signatures as one Arrow-batched pass: signatures are
     integer-exact (md5-hex prefix -> 32-bit int, universal multiply-mod
-    mins), so a distinct-shingle digest memo (shingles are Zipfian) and a
-    vectorized per-family min replace ~2.6M interpreted conv/transform
-    lambda evals per family at sf1.0. Same tokenizer, same shingle join,
-    same (h*A+B) % P families as `_MINHASH_FAST_CTES` — pinned against
-    the DuckDB oracle in tests/test_entry_contract.py."""
+    mins), so a distinct-shingle digest memo (shingles are Zipfian; capped
+    per task, engine/memo.py) and a vectorized per-family min replace ~2.6M
+    interpreted conv/transform lambda evals per family at sf1.0. Same
+    tokenizer, same shingle join, same (h*A+B) % P families as
+    `_MINHASH_FAST_CTES` — pinned against the DuckDB oracle in
+    tests/test_entry_contract.py."""
     from engine.minhash import A as _A_, B as _B_, P as _P_
 
     docs = _par_docs_text(spark, sf_dir)
@@ -781,9 +782,13 @@ def _q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        from engine.memo import CappedMemo
+
         An = np.asarray(_A_, dtype=np.int64)[None, :]
         Bn = np.asarray(_B_, dtype=np.int64)[None, :]
-        memo: dict = {}
+        memo = CappedMemo(
+            lambda s: int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+        )
         for pdf in batches:
             ids: list[int] = []
             flat: list[int] = []
@@ -797,12 +802,7 @@ def _q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ids.append(int(doc_id))
                 for i in range(len(toks) - 2):
                     s = toks[i] + " " + toks[i + 1] + " " + toks[i + 2]
-                    v = memo.get(s)
-                    if v is None:
-                        v = memo[s] = int(
-                            hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16
-                        )
-                    flat.append(v)
+                    flat.append(memo[s])
                 offs.append(len(flat))
             if not ids:
                 continue
@@ -1095,9 +1095,10 @@ def _q_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-dimension majorities are integer sums of md5-hex nibbles, so the
     whole fingerprint is integer-exact in ANY implementation. A
     distinct-token digest memo (corpora are Zipfian; the bench corpus has
-    31 distinct tokens) makes 2.7M tokens at sf1.0 cost 31 md5 calls per
-    task instead of 43M interpreted aggregate-lambda evaluations in an
-    in-row SQL fold (measured 3.5 s -> sub-second). Same tokenizer (split
+    31 distinct tokens; capped per task, engine/memo.py) makes 2.7M tokens
+    at sf1.0 cost 31 md5 calls per task instead of 43M interpreted
+    aggregate-lambda evaluations in an in-row SQL fold (measured 3.5 s ->
+    sub-second). Same tokenizer (split
     on single spaces, empties kept — Python str.split(' ') == Spark
     split(text, ' ', -1)), same md5, same `2*sum >= 15*n` majority rule as
     the exploded+grouped DuckDB oracle below, which pins it
@@ -1111,16 +1112,13 @@ def _q_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        memo: dict = {}
+        from engine.memo import CappedMemo
 
         def nib(tok: str):
-            v = memo.get(tok)
-            if v is None:
-                d = hashlib.md5(tok.encode("utf-8")).hexdigest()[:16]
-                v = memo[tok] = np.array(
-                    [int(c, 16) for c in d], dtype=np.int64
-                )
-            return v
+            d = hashlib.md5(tok.encode("utf-8")).hexdigest()[:16]
+            return np.array([int(c, 16) for c in d], dtype=np.int64)
+
+        memo = CappedMemo(nib)
 
         for pdf in batches:
             out = []
@@ -1133,7 +1131,7 @@ def _q_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n = len(toks)
                 s = np.zeros(16, dtype=np.int64)
                 for t, c in Counter(toks).items():
-                    s += nib(t) * c
+                    s += memo[t] * c
                 out.append(
                     "".join("1" if 2 * x >= 15 * n else "0" for x in s)
                 )

@@ -169,27 +169,27 @@ def encode_arrow(docs: DataFrame, merges) -> DataFrame:
 
         import pandas as pd
 
+        from engine.memo import CappedMemo
+
         # distinct-word memo (r7): corpus words repeat heavily (Zipf), and
         # merges never cross word boundaries, so each distinct word folds
-        # ONCE per task — the standard tokenizer word-cache (GPT-2's
-        # encoder does the same). Semantics unchanged: the fold below is
-        # byte-identical per word, pinned fold==arrow differentially.
-        memo: dict = {}
-
+        # ONCE per task (while the capped memo holds it) — the standard
+        # tokenizer word-cache (GPT-2's encoder does the same). Semantics
+        # unchanged: the fold below is byte-identical per word, pinned
+        # fold==arrow differentially.
         def enc_word(w):
-            hit = memo.get(w)
-            if hit is None:
-                syms = re.findall(".", w)
-                for a, b in ms:
-                    out: list = []
-                    for s in syms:
-                        if out and out[-1] == a and s == b:
-                            out[-1] = a + b
-                        else:
-                            out.append(s)
-                    syms = out
-                hit = memo[w] = syms
-            return hit
+            syms = re.findall(".", w)
+            for a, b in ms:
+                out: list = []
+                for s in syms:
+                    if out and out[-1] == a and s == b:
+                        out[-1] = a + b
+                    else:
+                        out.append(s)
+                syms = out
+            return syms
+
+        memo = CappedMemo(enc_word)
 
         for pdf in batches:
             toks_col = []
@@ -202,7 +202,7 @@ def encode_arrow(docs: DataFrame, merges) -> DataFrame:
                 toks: list[str] = []
                 for w in str(text).split(" "):
                     if w:
-                        toks.extend(enc_word(w))
+                        toks.extend(memo[w])
                 toks_col.append(toks)
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "tokens": toks_col})
 

@@ -6,14 +6,14 @@ Every per-document decision lives in ``extraction.core``; the stages only
 carry rows between Arrow batches and those functions:
 
 - :func:`make_detect_blocks` — staged stage 1 (mapInPandas), 1 page row → N
-  candidate-block rows via ``detect_document`` + ``route_lang`` (ref
+  candidate-block rows via ``detect_document`` + routing (ref
   detect_and_crop_text_with_boxes, ``text_detection_yolov8.py:229-288``).
   Emits a sentinel row (``block_id = -1``) per document so documents whose
   blocks are all filtered out still reach the output with
   ``status='empty'`` (ref "no regions detected" path,
   ``bilingual_ocr.py:167-181``).
 - :func:`recognize_norm_udf` — staged stage 2, a scalar Arrow UDF:
-  ``normalize_text`` per surviving block (ref recognize_urdu/
+  ``normalize_block`` per surviving block (ref recognize_urdu/
   recognize_english + post_process, ``urdu_recognition_utrnet.py:132-166``,
   ``english_ocr_pipeline.py:52-84``).
 - :func:`assemble_blocks` — staged stage 3 (mapInPandas), partition-local
@@ -44,8 +44,8 @@ from collections.abc import Iterator
 import pandas as pd
 
 from extraction.core import assemble, detect_document, extract_document
-from extraction.normalize import normalize_text
-from extraction.routing import route_lang
+from extraction.normalize import normalize_block
+from extraction.routing import doc_route, route_block
 from extraction.segment import MAX_BLOCK_CHARS, MIN_BLOCK_CHARS
 
 # Stage-1 output schema (SURVEY.md §1.3 `blocks` + doc-level carry columns).
@@ -84,9 +84,10 @@ KEEP_PREDICATE_FALLBACK = f"({KEEP_PREDICATE}) OR forced"
 
 
 def make_detect_blocks(emit_filtered_text: bool = True, fallback: bool = False):
-    """Build the stage-1 fn: ``detect_document`` per page, ``route_lang``
-    per block; one row per block, then the sentinel. A page that raises
-    emits only its sentinel, with ``doc_status='error:<ExcName>'``.
+    """Build the stage-1 fn: ``detect_document`` and ``doc_route`` per
+    page, ``route_block`` per block, as in ``extract_document``; one row
+    per block, then the sentinel. A page that raises emits only its
+    sentinel, with ``doc_status='error:<ExcName>'``.
 
     With ``emit_filtered_text=False`` the raw text of blocks failing the keep
     rule is not emitted (features still are) — the in-UDF pushdown of the
@@ -106,11 +107,12 @@ def make_detect_blocks(emit_filtered_text: bool = True, fallback: bool = False):
             ):
                 try:
                     blocks, forced_id = detect_document(html, fallback)
+                    droute = doc_route(lang)
                     doc = [
                         (url, ts, b.block_id, b.tag,
                          b.text if (b.kept or b.block_id == forced_id or emit_filtered_text) else "",
                          b.n_chars, b.n_link_chars, b.n_tags, b.link_density,
-                         b.tag_density, b.score, route_lang(b.text, lang),
+                         b.tag_density, b.score, route_block(b.text, droute),
                          len(blocks), None, b.block_id == forced_id)
                         for b in blocks
                     ]
@@ -130,12 +132,13 @@ def _recognize_series(text: pd.Series, lang: pd.Series) -> pd.Series:
     per-block normalize is a function of (text, lang) ALONE — sentinel rows
     carry text '' and normalize('') == '' — so the staged pipeline ships
     ONLY those two columns to Python and the six carry columns
-    (url/warc_ts/ids/flags) stay in the JVM. Same normalize_text oracle
-    per row; measured ~2x on the recognize stage of the 20k-doc bench
-    corpus (1.1M surviving blocks), byte-identity pinned by the staged ==
-    fused golden tests."""
+    (url/warc_ts/ids/flags) stay in the JVM. The text is block text (or ''
+    on sentinel and filtered rows), so the fused stage's ``normalize_block``
+    applies per row; measured ~2x on the recognize stage of the 20k-doc
+    bench corpus (1.1M surviving blocks), byte-identity pinned by the
+    staged == fused golden tests."""
     return pd.Series(
-        [normalize_text(t, l) for t, l in zip(text, lang)], dtype="object"
+        [normalize_block(t, l) for t, l in zip(text, lang)], dtype="object"
     )
 
 

@@ -17,8 +17,8 @@ from dataclasses import dataclass, field
 from typing import NamedTuple
 
 from extraction.html_clean import decode_html
-from extraction.normalize import normalize_text
-from extraction.routing import route_lang
+from extraction.normalize import normalize_block
+from extraction.routing import doc_route, route_block
 from extraction.segment import Block, segment_blocks
 
 
@@ -97,14 +97,20 @@ def extract_document(
     ``fallback=True`` enables the O5 relaxed second pass: when every block
     fails the keep rule (short-paragraph pages are common on real crawls),
     the best-scoring block is kept unconditionally and the row is emitted
-    with ``status='fallback'`` instead of giving up with ``'empty'``."""
+    with ``status='fallback'`` instead of giving up with ``'empty'``.
+
+    Per kept (or forced) block this is ``route_lang`` + ``normalize_text``;
+    the page's ``lang`` tag is resolved once (``doc_route``), each block is
+    routed with ``route_block`` and normalized with ``normalize_block``,
+    which skips the no-op LTR collapse. Equality with the per-block composition is property-tested."""
     try:
         blocks, forced_id = detect_document(html, fallback)
+        droute = doc_route(lang)
         parts: list[tuple[int, str, str]] = []
         for b in blocks:
             if b.kept or b.block_id == forced_id:
-                route = route_lang(b.text, lang)
-                norm = normalize_text(b.text, route)
+                route = route_block(b.text, droute)
+                norm = normalize_block(b.text, route)
                 if norm:
                     parts.append((b.block_id, route, norm))
         text, spans, status = assemble(parts, forced_id >= 0)

@@ -19,7 +19,10 @@ Analog of the reference's recognition + post-processing chain:
   on (property-tested).
 - LTR route ~ ``recognize_english`` (``english_ocr_pipeline.py:52-84``):
   entities were already decoded during the parse; normalization is
-  whitespace collapse + strip.
+  whitespace collapse + strip. Segmented block text is already collapsed
+  (``extraction.segment``), so on ``Block.text`` the LTR route is the
+  identity: :func:`normalize_block` passes it through as is, while
+  :func:`normalize_text` collapses any string.
 
 Implementation: compiled-regex fast paths (CPython ``sre`` is ~10× the
 per-codepoint loop). ``\\s`` is verified char-for-char identical to
@@ -44,8 +47,10 @@ _ARABIC_CLASS = "؀-ۿݐ-ݿࢠ-ࣿ"
 # ZWNJ/ZWJ, Urdu/Arabic + common punctuation, ASCII digits.
 _RTL_KEEP_EXTRA = frozenset("‌‍،؛؟.۔!\"'()-–—:0123456789")
 
+# Matches maximal runs of dropped characters: deleting a run is deleting each
+# of its characters, in one substitution instead of one per character.
 _RTL_DROP_RE = re.compile(
-    "[^" + _ARABIC_CLASS + r"\s‌‍،؛؟.۔!\"'()\-–—:0-9]"
+    "[^" + _ARABIC_CLASS + r"\s‌‍،؛؟.۔!\"'()\-–—:0-9]+"
 )
 _ARABIC_RUN_RE = re.compile("([" + _ARABIC_CLASS + r"])\1+")
 
@@ -77,10 +82,20 @@ def normalize_ltr(text: str) -> str:
 
 
 def normalize_text(text: str, route: str) -> str:
-    """Normalize one block's text for its route ('rtl' | 'ltr')."""
+    """Normalize any string for its route ('rtl' | 'ltr')."""
     if route == "rtl":
         return normalize_rtl(text)
     return normalize_ltr(text)
+
+
+def normalize_block(text: str, route: str) -> str:
+    """:func:`normalize_text` for segmented block text (``Block.text``),
+    which is whitespace-collapsed already: the LTR route is the identity
+    there and the text passes through as is. Equal to ``normalize_text`` on
+    every block the segmenter emits (tests/test_properties.py)."""
+    if route == "rtl":
+        return normalize_rtl(text)
+    return text
 
 
 # --- per-codepoint reference implementations (differential-test oracles) ---

@@ -54,12 +54,18 @@ def block_route(text: str) -> str:
     return "rtl" if n_arabic > n_latin else "ltr"
 
 
-def route_lang(text: str, doc_lang: str | None) -> str:
-    """Route one block: decisive doc tag wins, else per-block histogram."""
-    route = doc_route(doc_lang)
-    if route is not None:
-        return route
+def route_block(text: str, droute: str | None) -> str:
+    """Route one block given its page's ``doc_route`` (resolved once per
+    page): a decisive doc tag wins, else the per-block histogram."""
+    if droute is not None:
+        return droute
     return block_route(text)
+
+
+def route_lang(text: str, doc_lang: str | None) -> str:
+    """Route one block from the raw doc ``lang`` tag (per-block form of
+    :func:`route_block`)."""
+    return route_block(text, doc_route(doc_lang))
 
 
 # --- per-codepoint reference implementation (differential-test oracle) -----

@@ -27,12 +27,21 @@ Determinism notes (SURVEY.md §7.3 H1):
 Giant pages (SURVEY.md §4 O6, ref ``english_ocr_pipeline.py:87-124`` strip
 chunking): a single block longer than ``CHUNK_CHARS`` is split at whitespace
 into consecutive blocks so no single row dominates an Arrow batch.
+
+Per-block cost: a page can flush hundreds of thousands of blocks, so
+:class:`Block` is a ``NamedTuple`` (immutable, compared field by field, about
+a third of the construction cost of a frozen dataclass) and ``_flush`` does
+only the work a block needs: link text is collapsed only when the block has
+some, and only blocks longer than ``CHUNK_CHARS`` go through ``_chunk_text``.
+``Block.text`` is always whitespace-collapsed (``_collapse`` output, or a
+stripped whitespace-cut slice of it), so the LTR normalization is the
+identity on it (``extraction.normalize.normalize_block``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from html.parser import HTMLParser
+from typing import NamedTuple
 
 # Block-level container tags: opening or closing one flushes the current block.
 BLOCK_TAGS = frozenset(
@@ -59,13 +68,12 @@ MAX_BLOCK_CHARS = 1_000_000  # analog of the "full-page artifact" max box filter
 CHUNK_CHARS = 65_536       # giant-block chunk size (O6 strip analog)
 
 
-@dataclass(frozen=True)
-class Block:
+class Block(NamedTuple):
     """One candidate content block (the analog of one detected box + conf)."""
 
     block_id: int
     tag: str
-    text: str          # whitespace-collapsed raw block text (pre-normalization)
+    text: str          # whitespace-collapsed block text (pre-normalization)
     n_chars: int
     n_link_chars: int
     n_tags: int
@@ -109,31 +117,28 @@ class _Segmenter(HTMLParser):
             return
         text = _collapse(self._pieces)
         if text:
-            link_text = _collapse(self._link_pieces)
             n_chars = len(text)
-            n_link = min(len(link_text), n_chars)
+            n_link = (
+                min(len(_collapse(self._link_pieces)), n_chars)
+                if self._link_pieces else 0
+            )
             n_tags = self._n_tags
             link_density = n_link / n_chars
             tag_density = n_tags / n_chars
-            for chunk in _chunk_text(text):
+            tag = self._current_tag
+            blocks = self.blocks
+            chunks = (text,) if n_chars <= CHUNK_CHARS else _chunk_text(text)
+            for chunk in chunks:
                 c_chars = len(chunk)
                 # Chunks inherit the parent block's densities; the keep rule
                 # re-evaluates per chunk on integer counts scaled by length.
                 c_link = (n_link * c_chars) // n_chars
-                self.blocks.append(
-                    Block(
-                        block_id=len(self.blocks),
-                        tag=self._current_tag,
-                        text=chunk,
-                        n_chars=c_chars,
-                        n_link_chars=c_link,
-                        n_tags=n_tags,
-                        link_density=link_density,
-                        tag_density=tag_density,
-                        score=_score(c_chars, link_density, tag_density),
-                        kept=_keep(c_chars, c_link),
-                    )
-                )
+                blocks.append(Block(  # positional: the field order above
+                    len(blocks), tag, chunk, c_chars, c_link, n_tags,
+                    link_density, tag_density,
+                    _score(c_chars, link_density, tag_density),
+                    _keep(c_chars, c_link),
+                ))
         self._pieces = []
         self._link_pieces = []
         self._n_tags = 0

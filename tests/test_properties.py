@@ -3,10 +3,17 @@ the determinism discipline the whole engine rests on (SURVEY.md §7.3 H1/H2/H4).
 
 from __future__ import annotations
 
+import random
+
 from hypothesis import given, settings, strategies as st
 
 from extraction import extract_document, normalize_text, route_lang, segment_blocks
+from extraction.core import ExtractResult, assemble, detect_document
+from extraction.normalize import _RTL_KEEP_EXTRA
 from extraction.segment import CHUNK_CHARS
+
+# Every codepoint str.isspace() accepts (29 in this interpreter).
+ISSPACE = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
 
 # Text mixing ASCII, Arabic block, whitespace variants, ZWNJ/ZWJ, controls.
 _texty = st.text(
@@ -24,6 +31,58 @@ _html_bytes = st.one_of(
 )
 
 _langs = st.sampled_from(["en", "ur", "ar", "de", "zh", "", None, "xx"])
+
+# Every keep/drop boundary of the RTL chain: all three Arabic blocks and the
+# codepoints around them, every whitespace codepoint, ZWNJ/ZWJ and the kept
+# punctuation, next to ASCII (dropped except digits and the punctuation).
+_rtl_texty = st.text(
+    alphabet=st.one_of(
+        st.characters(min_codepoint=0x20, max_codepoint=0x7E),
+        st.characters(min_codepoint=0x05F0, max_codepoint=0x0700),
+        st.characters(min_codepoint=0x074F, max_codepoint=0x0780),
+        st.characters(min_codepoint=0x089F, max_codepoint=0x0900),
+        st.sampled_from(ISSPACE),
+        st.sampled_from(sorted(_RTL_KEEP_EXTRA)),
+    ),
+    max_size=400,
+)
+
+# ASCII mixed with every whitespace codepoint, for the block-text checks.
+_spacey = st.text(
+    alphabet=st.one_of(
+        st.characters(min_codepoint=0x20, max_codepoint=0x7E),
+        st.sampled_from(ISSPACE),
+    ),
+    max_size=400,
+)
+
+
+def reference_extract(url, html, lang, fallback=False) -> ExtractResult:
+    """``extract_document`` as the plain per-block composition: route_lang
+    and normalize_text on every kept or forced block. extract_document
+    resolves the lang tag once per page and skips the LTR collapse on block
+    text; it must equal this."""
+    try:
+        blocks, forced_id = detect_document(html, fallback)
+        parts = []
+        for b in blocks:
+            if b.kept or b.block_id == forced_id:
+                route = route_lang(b.text, lang)
+                norm = normalize_text(b.text, route)
+                if norm:
+                    parts.append((b.block_id, route, norm))
+        text, spans, status = assemble(parts, forced_id >= 0)
+        return ExtractResult(url, text, spans, len(blocks), len(parts), status)
+    except Exception as exc:  # noqa: BLE001 — mirrors extract_document
+        return ExtractResult(url, "", [], 0, 0, f"error:{type(exc).__name__}")
+
+
+def assert_ltr_identity(html: str, engines=("fast", "stdlib")) -> None:
+    """The LTR normalization is the identity on every block either engine
+    emits, so normalize_block may pass LTR block text through."""
+    for engine in engines:
+        for b in segment_blocks(html, engine=engine):
+            assert normalize_text(b.text, "ltr") == b.text, (engine, b)
 
 
 @given(_html_bytes, _langs)
@@ -53,6 +112,39 @@ def test_span_invariants(html, lang):
         assert ids == sorted(ids) and len(set(ids)) == len(ids)
 
 
+@given(_html_bytes, _langs, st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_extract_document_equals_per_block_composition(html, lang, fallback):
+    assert extract_document("u", html, lang, fallback) == reference_extract(
+        "u", html, lang, fallback
+    )
+
+
+@given(_spacey)
+@settings(max_examples=200, deadline=None)
+def test_ltr_normalize_is_identity_on_block_text(text):
+    assert_ltr_identity(
+        f"<div><p>{text}</p><a href='x'>{text[:30]}</a>{text}<br>{text}</div>"
+    )
+
+
+def test_ltr_normalize_is_identity_on_chunked_blocks():
+    """Blocks longer than CHUNK_CHARS are cut at whitespace (or hard-cut
+    when a chunk has none); every chunk is collapsed text too."""
+    rng = random.Random(5)
+    words = [
+        "".join(rng.choice("abcdefgh") for _ in range(rng.randrange(1, 12)))
+        for _ in range(3 * CHUNK_CHARS // 6)
+    ]
+    spaced = "".join(w + rng.choice(ISSPACE) * rng.randrange(1, 3) for w in words)
+    unbroken = "x" * (CHUNK_CHARS + 100)
+    for body in (spaced, unbroken + " " + spaced, spaced + unbroken):
+        html = f"<p>{body}</p>"
+        assert len(segment_blocks(html)) > 1  # the chunked path ran
+        assert_ltr_identity(html)
+        assert extract_document("u", html, None) == reference_extract("u", html, None)
+
+
 @given(_texty, _langs)
 @settings(max_examples=200, deadline=None)
 def test_route_total_and_normalize_idempotent(text, lang):
@@ -65,7 +157,7 @@ def test_route_total_and_normalize_idempotent(text, lang):
     assert "  " not in once
 
 
-@given(_texty)
+@given(_rtl_texty)
 @settings(max_examples=300, deadline=None)
 def test_fast_paths_match_reference_implementations(text):
     """The compiled-regex fast paths must be char-for-char identical to the

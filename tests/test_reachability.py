@@ -51,6 +51,7 @@ KEPT = {
     "materialize_scored": "materialize-first twin of the dsir_resample query",
     "resample": "materialize-first twin of the dsir_resample query",
     # reference twins the fast paths are pinned against
+    "route_lang": "raw-tag form of route_block; the reference composition extract_document is pinned to",
     "python_bpe": "pure-Python BPE training reference",
     "encode_fold": "Spark BPE encode reference for the Arrow encoder",
     "python_logreg": "pure-Python logistic-regression reference",
