@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from engine import tableio
+
 # THE source of truth for the IVF construction (r4 review: previously
 # duplicated in __spark_entry__ behind a wrong circularity claim) — the
 # registry queries and their DuckDB oracles take the codebook rule, probe
@@ -152,7 +154,6 @@ def upsert_ivf_index(
     spark: SparkSession,
     index_path: str,
     new_embeddings: DataFrame,
-    dedup: bool = True,
 ) -> None:
     """Incremental index refresh (r7): assign NEW vectors with the
     EXISTING frozen centroids and append them to their posting lists —
@@ -162,11 +163,11 @@ def upsert_ivf_index(
     are untouched, so an upsert followed by a probe equals a full rebuild
     over the union corpus (pinned in tests/test_ann_index).
 
-    ``dedup=True`` anti-joins already-indexed vec_ids (one column read of
-    the lists table) so re-upserting a batch is idempotent; pass False
-    when the caller guarantees fresh ids and wants to skip that scan.
-    Single-writer, like every tableio maintenance op."""
-    _heal_ivf_lists(index_path)
+    Already-indexed vec_ids are anti-joined away (one column read of the
+    lists table), so re-upserting a batch is idempotent. Single-writer,
+    like every tableio maintenance op; heals the lists table on entry
+    (:func:`engine.tableio.heal`)."""
+    tableio.heal(f"{index_path}/lists", what="IVF index")
     cent_src = spark.read.parquet(f"{index_path}/centroids")
     cent_rows = cent_src.collect()
     if cent_rows and "metric" in cent_rows[0].__fields__:
@@ -188,10 +189,10 @@ def upsert_ivf_index(
     # identical data filter as build_ivf_index (ADVICE r7): without it, a
     # batch containing reserved low vec_ids would break the documented
     # "upsert then probe equals full rebuild" invariant
-    data = _prep(new_embeddings).where("vec_id >= 10")
-    if dedup:
-        existing = spark.read.parquet(f"{index_path}/lists").select("vec_id")
-        data = data.join(existing, "vec_id", "left_anti")
+    existing = spark.read.parquet(f"{index_path}/lists").select("vec_id")
+    data = _prep(new_embeddings).where("vec_id >= 10").join(
+        existing, "vec_id", "left_anti"
+    )
     _assign_to_lists(data, cent, metric).write.mode("append").partitionBy(
         "list_id"
     ).parquet(f"{index_path}/lists")
@@ -224,8 +225,10 @@ def ivf_topk(
     its PARTITION column, so only probed lists' files are read (dynamic
     partition pruning — plan-pinned). Probe ranking uses the metric the
     index was built with (recorded in the centroids table). A lists table
-    left swapped aside by a crashed compaction is restored first."""
-    _restore_ivf_lists(index_path)
+    left swapped aside by a crashed compaction is restored first, so
+    readers never wait for the next maintenance op to find a working
+    index."""
+    tableio.heal(f"{index_path}/lists", restore_only=True, what="IVF index")
     cent_src = spark.read.parquet(f"{index_path}/centroids")
     # ONE driver read of the (nlists-row, driver-small by the same argument
     # as the broadcast it feeds) centroids table serves both the metric
@@ -293,76 +296,29 @@ def ivf_topk(
     )
 
 
-def _restore_ivf_lists(index_path: str) -> None:
-    """Undo an interrupted rename swap: a crash between
-    ``os.rename(lists, aside)`` and ``os.rename(tmp, lists)`` in
-    :func:`compact_ivf_lists` leaves NO lists table at the live path — if
-    so, rename the newest ``.gc-*`` sibling back. Runs on every probe
-    (:func:`ivf_topk`) as well as on the maintenance ops, so readers never
-    wait for the next maintenance op to find a working index. A restore
-    is announced with one RuntimeWarning naming the index and the dir put
-    back."""
-    import glob as _glob
-    import os
-    import warnings
-
-    lists_path = f"{index_path}/lists"
-    if os.path.exists(lists_path):
-        return
-    asides = sorted(_glob.glob(f"{lists_path}.gc-*"), key=os.path.getmtime)
-    if asides:
-        os.rename(asides[-1], lists_path)
-        warnings.warn(
-            f"IVF index {index_path}: lists table missing after an "
-            f"interrupted compaction swap; restored {asides[-1]} to "
-            f"{lists_path}",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
-
-def _heal_ivf_lists(index_path: str) -> None:
-    """Heal-on-entry for the rename-swap maintenance ops (ADVICE r7):
-    :func:`_restore_ivf_lists`, then garbage-collect any stale
-    ``.tmp-*``/``.gc-*`` siblings so interrupted rewrites never
-    accumulate. The garbage collection runs on the maintenance ops only."""
-    import glob as _glob
-    import shutil
-
-    _restore_ivf_lists(index_path)
-    lists_path = f"{index_path}/lists"
-    for stale in _glob.glob(f"{lists_path}.gc-*") + _glob.glob(f"{lists_path}.tmp-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-
-
 def compact_ivf_lists(spark: SparkSession, index_path: str) -> None:
     """Posting-list maintenance (r7): every :func:`upsert_ivf_index` batch
     appends a small file per touched list; periodic compaction rewrites
     the lists table into one file per list partition, exactly like
     ``tableio.compact`` for the extracted table. Crash-safe the same way:
-    the rewrite stages to a tmp SIBLING and swaps by rename, so readers
-    see either the old or the new complete table — and (r8, ADVICE r7)
-    :func:`_heal_ivf_lists` runs on entry, restoring a swapped-aside table
-    if a previous run died between the two renames. Probes restore it too,
-    so a probe landing inside a LIVE swap puts the old table back and this
-    compaction fails at its second rename, losing no rows."""
-    import os
-    import shutil
-    import uuid as _uuid
+    the rewrite stages to a tmp SIBLING and goes in through
+    :func:`engine.tableio.replace_dir`, so readers see either the old or
+    the new complete table, and the heal on entry restores a table a
+    previous run left aside. Probes restore it too, so a probe landing
+    inside a LIVE swap puts the old table back and this compaction fails
+    at its second rename, losing no rows."""
+    import uuid
 
-    _heal_ivf_lists(index_path)
     lists_path = f"{index_path}/lists"
+    tableio.heal(lists_path, what="IVF index")
     lists = spark.read.parquet(lists_path)
-    tmp = f"{lists_path}.tmp-{_uuid.uuid4().hex[:8]}"
+    tmp = f"{lists_path}.tmp-{uuid.uuid4().hex[:8]}"
     # one output file per list: repartition on the partition column so
     # each task holds exactly its list's members
     lists.repartition("list_id").write.mode("overwrite").partitionBy(
         "list_id"
     ).parquet(tmp)
-    aside = f"{lists_path}.gc-{_uuid.uuid4().hex[:8]}"
-    os.rename(lists_path, aside)
-    os.rename(tmp, lists_path)
-    shutil.rmtree(aside)
+    tableio.replace_dir(tmp, lists_path)
     spark.catalog.refreshByPath(lists_path)
 
 

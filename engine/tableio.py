@@ -24,7 +24,20 @@ provided over plain parquet directories (SURVEY.md §7.3 H5):
   converges (idempotence and kill-point tests).
 - ``_layout.json``  — bucket count, per-bucket min/max ``stats`` and row
   counts (``rows``), the Iceberg manifest analog: ``read_range`` prunes
-  on the stats and ``table_rows`` sums the counts without a scan.
+  on the stats and ``table_rows`` sums the counts without a scan. A new
+  or migrated table's layout is written into its tmp dir, so it moves in
+  with the data.
+- ``replace_dir`` / ``heal`` — the one crash-safe directory replace
+  (Iceberg's atomic snapshot commit, on a file system): every table and
+  IVF-index rewrite writes a tmp dir, renames the live dir aside, renames
+  the tmp dir in and deletes the aside last. The aside is a hidden
+  ``_gc-<tag>-bucket-N`` for a partition dir and a ``<live>.gc-<tag>``
+  sibling otherwise. Writers (``write_table``, ``write_table_sorted``,
+  ``merge_by_url``, ``compact``, the IVF upsert and compaction) heal on
+  entry: an aside whose live dir is missing is restored, any other aside
+  and every ``.tmp-*``/``_compact-*`` leftover deleted. Readers
+  (``read_table``, ``read_range``, ``read_url``, ``ivf_topk``) only
+  restore.
 - ``remaining``     — checkpointed-resume anti-join (J3): pages minus already-
   extracted urls. No forced broadcast: the done set is parquet-backed, so
   Catalyst's size statistics broadcast it when small and fall back to a
@@ -115,7 +128,71 @@ def _write_buckets(df: DataFrame, path: str, tasks: int | None = None) -> None:
     grouped.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
+def replace_dir(tmp: str, live: str) -> None:
+    """Put the fully written directory ``tmp`` in place of ``live`` — THE
+    directory replace of every table and index rewrite. ``live`` is
+    renamed aside, ``tmp`` renamed into place, and the aside deleted last,
+    so a crash at any point leaves one whole version live or parked aside
+    (never neither), and :func:`heal` restores or deletes the aside. The
+    aside of a partition dir ``key=V`` is a hidden ``_gc-<tag>-key-V``
+    beside it (the name avoids '=', a partition-discovery trigger even
+    under a leading underscore); any other dir's is a ``<live>.gc-<tag>``
+    sibling."""
+    if not os.path.exists(live):
+        os.rename(tmp, live)
+        return
+    parent, name = os.path.split(live)
+    tag = uuid.uuid4().hex[:8]
+    aside = (
+        os.path.join(parent, f"_gc-{tag}-{name.replace('=', '-', 1)}")
+        if "=" in name else f"{live}.gc-{tag}"
+    )
+    os.rename(live, aside)
+    os.rename(tmp, live)
+    shutil.rmtree(aside)
+
+
+def heal(path: str, restore_only: bool = False, what: str = "table") -> None:
+    """Undo what an interrupted :func:`replace_dir` left at ``path``: an
+    aside whose live dir is missing (the table's ``.gc-`` sibling, or a
+    ``_gc-`` partition aside inside it) is renamed back, announced with one
+    RuntimeWarning. Writers heal on entry and also delete the asides whose
+    live dir exists and the ``.tmp-*``/``_compact-*`` dirs a crash before
+    the swap left (single-writer: nothing else is mid-replace then);
+    readers pass ``restore_only``."""
+
+    def restore(aside: str, live: str) -> None:
+        os.rename(aside, live)
+        warnings.warn(
+            f"{what} {path}: restored {aside} to {live} after an "
+            "interrupted directory replace",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+
+    # glob.escape: a path containing [ ] * ? must not become a pattern
+    stem = glob.escape(path)
+    asides = sorted(glob.glob(stem + ".gc-*"), key=os.path.getmtime)
+    if asides and not os.path.exists(path):
+        restore(asides.pop(), path)
+    if os.path.isdir(path):
+        for d in sorted(os.listdir(path)):
+            full = os.path.join(path, d)
+            if d.startswith("_gc-"):
+                live = os.path.join(path, d.split("-", 2)[2].replace("-", "=", 1))
+                if not os.path.exists(live):
+                    restore(full, live)
+                elif not restore_only:
+                    shutil.rmtree(full)
+            elif d.startswith("_compact-") and not restore_only:
+                shutil.rmtree(full)
+    if not restore_only:
+        for stale in asides + glob.glob(stem + ".tmp-*"):
+            shutil.rmtree(stale, ignore_errors=True)
+
+
 def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    heal(path, restore_only=True)
     if not os.path.exists(path):
         return None
     # `bucket` is merge-layout plumbing, not part of the logical schema
@@ -294,6 +371,7 @@ def read_range(
     (correct, just unpruned). Returns None when the table is missing."""
     from datetime import datetime, timezone
 
+    heal(path, restore_only=True)
     if not os.path.exists(path):
         return None
 
@@ -337,6 +415,7 @@ def read_url(spark: SparkSession, path: str, url: str) -> DataFrame | None:
     the parquet emulation of Iceberg's bucket-transform partition pruning.
     Falls back to a pruned full-table plan on flat/manifest-less layouts.
     Returns None when the table does not exist."""
+    heal(path, restore_only=True)
     if not os.path.exists(path):
         return None
     layout_doc = _read_layout(path)
@@ -388,11 +467,10 @@ def read_url(spark: SparkSession, path: str, url: str) -> DataFrame | None:
 
 
 def write_table(df: DataFrame, path: str) -> None:
+    heal(path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    replace_dir(tmp, path)
 
 
 def write_table_sorted(
@@ -433,6 +511,7 @@ def write_table_sorted(
             f"sort column {sort_col!r} has no recorded stats "
             f"(STATS_COLS={STATS_COLS}); pruning could never fire"
         )
+    heal(path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     arranged = (
         df.repartitionByRange(n_buckets, F.col(sort_col))
@@ -442,13 +521,11 @@ def write_table_sorted(
     # each task holds exactly one bucket value: partitionBy groups without
     # any extra shuffle, one sorted file per bucket dir
     arranged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
-    _write_layout(path, n_buckets, sort_by=sort_col)
+    _write_layout(tmp, n_buckets, sort_by=sort_col)
     spark = df.sparkSession
+    _refresh_stats(spark, tmp)  # the layout moves in with the data
+    replace_dir(tmp, path)
     spark.catalog.refreshByPath(path)
-    _refresh_stats(spark, path)
 
 
 def merge_sql(table_ident: str) -> str:
@@ -508,10 +585,12 @@ def merge_by_url(
     Stats and row counts are widened/recorded without re-reading the live
     table: before any rename the recorded ranges are widened to cover the
     incoming rows, so :func:`read_range` never skips a row at any crash
-    point. A crash before the renames leaves only the tmp sibling, which
-    the next merge deletes (:func:`_heal_swaps`); a crash between renames
-    leaves a prefix of buckets merged, and re-running the same merge finds
-    the overlap, takes the rewrite path and converges.
+    point. Every directory replace (new table, migration, bucket rewrite)
+    goes through :func:`replace_dir`, and the merge runs :func:`heal` on
+    entry. A crash before the renames leaves only the tmp sibling, which
+    the next merge deletes; a crash between renames leaves a prefix of
+    buckets merged, and re-running the same merge finds the overlap, takes
+    the rewrite path and converges.
 
     Returns ``{"path", "dirty_buckets", "rows_in"}`` with ``path`` one of
     ``new``, ``migrate``, ``append``, ``rewrite``, ``noop``. Routes to
@@ -530,6 +609,7 @@ def merge_by_url(
         # the in-repo MiniCatalog exercises the same statement offline)
         merge_by_url_iceberg(spark, target_path, updates)
         return None
+    heal(target_path)
     # An existing table's recorded layout wins over the caller's n_buckets
     # (ADVICE r2 #1): hashing updates with a different bucket count than the
     # table's real layout would scatter rows into wrong buckets and break
@@ -556,11 +636,13 @@ def merge_by_url(
         if not dirty:
             write_table(updates, target_path)  # keep a readable empty schema
             return summary("new")
+        # the layout, with its counts, is written into tmp: the table
+        # never lands without it
         tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
         _write_buckets(upd, tmp)
-        os.rename(tmp, target_path)
-        _write_layout(target_path, n_buckets)
-        _record_stats(target_path, in_stats, in_rows)  # the table IS upd
+        _write_layout(tmp, n_buckets)
+        _record_stats(tmp, in_stats, in_rows)  # the table IS upd
+        replace_dir(tmp, target_path)
         return summary("new")
     if not _is_bucketed(target_path):
         # one-time migration of a flat write_table layout: everything dirty
@@ -569,12 +651,10 @@ def merge_by_url(
         merged = _with_bucket(kept.unionByName(updates), n_buckets)
         tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
         _write_buckets(merged, tmp)
-        shutil.rmtree(target_path)
-        os.rename(tmp, target_path)
-        _write_layout(target_path, n_buckets)
-        _refresh_stats(spark, target_path)
+        _write_layout(tmp, n_buckets)
+        _refresh_stats(spark, tmp)
+        replace_dir(tmp, target_path)
         return summary("migrate")
-    _heal_swaps(target_path)  # restore any bucket a prior crash left aside
     if layout is None:
         _write_layout(target_path, n_buckets)
         layout = {}
@@ -595,8 +675,7 @@ def merge_by_url(
         )
         if live else None
     )
-    tag = uuid.uuid4().hex[:8]
-    tmp = f"{target_path}.tmp-{tag}"
+    tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
     # done-url side is a fresh DF with parquet size stats on the other
     # side; no forced broadcast (ADVICE r1) — Catalyst/AQE picks. A count,
     # not isEmpty(): an empty result would make take(1) rescan in
@@ -645,22 +724,10 @@ def merge_by_url(
     # widen BEFORE the swap so a crash at any point leaves conservative
     # (superset) ranges; tightened to exact after the swap succeeds
     fresh_stats, fresh_rows = _widen_stats_for_swap(spark, target_path, tmp, dirty)
-    # aside-dir two-rename swap (ADVICE r5): the old rmtree(dst)+rename
-    # left a crash window where the bucket's data was simply gone. Now the
-    # live dir moves aside first and is deleted LAST, so every intermediate
-    # state reads consistently and _heal_swaps restores/garbage-collects.
     for b in dirty:
         src = f"{tmp}/bucket={b}"
-        dst = f"{target_path}/bucket={b}"
-        if not os.path.exists(src):
-            continue  # no merged rows landed in this bucket: keep old data
-        if os.path.exists(dst):
-            aside = os.path.join(target_path, f"_gc-{tag}-bucket-{b}")
-            os.rename(dst, aside)
-            os.rename(src, dst)
-            shutil.rmtree(aside)
-        else:
-            os.rename(src, dst)
+        if os.path.exists(src):  # else no merged rows landed: keep old data
+            replace_dir(src, f"{target_path}/bucket={b}")
     shutil.rmtree(tmp)
     # the swap replaced files under an existing path: drop Spark's shared
     # file-status cache entries so later reads don't chase deleted parts
@@ -758,69 +825,31 @@ def append_run(
     spark.catalog.refreshByPath(path)
 
 
-def _heal_swaps(target_path: str) -> None:
-    """Self-heal interrupted bucket swaps from a prior crash — shared by
-    :func:`compact` and :func:`merge_by_url` (ADVICE r5: the merge swap now
-    uses the same aside-dir two-rename pattern, so one heal covers both)."""
-    for d in sorted(os.listdir(target_path)):
-        full = os.path.join(target_path, d)
-        if d.startswith("_compact-"):
-            shutil.rmtree(full)  # incomplete fresh write: old data is live
-        elif d.startswith("_gc-"):
-            # names avoid '=' (a partition-discovery trigger even under a
-            # leading underscore): "bucket-N" encodes the live "bucket=N"
-            live = os.path.join(
-                target_path,
-                d.split("-", 2)[2].replace("bucket-", "bucket=", 1),
-            )
-            if os.path.exists(live):
-                shutil.rmtree(full)  # swap completed: aside dir is garbage
-            else:
-                os.rename(full, live)  # crashed between the two renames
-    # A crash BEFORE the swap loop leaves the staged '{target}.tmp-{tag}'
-    # SIBLING directory behind; nothing inside target_path points at it, so
-    # the in-dir scan above never collected it and repeated crashed merges
-    # would leak full copies of the dirty buckets (ADVICE r6). Once the
-    # aside dirs are resolved the old data is live everywhere, so any
-    # leftover staged copy is garbage — merge_by_url is idempotent and the
-    # caller simply re-merges. (Single-writer semantics, same as the swap
-    # itself: merge_by_url heals on entry, before creating its own tmp.)
-    # glob.escape: a table path containing [ ] * ? must not become a pattern
-    for sib in glob.glob(glob.escape(target_path) + ".tmp-*"):
-        shutil.rmtree(sib, ignore_errors=True)
-
-
-def compact(
-    spark: SparkSession, target_path: str, max_files_per_bucket: int = 1
-) -> list[int]:
+def compact(spark: SparkSession, target_path: str) -> list[int]:
     """Small-file compaction for the bucketed parquet table — the fallback's
     analog of Iceberg's ``rewrite_data_files`` (r4). A ``merge_by_url``
     rewrite leaves one file per bucket (only a bucket above the rebalance
     split size gets several); its append path adds one file per dirty
     bucket, and files from other writers pile up too. This rewrites each
-    bucket directory holding more than ``max_files_per_bucket`` data files
-    into a single file. Clean buckets
-    are untouched (their files keep identity and mtime — same discipline
-    as the dirty-bucket merge).
+    bucket directory holding more than one data file into a single file.
+    Clean buckets are untouched (their files keep identity and mtime —
+    same discipline as the dirty-bucket merge).
     Returns the compacted bucket ids.
 
     Crash-safe write-then-swap (ADVICE r4): fresh files land in an
-    underscore-prefixed tmp dir (invisible to Hadoop/Spark partition
-    discovery), the swap is two atomic renames (bucket dir aside -> tmp
-    into place), and the old data is deleted LAST — every intermediate
-    state still reads consistently, and an interrupted swap is self-healed
-    on the next compact() (a leftover aside dir with no live bucket dir is
-    the pre-swap data and is restored)."""
+    underscore-prefixed ``_compact-`` dir (invisible to Hadoop/Spark
+    partition discovery) and :func:`replace_dir` swaps it in; :func:`heal`
+    on entry restores or collects what an interrupted compaction left."""
+    heal(target_path)
     if not _is_bucketed(target_path):
         return []
-    _heal_swaps(target_path)
     done: list[int] = []
     for d in sorted(os.listdir(target_path)):
         if not d.startswith("bucket="):
             continue
         bdir = os.path.join(target_path, d)
         files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
-        if len(files) <= max_files_per_bucket:
+        if len(files) <= 1:
             continue
         # bucket files exclude the partition column (dir name carries it),
         # so a direct dir read/write round-trips the exact file schema
@@ -832,14 +861,11 @@ def compact(
         sort_col = _layout_sort_by(target_path)
         if sort_col is not None and sort_col in df.columns:
             df = df.coalesce(1).sortWithinPartitions(sort_col)
-        tag = uuid.uuid4().hex[:8]
-        safe = d.replace("bucket=", "bucket-", 1)
-        tmp = os.path.join(target_path, f"_compact-{tag}-{safe}")
+        tmp = os.path.join(
+            target_path, f"_compact-{uuid.uuid4().hex[:8]}-{d.replace('=', '-', 1)}"
+        )
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        aside = os.path.join(target_path, f"_gc-{tag}-{safe}")
-        os.rename(bdir, aside)
-        os.rename(tmp, bdir)
-        shutil.rmtree(aside)
+        replace_dir(tmp, bdir)
         done.append(int(d.split("=", 1)[1]))
     if done:
         spark.catalog.refreshByPath(target_path)

@@ -143,6 +143,16 @@ class _Segmenter(HTMLParser):
         self._link_pieces = []
         self._n_tags = 0
 
+    def parse_marked_section(self, i: int, report: int = 1) -> int:
+        # The stdlib raises on a section whose keyword is no name token
+        # (``<![ x]>``, ``<![1]>``) or an unknown one; skip it the way
+        # fastscan does: to the next ``]>``, or to EOF.
+        try:
+            return super().parse_marked_section(i, report)
+        except AssertionError:
+            e = self.rawdata.find("]>", i + 3)
+            return e + 2 if e >= 0 else len(self.rawdata)
+
     # -- parser events ----------------------------------------------------
     def handle_starttag(self, tag: str, attrs) -> None:
         if tag in SUPPRESS_TAGS:

@@ -86,8 +86,7 @@ def main() -> None:
         r = extraction.extract_document(f"u{i}", payload, lang, fallback)
         assert r.status is not None
         assert r == tp.reference_extract(f"u{i}", payload, lang, fallback), i
-        # the stdlib parser raises on some raw bytes; extraction uses "fast"
-        tp.assert_ltr_identity(decode_html(payload), engines=("fast",))
+        tp.assert_ltr_identity(decode_html(payload))
     print(f"raw-bytes fuzz: {args.payloads} payloads, zero raises, "
           "extract_document == per-block composition")
 

@@ -282,9 +282,6 @@ def test_upsert_ivf_index_equals_full_rebuild(spark, tmp_path):
     n = spark.read.parquet(f"{part}/lists").count()
     ann.upsert_ivf_index(spark, part, late)
     assert spark.read.parquet(f"{part}/lists").count() == n
-    # dedup=False trusts the caller: the duplicate WOULD land
-    ann.upsert_ivf_index(spark, part, late.limit(1), dedup=False)
-    assert spark.read.parquet(f"{part}/lists").count() == n + 1
 
 
 def test_compact_ivf_lists_preserves_probes_and_shrinks_files(spark, tmp_path):
@@ -399,3 +396,32 @@ def test_ivf_topk_restores_interrupted_swap(spark, tmp_path):
     assert got == want and len(got) == 30
     assert os.path.exists(f"{idx}/lists")
     assert not os.path.exists(f"{idx}/lists.gc-x")
+
+
+def test_compact_ivf_lists_kill_points(spark, replace_kill_points):
+    """A crash inside the lists-table replace of ``compact_ivf_lists``
+    probes as before; re-running it equals one clean compaction."""
+    import glob as _glob
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = emb.where("vec_id < 10")
+
+    def build(p):
+        ann.build_ivf_index(spark, SF, p)
+        batch = emb.where("vec_id >= 10").limit(5).selectExpr(
+            "vec_id + 10000 AS vec_id", "embedding"
+        )
+        ann.upsert_ivf_index(spark, p, batch)
+
+    def read(p):
+        spark.catalog.refreshByPath(f"{p}/lists")
+        probes = sorted(tuple(r) for r in ann.ivf_topk(spark, p, queries).collect())
+        return probes, len(_glob.glob(f"{p}/lists/list_id=*/*.parquet"))
+
+    def check(got, old, new):
+        assert got[0] == old[0] == new[0]
+
+    old, new = replace_kill_points(
+        build, lambda p: ann.compact_ivf_lists(spark, p), read, check
+    )
+    assert len(new[0]) == 30 and new[1] < old[1]

@@ -56,6 +56,10 @@ EDGE_CASES = [
     "<input checked/><a b/>boolean attr then slash self-closes</a>",
     "<a b/c>slash between boolean attrs is skipped</a>",
     "<br / >spaced lone slash is a plain start tag",
+    # marked sections whose keyword is no name token: the stdlib parser
+    # raised on these until the segmenter skipped them like fastscan
+    "<p>" + "a" * 33 + " <![ x]> " + "b" * 36 + "</p>",
+    "<![1]>",
 ]
 
 

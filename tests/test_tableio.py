@@ -335,6 +335,118 @@ def test_append_kill_points_recover_to_one_clean_merge(spark, tmp_path, monkeypa
         check_ranges(path)
 
 
+def _read(spark, path):
+    """Sorted rows of the table as a reader sees it (``read_table``
+    restores a dir an interrupted replace left aside)."""
+    spark.catalog.refreshByPath(path)
+    df = tableio.read_table(spark, path)
+    return None if df is None else sorted(map(tuple, df.collect()))
+
+
+def _read_with_layout(spark, path):
+    """The rows and the ``_layout.json`` a reader finds next to them."""
+    rows = _read(spark, path)
+    return rows, tableio._read_layout(path)
+
+
+def test_write_table_kill_points(spark, replace_kill_points):
+    old, new = replace_kill_points(
+        lambda p: tableio.write_table(_stats_rows(spark, 10), p),
+        lambda p: tableio.write_table(_stats_rows(spark, 3, start=50), p),
+        lambda p: _read(spark, p),
+    )
+    assert len(old) == 10 and len(new) == 3
+
+
+def test_write_table_sorted_kill_points(spark, replace_kill_points):
+    """The range layout's ``_layout.json`` moves in with its data: every
+    crash point reads the old or the new rows with their own layout."""
+    old, new = replace_kill_points(
+        lambda p: tableio.write_table_sorted(_stats_rows(spark, 16), p, n_buckets=4),
+        lambda p: tableio.write_table_sorted(
+            _stats_rows(spark, 24, start=100), p, n_buckets=4
+        ),
+        lambda p: _read_with_layout(spark, p),
+    )
+    assert len(new[0]) == 24 and sum(new[1]["rows"].values()) == 24
+    assert new[1]["sort_by"] == "warc_ts"
+
+
+def test_migrate_kill_points(spark, replace_kill_points):
+    """A crash inside the flat-to-bucketed migration leaves the flat table
+    readable, so the re-run migrates it instead of taking the new-table
+    path with the updates alone. The bucketed table never lands without
+    its layout and row counts."""
+
+    def merge(p):
+        upd = _stats_rows(spark, 5, start=8).withColumn("extracted_text", F.lit("new"))
+        assert tableio.merge_by_url(spark, p, upd, n_buckets=4)["path"] == "migrate"
+
+    old, new = replace_kill_points(
+        lambda p: tableio.write_table(_stats_rows(spark, 10), p),
+        merge,
+        lambda p: _read_with_layout(spark, p),
+    )
+    assert old[1] is None and len(new[0]) == 13
+    assert sum(new[1]["rows"].values()) == 13
+
+
+def test_rewrite_kill_points(spark, replace_kill_points):
+    """A crash inside a bucket swap of the rewrite path: every url is read
+    once, as its pre-merge or its merged version, no row lost (the read is
+    ``read_range``, which restores a parked bucket too); re-running the
+    merge equals one clean merge, counts included."""
+    base = _stats_rows(spark, 24)
+    b = _bucket_of(spark, [f"u{i}" for i in range(24)], 4)
+    dirty = sorted(set(b.values()))[:2]
+    upd = base.where(F.col("url").isin([u for u, x in b.items() if x in dirty]))
+    upd = upd.withColumn("extracted_text", F.lit("new"))
+
+    def read(p):
+        spark.catalog.refreshByPath(p)
+        rows = tableio.read_range(spark, p, "doc_id", 0, 10**6).collect()
+        return sorted(map(tuple, rows)), tableio.table_rows(spark, p)
+
+    def check(got, old, new):
+        rows = got[0]
+        assert len({r[0] for r in rows}) == len(rows) == len(old[0])
+        pre, post = {r[0]: r for r in old[0]}, {r[0]: r for r in new[0]}
+        assert all(r in (pre[r[0]], post[r[0]]) for r in rows)
+
+    old, new = replace_kill_points(
+        lambda p: tableio.merge_by_url(spark, p, base, n_buckets=4),
+        lambda p: tableio.merge_by_url(spark, p, upd),
+        read,
+        check,
+    )
+    assert old[0] != new[0] and new[1] == 24
+
+
+def test_compact_kill_points(spark, replace_kill_points):
+    """A crash inside a bucket swap of ``compact`` reads the same rows;
+    re-running it leaves one file per bucket."""
+    b = _bucket_of(spark, [f"u{i}" for i in range(100, 140)], 4)
+    two = sorted(set(b.values()))[:2]
+    extra = _stats_rows(spark, 40, start=100).where(
+        F.col("url").isin([u for u, x in b.items() if x in two])
+    )
+
+    def build(p):
+        tableio.merge_by_url(spark, p, _stats_rows(spark, 24), n_buckets=4)
+        assert tableio.merge_by_url(spark, p, extra)["path"] == "append"
+
+    def read(p):
+        return _read(spark, p), max(_files_per_bucket(p).values())
+
+    def check(got, old, new):
+        assert got[0] == old[0] == new[0]
+
+    old, new = replace_kill_points(
+        build, lambda p: tableio.compact(spark, p), read, check
+    )
+    assert old[1] == 2 and new[1] == 1
+
+
 def test_read_url_prunes_to_one_bucket(spark, pages_unit_path, tmp_path):
     """Point lookup reads only the bucket the url hashes into: result equals
     the full-table filter, its scan lists exactly one bucket=N directory,
