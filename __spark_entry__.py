@@ -260,15 +260,17 @@ def _par_sql_query(
     """_sql_query twin for full-scan queries whose per-row work dominates:
     analysis happens eagerly inside ``spark.sql``, so the parallelized view
     is captured by THIS query and the plain view is restored immediately
-    for any neighbor that needs scan pushdown. Never used for queries with
-    selective scan filters (repartition would block their pushdown)."""
+    for any neighbor that needs scan pushdown, also when the query fails to
+    analyze. Never used for queries with selective scan filters
+    (repartition would block their pushdown)."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         _load(spark, sf_dir, *tables)
         _par_view(spark, sf_dir, par)
-        out = spark.sql(spark_sql)
-        _load(spark, sf_dir, par)
-        return out
+        try:
+            return spark.sql(spark_sql)
+        finally:
+            _load(spark, sf_dir, par)
 
     return q
 

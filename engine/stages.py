@@ -29,6 +29,15 @@ Heavy init (routing tables, keep-sets) is module-level in ``extraction`` and
 imported once per worker process — the engine analog of the reference's
 load-once model state (SURVEY.md §4 O1).
 
+Every stage body calls :func:`pin_zip_importers` first. A reused PySpark
+worker calls ``importlib.invalidate_caches()`` at the start of every task,
+and on CPython 3.11-3.12 each cached ``zipimporter`` then re-reads its
+archive's central directory: Spark's ``pyspark.zip`` (once per imported
+sub-package), its ``spark-core`` jar and py4j, 0.2-0.5 s per task before
+the stage sees a row. The pin, once per process, makes the importers
+already cached keep their directory; archives added to ``sys.path`` later
+(``addPyFile``) keep the normal re-read.
+
 Arrow batch sizing (``spark.sql.execution.arrow.maxRecordsPerBatch``,
 runtime-settable): the *pages* stages move few, huge rows — 128-row batches
 pipeline the JVM serializer with the Python worker (measured 3-4× faster
@@ -39,6 +48,8 @@ the conf per measurement.
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,6 +58,37 @@ from extraction.core import assemble, detect_document, extract_document
 from extraction.normalize import normalize_block
 from extraction.routing import doc_route, route_block
 from extraction.segment import MAX_BLOCK_CHARS, MIN_BLOCK_CHARS
+
+
+class _PinnedZipImporter(zipimport.zipimporter):
+    """A ``zipimporter`` over an archive that does not change while the
+    process lives: ``invalidate_caches`` keeps the directory it has."""
+
+    def invalidate_caches(self):
+        pass
+
+
+_ZIP_PINNED = False
+
+
+def pin_zip_importers() -> None:
+    """Once per process, replace every plain ``zipimporter`` in
+    ``sys.path_importer_cache`` with a :class:`_PinnedZipImporter` over the
+    same path. Building one is a stat: ``zipimport._zip_directory_cache``
+    already holds the archive's directory. Importers cached after this
+    call are left as they are."""
+    global _ZIP_PINNED
+    if _ZIP_PINNED:
+        return
+    _ZIP_PINNED = True
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if type(finder) is zipimport.zipimporter:
+            try:
+                cache[path] = _PinnedZipImporter(path)
+            except zipimport.ZipImportError:
+                pass  # the archive is gone; its importer stays as it is
+
 
 # Stage-1 output schema (SURVEY.md §1.3 `blocks` + doc-level carry columns).
 BLOCKS_SCHEMA = (
@@ -100,6 +142,7 @@ def make_detect_blocks(emit_filtered_text: bool = True, fallback: bool = False):
     pushdown) so downstream stages rescue it."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pin_zip_importers()
         for pdf in batches:
             rows: list[tuple] = []
             for url, ts, html, lang in zip(
@@ -137,6 +180,7 @@ def _recognize_series(text: pd.Series, lang: pd.Series) -> pd.Series:
     applies per row; measured ~2x on the recognize stage of the 20k-doc
     bench corpus (1.1M surviving blocks), byte-identity pinned by the
     staged == fused golden tests."""
+    pin_zip_importers()
     return pd.Series(
         [normalize_block(t, l) for t, l in zip(text, lang)], dtype="object"
     )
@@ -172,6 +216,7 @@ def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     identical to fused mode, unlike a groupBy-based reassembly which would
     merge them (ADVICE r1).
     """
+    pin_zip_importers()
     parts: list[tuple[int, str, str]] = []  # (block_id, route, norm_text)
     forced = False  # this doc's surviving parts came from the O5 ladder
     for pdf in batches:
@@ -225,6 +270,7 @@ def make_extract_fused_arrow(fallback: bool = False):
     )
 
     def fn(batches):
+        pin_zip_importers()
         for b in batches:
             idx = {name: i for i, name in enumerate(b.schema.names)}
             rs = [

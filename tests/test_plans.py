@@ -624,3 +624,20 @@ def test_winnowed_dedup_plan_no_window_no_pushed_anchor_filter(spark):
             assert "text#" not in line and "toks#" not in line, line
         if "FileScan" in line:
             assert "array_distinct" not in line, line
+
+
+def test_par_sql_query_restores_plain_view_when_sql_raises(spark, tmp_path):
+    """A ``_par_sql_query`` whose SQL fails to analyze still puts the plain
+    ``documents`` view back: a later query over it must not inherit the
+    round-robin repartition, which would block its scan pushdown."""
+    from pyspark.errors import AnalysisException
+
+    import __spark_entry__ as em
+
+    spark.createDataFrame([(1, "a"), (2, "b")], "doc_id bigint, text string") \
+        .coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    q = em._par_sql_query("SELECT no_such_column FROM documents", "documents")
+    with pytest.raises(AnalysisException):
+        q(spark, str(tmp_path))
+    plan = _plan(spark.table("documents"))
+    assert "RoundRobinPartitioning" not in plan, plan
