@@ -3,6 +3,9 @@
 Distributes the pure-Python ``extraction`` core over Arrow batches:
 
 - :mod:`engine.session`  — SparkSession builder (AQE on, Arrow on, UTC)
+- :mod:`engine.pydaemon` — launches a local session's Python daemon on the
+                           installed pyspark; it and this ``__init__``
+                           import neither pyspark nor pandas
 - :mod:`engine.salt`     — explicit url-salted repartitioning + giant-page
                            skew isolation (SURVEY.md §4 O6)
 - :mod:`engine.stages`   — the vectorized stages, one implementation each

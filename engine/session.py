@@ -4,6 +4,20 @@ Tuned for the pages workload: Arrow transfer on, small Arrow batches because
 the binary ``html`` column is large (SURVEY.md §7.1 step 6), AQE enabled for
 runtime shuffle re-planning, UTC session timezone for deterministic timestamp
 semantics, and shuffle partitions sized to cores rather than the 200 default.
+
+A local session starts Spark's Python daemon through :mod:`engine.pydaemon`
+(``spark.python.daemon.module``), which runs it on the interpreter's
+installed, compiled pyspark when that is the version of Spark's
+``pyspark.zip``; the stock daemon compiles pyspark from the zip at every
+session's first Python task. A daemon starts before ``--py-files`` reach a
+worker's ``sys.path``, so the session also puts the root ``engine`` was
+imported from (a checkout or the ``--py-files`` zip; in local mode both are
+on the driver's host) on the workers' ``PYTHONPATH``. Other masters keep
+the stock daemon.
+
+The driver heap defaults to 24g, or to half of the host's memory where that
+is less (a heap larger than the host gets the JVM killed mid-run);
+``SPARK_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -18,6 +32,21 @@ from pyspark.sql import SparkSession
 # (O6 analog at batch level; measured ~3-4x throughput vs 512-row batches on
 # the skewed bench corpus).
 ARROW_BATCH_ROWS = 128
+
+# The directory (or zip) this package was imported from.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEM`` if set, else ``min(24g, half the host's RAM)``."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    except (ValueError, OSError):
+        return "24g"
+    return "24g" if half_mib >= 24 << 10 else f"{half_mib}m"
 
 
 def get_spark(
@@ -43,7 +72,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # reap reliable-checkpoint files once their RDD is GC'd (iterative
@@ -51,13 +80,15 @@ def get_spark(
         # session accumulates checkpoint data on disk)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "engine.pydaemon"
+        ).config("spark.executorEnv.PYTHONPATH", _ROOT)
     # In-repo jars: MiniCatalog (DSv2 row-level ops — MERGE INTO executes for
     # real, engine/java/minicat, VERDICT r2 #2) and mediadec (JVM-native
     # javax.imageio/javax.sound media decode, VERDICT r3 #1). Registered
     # whenever built; spark.jars reaches driver + executors in any deploy.
-    dist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "dist"
-    )
+    dist = os.path.join(_ROOT, "dist")
     jars = [
         j
         for j in (os.path.join(dist, "minicat.jar"), os.path.join(dist, "mediadec.jar"))

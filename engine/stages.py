@@ -36,7 +36,11 @@ archive's central directory: Spark's ``pyspark.zip`` (once per imported
 sub-package), its ``spark-core`` jar and py4j, 0.2-0.5 s per task before
 the stage sees a row. The pin, once per process, makes the importers
 already cached keep their directory; archives added to ``sys.path`` later
-(``addPyFile``) keep the normal re-read.
+(``addPyFile``) keep the normal re-read. A local session's worker usually
+imports from no Spark archive at all (:mod:`engine.pydaemon` runs it on the
+installed pyspark), and then the pin finds nothing to do; it serves every
+worker whose daemon keeps Spark's zips: a version mismatch, no installed
+pyspark, or a cluster executor.
 
 Arrow batch sizing (``spark.sql.execution.arrow.maxRecordsPerBatch``,
 runtime-settable): the *pages* stages move few, huge rows — 128-row batches

@@ -134,6 +134,23 @@ def check_mediadec():
     )
 
 
+def check_worker_pyspark():
+    """What a local session's Python daemon imports, decided by
+    ``engine.pydaemon`` itself from Spark's worker path; starts no Spark."""
+    import pyspark
+
+    from engine import pydaemon
+
+    home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    launch = pydaemon.decide(pydaemon.spark_pythonpath(home), sys.path)
+    if launch.compiles:
+        return WARN, (
+            "workers compile pyspark.zip at every daemon start, about 1.2 s "
+            f"({launch.reason})"
+        )
+    return OK, launch.reason
+
+
 def check_spark_session():
     from pyspark.sql import functions as F
 
@@ -163,6 +180,7 @@ def main() -> None:
         ("driver testdata", check_testdata),
         ("iceberg runtime", check_iceberg),
         ("mediadec jar", check_mediadec),
+        ("worker pyspark", check_worker_pyspark),
     ]
     if args.with_spark:
         checks.append(("spark session", check_spark_session))

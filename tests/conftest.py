@@ -11,17 +11,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from fixtures.gen_pages import gen_rows, write_parquet  # noqa: E402
 
 
-def _driver_memory_conf() -> dict[str, str]:
-    """Without SPARK_DRIVER_MEM, size the test session's driver heap to half
-    of the host's MemTotal: the engine default (24g) exceeds small hosts,
-    where the kernel then kills the JVM mid-suite."""
-    if os.environ.get("SPARK_DRIVER_MEM"):
-        return {}
-    with open("/proc/meminfo", encoding="ascii") as f:
-        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
-    return {"spark.driver.memory": f"{kib // 2048}m"}
-
-
 @pytest.fixture(scope="session")
 def spark():
     from engine.session import get_spark
@@ -30,7 +19,6 @@ def spark():
         app_name="spark-extract-tests",
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf=_driver_memory_conf(),
     )
     yield s
     s.stop()

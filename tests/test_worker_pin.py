@@ -7,6 +7,13 @@ session in a subprocess, whose one reused worker must hold only pinned zip
 importers after a fused run; and an ``ast`` check that every function
 ``engine/stages.py`` hands to ``mapInArrow``, ``mapInPandas`` or
 ``pandas_udf`` calls the pin as its first statement.
+
+A local session's daemon (``engine.pydaemon``) drops Spark's zips from the
+workers' path when the installed pyspark matches them, and then there is
+nothing to pin. The probe session sets ``spark.python.daemon.module`` back
+to ``pyspark.daemon``, so its worker imports from Spark's zips as one does
+under the launcher's fallback or on a cluster executor: the path the pin
+guards.
 """
 
 from __future__ import annotations
@@ -107,7 +114,8 @@ _PROBE = textwrap.dedent("""
     from engine.session import get_spark
 
     spark = get_spark(app_name="pin-probe", master="local[1]",
-                      extra_conf={"spark.driver.memory": "1g"})
+                      extra_conf={"spark.driver.memory": "1g",
+                                  "spark.python.daemon.module": "pyspark.daemon"})
     try:
         pages = spark.read.parquet(sys.argv[1])
         pipeline.run_extract(pages, mode="fused").write.format("noop").mode("overwrite").save()
