@@ -2970,12 +2970,18 @@ def _q_bpe_tokens_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count tables — vocabulary-sized, so Catalyst broadcasts them and the
 # corpus never shuffles. ln/avg are double math rounded to 4 (the same
 # cross-engine tolerance as idf_r/stats_aggregates, hash-green since r3).
-# tokenizer / bigram / reference-slice rules are IMPORTED from engine/lm
-# (the minhash sharing discipline): the production train-once path and
-# this oracle pair compute the same construction by definition.
-from engine.lm import BIGRAMS_EXPR as _LM_BIGRAMS  # noqa: E402
-from engine.lm import REF_RULE as _LM_REF  # noqa: E402
-from engine.lm import TOKENS_EXPR as _LM_TOKENS  # noqa: E402
+# The construction's rules: the reference slice (both dialects) and the
+# Spark tokenizer and in-row bigram transform (the DuckDB text spells the
+# same with list_filter/range).
+_LM_REF = "doc_id % 7 = 0"
+_LM_TOKENS = "filter(split(text, ' '), w -> w != '')"
+# slice length is self-guarding (greatest(..., 0)) so a zero-token doc is
+# safe even if Catalyst ever stops pushing the size(ws) >= 2 filter below
+# the Generate in the LATERAL VIEW form (ADVICE r5)
+_LM_BIGRAMS = (
+    "transform(slice(ws, 1, greatest(size(ws) - 1, 0)), "
+    "(w, i) -> struct(w AS w1, ws[i + 1] AS w2))"
+)
 
 
 def _lm_bigram_sql(dialect: str) -> str:
@@ -4279,15 +4285,22 @@ GROUP BY r_name
 
 # Driver-gate rotation (VERDICT r6 #1): the driver's CORRECTNESS artifact
 # samples only the FIRST 50 registry entries in insertion order, so order
-# IS the evidence budget. Rounds 1-6 always led with the r1/r2 queries —
-# everything from `stratified_sample` on (all r3-r6 additions: the LLM
-# dedup/ANN/trained/media/TPC-H families) never produced a driver-gated
-# row. This list leads the registry with (a) this round's NEW queries and
-# (b) the never-gated back half, must-list first; everything not named
-# here follows in its original order. Keys and per-query semantics are
-# untouched — only insertion order rotates.
+# IS the evidence budget. This list leads the registry with the queries no
+# committed CORRECTNESS_r*.json holds yet, then the r7 additions and the
+# r3-r6 back half that r7 moved forward; everything not named here
+# follows in its original order.
+# tests/test_entry_contract.py checks that every query is in a committed
+# artifact or in the first 50. Keys and per-query semantics are untouched —
+# only insertion order rotates.
 _GATE_FRONT: tuple[str, ...] = (
-    # round-7 additions first — new queries gate immediately
+    # no committed driver evidence yet
+    "tpch_q4_exists",
+    "tpch_q6",
+    "tpch_q14_promo",
+    "tpch_q18_big_orders",
+    "tpch_q10_returns",
+    "tpch_q7_volume",
+    # round-7 additions
     "domain_rank",
     "bpe_encode_tokens",
     "tpch_q8_market_share",
@@ -4297,7 +4310,7 @@ _GATE_FRONT: tuple[str, ...] = (
     "semantic_dedup_keep",
     "bpe_tokens_per_doc",
     "sequence_pack_bpe",
-    # never driver-gated (r3-r6 additions), judge's must-list first
+    # r3-r6 additions, first gated in r7: judge's must-list first
     "substring_dedup",
     "substring_dedup_winnow",
     "wat_outlink_rollup",
@@ -4306,7 +4319,7 @@ _GATE_FRONT: tuple[str, ...] = (
     "ann_ivf_topk_trained_hr",
     "tpch_q17_small_qty",
     "tpch_q19_disjunctive",
-    # remaining never-gated names, original order
+    # the rest of the r3-r6 additions, original order
     "stratified_sample",
     "repetition_score",
     "pii_scrub",
@@ -4340,12 +4353,6 @@ _GATE_FRONT: tuple[str, ...] = (
     "tpch_q1",
     "tpch_q3_top10",
     "tpch_q5_like",
-    "tpch_q4_exists",
-    "tpch_q6",
-    "tpch_q14_promo",
-    "tpch_q18_big_orders",
-    "tpch_q10_returns",
-    "tpch_q7_volume",
     "part_rollup",
     "broadcast_rollup",
 )

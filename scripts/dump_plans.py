@@ -208,8 +208,7 @@ def main() -> None:
         "Bigram-LM scoring (lm_bigram_nll, r5)",
         "Both count-table joins broadcast (vocabulary-sized model); the "
         "in-statement model CTEs re-scan the reference slice so DuckDB can "
-        "mirror them — the production path (engine/lm) trains once and "
-        "scores with ONE corpus scan (pytest plan pin).",
+        "mirror them (Spark inlines CTEs).",
         _plan(em.queries()["lm_bigram_nll"](spark, args.sf), "simple"),
     ))
     sections.append((
@@ -263,10 +262,8 @@ def main() -> None:
         "from a (cluster, rounded-score) HISTOGRAM — one bounded partial-"
         "agg shuffle; the rank Windows below run over that tiny aggregate "
         "(16 clusters x distinct scores), never the corpus, and the rate "
-        "table broadcasts back. The inlined LM/assignment CTEs re-scan so "
-        "DuckDB mirrors; production materializes the score+assignment "
-        "join once (both sides one scan; free co-location when id-"
-        "bucketed).",
+        "table broadcasts back. The inlined LM/assignment CTEs re-scan the "
+        "corpus so DuckDB can mirror them (Spark inlines CTEs).",
         _plan(em.queries()["dsir_resample"](spark, args.sf), "simple"),
     ))
 

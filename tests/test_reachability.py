@@ -42,14 +42,6 @@ KEPT = {
     "write_pages_wat": "fixture writer for the WAT reader and host-edge tests",
     "read_pages_wet": "reads back the --wet-out writer's archives",
     "read_pages_wat": "reads back the --wat-out writer's archives",
-    # production twins pinned row-equal to their oracled registry queries
-    "decontaminate": "production twin of the decontaminate query",
-    "doc_grams": "gram table of decontaminate",
-    "train_bigram_lm": "train-once twin of the lm_bigram_nll query",
-    "score_docs": "score-many twin of the lm_bigram_nll query",
-    "assign_clusters": "materialize-first twin of the dsir_resample query",
-    "materialize_scored": "materialize-first twin of the dsir_resample query",
-    "resample": "materialize-first twin of the dsir_resample query",
     # reference twins the fast paths are pinned against
     "route_lang": "raw-tag form of route_block; the reference composition extract_document is pinned to",
     "python_bpe": "pure-Python BPE training reference",

@@ -1,6 +1,6 @@
-"""Corpus-analytics checks: the ANN LSH candidate set must carry measurable
-recall vs brute force, and the persisted LM / DSIR / substring-dedup paths
-must reproduce their oracled registry queries."""
+"""Corpus-analytics checks: the ANN candidate sets must carry measurable
+recall vs brute force, and the LM and substring-dedup queries must catch
+what they claim to."""
 
 from __future__ import annotations
 
@@ -97,95 +97,15 @@ def test_lm_bigram_nll_separates_gibberish_from_reference_like(spark, tmp_path):
     assert got[1] == got[0]
 
 
-def test_lm_trained_model_equals_registry_query(spark, tmp_path):
-    """The persisted train-once/score-many path (engine/lm) reproduces the
-    oracled lm_bigram_nll query row-for-row on the same corpus, and the
-    scoring scan reads documents exactly once with broadcast count tables
-    (the 100 TB shape; the query form re-scans for its in-statement model
-    so DuckDB can mirror it)."""
-    import __spark_entry__ as em
-
-    from engine import lm
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    model = str(tmp_path / "lm_model")
-    lm.train_bigram_lm(docs, model)
-    scored = lm.score_docs(spark, docs, model)
-    got = sorted(tuple(r) for r in scored.collect())
-    want = sorted(
-        tuple(r) for r in em.queries()["lm_bigram_nll"](spark, sf).collect()
-    )
-    assert got == want and len(got) == 500
-
-    # the INITIAL plan holds the whole tree exactly once (AQE's executed
-    # string duplicates subtrees into query-stage sections): one corpus
-    # scan, both count-table joins broadcast
-    fresh = lm.score_docs(spark, docs, model)
-    jvm = spark._jvm
-    plan = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        fresh._jdf.queryExecution(), "simple"
-    )
-    assert plan.count("documents.parquet") == 1, plan
-    assert plan.count("BroadcastHashJoin") == 2, plan
-
-
-def test_dsir_production_path_matches_oracled_query(spark, tmp_path):
-    """r6: the materialize-first DSIR path (engine/dsir) reproduces the
-    oracled dsir_resample query row-for-row on the same corpus — same
-    quantized-L2 tie-breaks, rounding, rate arithmetic, and md5 draw —
-    while its plans are the 100 TB shape: the cluster assignment is a
-    zero-Exchange in-row argmin, and the resample step touches only the
-    materialized score table (one bounded histogram shuffle; windows over
-    the tiny aggregate; rate table broadcast)."""
-    import __spark_entry__ as em
-
-    from engine import dsir
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-
-    assign = dsir.assign_clusters(emb)
-    jvm = spark._jvm
-    plan = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        assign._jdf.queryExecution(), "simple"
-    )
-    assert "Exchange" not in plan, plan
-    want_assign = sorted(
-        (r["vec_id"], r["cluster_id"])
-        for r in em.queries()["embedding_cluster_assign"](spark, sf).collect()
-    )
-    assert sorted(tuple(r) for r in assign.collect()) == want_assign
-
-    model = str(tmp_path / "lm_model")
-    scored_path = str(tmp_path / "dsir_scored")
-    dsir.materialize_scored(spark, docs, emb, model, scored_path)
-    out = dsir.resample(spark, scored_path)
-    plan = jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    # resample reads ONLY the materialized table (twice: rows + histogram
-    # — both one-scan subtrees over the small scored table), never the
-    # corpus or the embeddings
-    assert "documents.parquet" not in plan and "embeddings.parquet" not in plan
-    assert "BroadcastHashJoin" in plan, plan
-
-    got = sorted(tuple(r) for r in out.collect())
-    want = sorted(
-        tuple(r) for r in em.queries()["dsir_resample"](spark, sf).collect()
-    )
-    assert got == want and len(got) == 500
-
-
 def test_lm_bigrams_expr_is_self_guarding_on_empty_docs(spark):
-    """ADVICE r5: BIGRAMS_EXPR must be safe on zero-token docs WITHOUT
-    relying on Catalyst pushing the size(ws) >= 2 filter below the
-    Generate — slice with greatest(size-1, 0) never sees length -1."""
-    from engine.lm import BIGRAMS_EXPR
+    """ADVICE r5: the lm_bigram_nll bigram transform must be safe on
+    zero-token docs WITHOUT relying on Catalyst pushing the size(ws) >= 2
+    filter below the Generate — slice with greatest(size-1, 0) never sees
+    length -1."""
+    from __spark_entry__ import _LM_BIGRAMS
 
     rows = spark.sql(
-        "SELECT explode_outer(" + BIGRAMS_EXPR.replace("ws", "CAST(array() AS ARRAY<STRING>)") + ") AS b"
+        "SELECT explode_outer(" + _LM_BIGRAMS.replace("ws", "CAST(array() AS ARRAY<STRING>)") + ") AS b"
     ).collect()
     assert len(rows) == 1 and rows[0]["b"] is None
 
