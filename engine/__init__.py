@@ -9,8 +9,8 @@ Distributes the pure-Python ``extraction`` core over Arrow batches:
 - :mod:`engine.salt`     — explicit url-salted repartitioning + giant-page
                            skew isolation (SURVEY.md §4 O6)
 - :mod:`engine.stages`   — the vectorized stages, one implementation each
-                           (SURVEY.md §2.10): staged detect / recognize /
-                           assemble and the fused per-doc mapInArrow stage
+                           (SURVEY.md §2.10): staged detect and recognize,
+                           and the fused per-doc mapInArrow stage
 - :mod:`engine.pipeline` — the DataFrame DAG (fused and staged modes)
 - :mod:`engine.tableio`  — Iceberg-style MERGE-by-url + resume anti-join on a
                            parquet-directory fallback (no Iceberg jar in

@@ -14,20 +14,19 @@ metrics::
 
     read pages → [salted repartition] → mapInPandas(make_detect_blocks)
       → filter(KEEP_PREDICATE)                 # Catalyst-side conf mask (O3)
-      → recognize_norm_udf(text, lang)         # scalar Arrow UDF
-      → filter(non-empty norm)                 # empty-region drop (O8)
-      → mapInPandas(assemble_blocks)           # reading-order A4, zero shuffle
+      → mapInPandas(recognize_blocks)          # normalize, empty-region drop
+                                               # (O8), reading-order A4
 
 Both modes call the same ``extraction.core`` functions — fused through
 ``extract_document``, staged through its two halves ``detect_document``
-(stage 1) and ``assemble`` (stage 3) — and are pinned byte-identical to the
-goldens (tests/test_golden_e2e.py); neither plan has an Exchange unless a
-salted repartition is asked for.
+(stage 1) and ``recognize`` (stage 2) — and are pinned byte-identical to
+the goldens (tests/test_golden_e2e.py); neither plan has an Exchange unless
+a salted repartition is asked for.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from engine.salt import salted_repartition
 from engine.stages import (
@@ -36,14 +35,14 @@ from engine.stages import (
     EXTRACTED_COVERAGE_SCHEMA,
     KEEP_PREDICATE,
     KEEP_PREDICATE_FALLBACK,
-    assemble_blocks,
+    RECOGNIZE_INPUT_COLS,
     make_detect_blocks,
     make_extract_fused_arrow,
-    recognize_norm_udf,
+    recognize_blocks,
 )
 
 
-def _prepare(pages: DataFrame, num_parts: int | None) -> DataFrame:
+def _prepare(pages: DataFrame, num_parts: int | None, *extra: Column) -> DataFrame:
     """Column-prune (F7) and optionally salt-repartition the pages scan.
 
     ``num_parts=None`` (default) keeps the scan's own partitioning — ZERO
@@ -53,8 +52,9 @@ def _prepare(pages: DataFrame, num_parts: int | None) -> DataFrame:
     repartition (engine/salt.py) — useful when upstream partitioning is
     pathological (one huge file, hot key ranges) at the cost of shuffling
     the raw bytes once. Both produce byte-identical output (invariance tests).
+    ``extra`` columns are selected after the four page columns.
     """
-    df = pages.select("url", "warc_ts", "html", "lang")
+    df = pages.select("url", "warc_ts", "html", "lang", *extra)
     if num_parts is not None:
         df = salted_repartition(df, num_parts)
     return df
@@ -83,10 +83,11 @@ def run_staged(
     num_parts: int | None = None,
     fallback: bool = False,
 ) -> DataFrame:
-    """Staged detect→recognize→reassemble, shuffle-free end to end.
+    """Staged detect→recognize, shuffle-free end to end.
 
     Documents are contiguous runs ending in their sentinel within each
-    partition, so reassembly is a third partition-local mapInPandas stage
+    partition, so recognize and reassembly are a second partition-local
+    mapInPandas stage over the surviving rows' :data:`RECOGNIZE_INPUT_COLS`
     (zero Exchange in the whole staged plan; the extracted corpus text never
     crosses the wire). This is the plan that survives 100× scale: the r1
     window variant shuffled every surviving block's text on url (70.5 s vs
@@ -94,17 +95,8 @@ def run_staged(
     """
     blocks = detect(pages, num_parts, emit_filtered_text=False, fallback=fallback)
     pred = KEEP_PREDICATE_FALLBACK if fallback else KEEP_PREDICATE
-    surviving = blocks.filter(F.expr(pred))
-    # r8: stage 2 is a scalar Arrow UDF over (text, lang) only — the six
-    # carry columns never cross the Python boundary (guide §4: pass only
-    # the columns the function needs).
-    recognized = surviving.select(
-        "url", "warc_ts", "block_id", "lang",
-        recognize_norm_udf()(F.col("text"), F.col("lang")).alias("norm_text"),
-        "doc_n_blocks", "doc_status", "forced",
-    )
-    nonempty = recognized.filter("block_id = -1 OR length(norm_text) > 0")
-    return nonempty.mapInPandas(assemble_blocks, schema=EXTRACTED_CORE_SCHEMA)
+    surviving = blocks.filter(F.expr(pred)).select(*RECOGNIZE_INPUT_COLS)
+    return surviving.mapInPandas(recognize_blocks, schema=EXTRACTED_CORE_SCHEMA)
 
 
 def run_fused(
@@ -127,13 +119,8 @@ def run_fused_coverage(pages: DataFrame, num_parts: int | None = None) -> DataFr
     scan → project → MapInArrow, zero Exchange, and the crawl text column
     itself never enters the Python worker. ``n_crawl`` is a passthrough
     column of the same fused stage :func:`run_fused` runs."""
-    df = pages.select(
-        "url", "warc_ts", "html", "lang",
-        F.length("text").cast("int").alias("n_crawl"),
-    )
-    if num_parts is not None:
-        df = salted_repartition(df, num_parts)
-    return df.mapInArrow(
+    n_crawl = F.length("text").cast("int").alias("n_crawl")
+    return _prepare(pages, num_parts, n_crawl).mapInArrow(
         make_extract_fused_arrow(), schema=EXTRACTED_COVERAGE_SCHEMA
     )
 

@@ -226,7 +226,7 @@ def main() -> None:
             # afterwards would read deleted files or anti-join against the
             # merged table (ADVICE r1). Writing blocks first materializes
             # against the pre-merge snapshot.
-            blocks = pipeline.detect(pages, num_parts=args.parts)
+            blocks = pipeline.detect(pages, num_parts=args.parts, fallback=args.fallback)
             tableio.write_table(blocks, f"{args.out}_blocks")
         extracted = _counted(
             pipeline.run_extract(

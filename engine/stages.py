@@ -12,12 +12,12 @@ carry rows between Arrow batches and those functions:
   blocks are all filtered out still reach the output with
   ``status='empty'`` (ref "no regions detected" path,
   ``bilingual_ocr.py:167-181``).
-- :func:`recognize_norm_udf` — staged stage 2, a scalar Arrow UDF:
-  ``normalize_block`` per surviving block (ref recognize_urdu/
-  recognize_english + post_process, ``urdu_recognition_utrnet.py:132-166``,
+- :func:`recognize_blocks` — staged stage 2 (mapInPandas) over the
+  surviving block rows: ``recognize`` per document — ``normalize_block``
+  per block, empty-result drop, partition-local reading-order reassembly
+  (ref recognize_urdu/recognize_english + post_process,
+  ``urdu_recognition_utrnet.py:132-166``,
   ``english_ocr_pipeline.py:52-84``).
-- :func:`assemble_blocks` — staged stage 3 (mapInPandas), partition-local
-  reading-order reassembly via ``assemble``.
 - :func:`make_extract_fused_arrow` — the fused per-document stage
   (mapInArrow) behind batch, coverage and streaming extraction:
   ``extract_document`` (both halves in one call) per row, zero shuffles —
@@ -58,8 +58,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from extraction.core import assemble, detect_document, extract_document
-from extraction.normalize import normalize_block
+from extraction.core import detect_document, extract_document, recognize
 from extraction.routing import doc_route, route_block
 from extraction.segment import MAX_BLOCK_CHARS, MIN_BLOCK_CHARS
 
@@ -113,6 +112,10 @@ EXTRACTED_CORE_SCHEMA = (
 # Column names of the two schemas, in order (no field has ", " in its type).
 _BLOCKS_COLS = [f.split()[0] for f in BLOCKS_SCHEMA.split(", ")]
 _EXTRACTED_CORE_COLS = [f.split()[0] for f in EXTRACTED_CORE_SCHEMA.split(", ")]
+
+# The stage-1 columns stage 2 reads; the block features stay in the JVM.
+RECOGNIZE_INPUT_COLS = ("url", "warc_ts", "block_id", "lang", "text",
+                        "doc_n_blocks", "doc_status", "forced")
 
 # The Catalyst-side keep predicate — integer-only, byte-for-byte the same
 # decision as extraction.segment._keep (SURVEY.md §7.3 H1). Sentinel rows
@@ -174,46 +177,17 @@ def make_detect_blocks(emit_filtered_text: bool = True, fallback: bool = False):
     return fn
 
 
-def _recognize_series(text: pd.Series, lang: pd.Series) -> pd.Series:
-    """Series->Series body of the Arrow-batched recognize stage (r8): the
-    per-block normalize is a function of (text, lang) ALONE — sentinel rows
-    carry text '' and normalize('') == '' — so the staged pipeline ships
-    ONLY those two columns to Python and the six carry columns
-    (url/warc_ts/ids/flags) stay in the JVM. The text is block text (or ''
-    on sentinel and filtered rows), so the fused stage's ``normalize_block``
-    applies per row; measured ~2x on the recognize stage of the 20k-doc
-    bench corpus (1.1M surviving blocks), byte-identity pinned by the
-    staged == fused golden tests."""
-    pin_zip_importers()
-    return pd.Series(
-        [normalize_block(t, l) for t, l in zip(text, lang)], dtype="object"
-    )
-
-
-def recognize_norm_udf():
-    """The scalar Arrow (pandas) UDF wrapping :func:`_recognize_series`.
-    Built lazily so importing this module never requires a live session.
-    asNondeterministic: the downstream non-empty filter references the UDF
-    column, and the optimizer otherwise duplicates the evaluation below
-    the pushed filter — every surviving block paid recognize TWICE
-    (optimization-guide §4.4; plan-pinned to ONE ArrowEvalPython in
-    test_golden_e2e). The function is pure, so results are unaffected."""
-    from pyspark.sql import functions as F
-
-    return F.pandas_udf(_recognize_series, returnType="string").asNondeterministic()
-
-
-def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage 3: partition-local reading-order reassembly.
+def recognize_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas stage 2: recognize and partition-local reading-order
+    reassembly over the :data:`RECOGNIZE_INPUT_COLS` of the surviving rows.
 
     Stage 1 emits each document's blocks consecutively in block_id order and
     terminates the run with its sentinel row (``block_id = -1``); the
-    Catalyst filters and the recognize stage are narrow, order-preserving
-    transformations, so within a partition every document is still a
-    contiguous, ordered run ending in its sentinel, and every block row
-    left has non-empty ``norm_text``. Reassembly therefore needs NO shuffle
-    and no sort: accumulate rows, and on the sentinel hand the run to
-    :func:`extraction.core.assemble` (state carries across Arrow batch
+    Catalyst keep filter is a narrow, order-preserving transformation, so
+    within a partition every document is still a contiguous, ordered run
+    ending in its sentinel. Reassembly therefore needs NO shuffle and no
+    sort: accumulate block rows, and on the sentinel hand the run to
+    :func:`extraction.core.recognize` (state carries across Arrow batch
     boundaries). A stage-1 ``error:`` status passes through unchanged.
 
     Duplicate (url, warc_ts) page rows each produce their own output row —
@@ -221,23 +195,21 @@ def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     merge them (ADVICE r1).
     """
     pin_zip_importers()
-    parts: list[tuple[int, str, str]] = []  # (block_id, route, norm_text)
-    forced = False  # this doc's surviving parts came from the O5 ladder
+    blocks: list[tuple[int, str, str]] = []  # (block_id, route, text)
+    forced = False  # this doc's surviving block came from the O5 ladder
     for pdf in batches:
         rows: list[tuple] = []
-        for url, ts, block_id, lang, norm, doc_nb, doc_status, is_forced in zip(
-            pdf["url"], pdf["warc_ts"], pdf["block_id"], pdf["lang"],
-            pdf["norm_text"], pdf["doc_n_blocks"], pdf["doc_status"],
-            pdf["forced"],
+        for url, ts, block_id, lang, text, doc_nb, doc_status, is_forced in zip(
+            *(pdf[c] for c in RECOGNIZE_INPUT_COLS)
         ):
             if block_id >= 0:
-                parts.append((int(block_id), lang, norm))
+                blocks.append((int(block_id), lang, text))
                 forced = forced or bool(is_forced)
                 continue
-            text, spans, status = assemble(parts, forced)
-            rows.append((url, ts, text, spans, int(doc_nb), len(parts),
-                         doc_status or status))
-            parts, forced = [], False
+            r = recognize(url, int(doc_nb), blocks, forced)
+            rows.append((url, ts, r.extracted_text, r.spans, r.n_blocks, r.n_kept,
+                         doc_status or r.status))
+            blocks, forced = [], False
         if rows:
             yield pd.DataFrame.from_records(rows, columns=_EXTRACTED_CORE_COLS)
 

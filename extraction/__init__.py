@@ -17,11 +17,12 @@ pipeline (notm33na/OCR-NEW, see SURVEY.md):
 - :func:`extraction.core.extract_document`    — per-page orchestrator
                                                  (ref bilingual_ocr.py:126-211)
 
-``extract_document`` is two shared halves around route + normalize:
+``extract_document`` is two shared halves around the per-block route:
 :func:`extraction.core.detect_document` (decode, segment, O5 relaxed-pass
-winner) and :func:`extraction.core.assemble` (join, span offsets, status).
-The staged Spark pipeline calls the halves from its stages 1 and 3, so each
-per-document decision has one home.
+winner) and :func:`extraction.core.recognize` (normalize each kept block,
+drop the empty ones, join, span offsets, status). The staged Spark pipeline
+calls the halves from its stages 1 and 2, so each per-document decision has
+one home.
 """
 
 from extraction.core import ExtractResult, extract_document

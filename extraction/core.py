@@ -73,8 +73,9 @@ def detect_document(
 def assemble(
     parts: list[tuple[int, str, str]], forced: bool
 ) -> tuple[str, list[Span], str]:
-    """Assemble half: reading-ordered ``(block_id, route, norm_text)`` parts
-    with non-empty text → (extracted_text, spans, status).
+    """The join step of :func:`recognize`: reading-ordered
+    ``(block_id, route, norm_text)`` parts with non-empty text →
+    (extracted_text, spans, status).
 
     Parts are joined with ``"\\n"``; each span is the prefix-sum offset of
     its part. Status is ``'empty'`` without parts, else ``'fallback'`` when
@@ -89,6 +90,25 @@ def assemble(
     return "\n".join(p[2] for p in parts), spans, status
 
 
+def recognize(
+    url: str, n_blocks: int, blocks: list[tuple[int, str, str]], forced: bool
+) -> ExtractResult:
+    """Recognize half: the reading-ordered ``(block_id, route, text)`` of a
+    page's kept (or forced) blocks → its result.
+
+    Each block is normalized with ``normalize_block``; a block that
+    normalizes to empty is dropped (ref empty-region drop), so ``n_kept`` is
+    the number of spans. ``forced`` marks blocks that came from the O5
+    ladder (see :func:`assemble`)."""
+    parts: list[tuple[int, str, str]] = []
+    for block_id, route, text in blocks:
+        norm = normalize_block(text, route)
+        if norm:
+            parts.append((block_id, route, norm))
+    text, spans, status = assemble(parts, forced)
+    return ExtractResult(url, text, spans, n_blocks, len(spans), status)
+
+
 def extract_document(
     url: str, html: bytes | str, lang: str | None, fallback: bool = False
 ) -> ExtractResult:
@@ -101,19 +121,15 @@ def extract_document(
 
     Per kept (or forced) block this is ``route_lang`` + ``normalize_text``;
     the page's ``lang`` tag is resolved once (``doc_route``), each block is
-    routed with ``route_block`` and normalized with ``normalize_block``,
-    which skips the no-op LTR collapse. Equality with the per-block composition is property-tested."""
+    routed with ``route_block`` and :func:`recognize` normalizes it with
+    ``normalize_block``, which skips the no-op LTR collapse. Equality with
+    the per-block composition is property-tested."""
     try:
         blocks, forced_id = detect_document(html, fallback)
         droute = doc_route(lang)
-        parts: list[tuple[int, str, str]] = []
-        for b in blocks:
-            if b.kept or b.block_id == forced_id:
-                route = route_block(b.text, droute)
-                norm = normalize_block(b.text, route)
-                if norm:
-                    parts.append((b.block_id, route, norm))
-        text, spans, status = assemble(parts, forced_id >= 0)
-        return ExtractResult(url, text, spans, len(blocks), len(parts), status)
+        return recognize(url, len(blocks), [
+            (b.block_id, route_block(b.text, droute), b.text)
+            for b in blocks if b.kept or b.block_id == forced_id
+        ], forced_id >= 0)
     except Exception as exc:  # noqa: BLE001 — error rows, not exceptions
         return ExtractResult(url, "", [], 0, 0, f"error:{type(exc).__name__}")

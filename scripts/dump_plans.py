@@ -47,8 +47,9 @@ def main() -> None:
     ))
     sections.append((
         "Staged extraction (inspection path)",
-        "Catalyst-side KEEP filter between detect and the recognize Arrow "
-        "UDF; reassembly is a partition-local MapInPandas — zero Exchange.",
+        "Two Python stages: detect, the Catalyst-side KEEP filter, then one "
+        "partition-local MapInPandas that recognizes and reassembles — zero "
+        "Exchange, no scalar Python UDF.",
         _plan(pipeline.run_staged(pages), "simple"),
     ))
     sections.append((

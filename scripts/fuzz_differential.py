@@ -6,8 +6,10 @@ CLAUDE.md) and thousands of random byte payloads through extract_document
 (never raises; corrupt input → status rows). Over both the markup and the
 raw-bytes payloads it also checks the extractor's orchestration:
 extract_document equals the per-block route_lang + normalize_text
-composition (``tests.test_properties.reference_extract``), and the LTR
-normalization is the identity on every block text either engine emits.
+composition (``tests.test_properties.reference_extract``) and equals the
+staged path's two stages run without Spark (stage 1 → keep rule → stage 2,
+``tests.test_properties.staged_extract``), and the LTR normalization is
+the identity on every block text either engine emits.
 The per-commit suite runs 300-500 examples per property; this is the
 long-soak version for pre-release confidence (the r1 fast-scanner bug lived
 exactly in the under-fuzzed unquoted-attribute space).
@@ -64,11 +66,12 @@ def main() -> None:
         ]
         checked[0] += 1
 
-    @given(tf._markup, tp._langs, st.booleans())
+    @given(tf._markup, tp._langs, st.booleans(), st.integers(0, 8))
     @settings(max_examples=args.examples, **opts)
-    def fuzz_orchestration(html: str, lang, fallback: bool) -> None:
+    def fuzz_orchestration(html: str, lang, fallback: bool, split: int) -> None:
         got = extraction.extract_document("u", html, lang, fallback)
         assert got == tp.reference_extract("u", html, lang, fallback), html
+        assert got == tp.staged_extract("u", html, lang, fallback, split), html
         tp.assert_ltr_identity(html)
         checked[0] += 1
 
@@ -76,7 +79,7 @@ def main() -> None:
     fuzz_unquoted()
     fuzz_orchestration()
     print(f"differential fuzz: {checked[0]} cases, fast == stdlib, "
-          "extract_document == per-block composition")
+          "extract_document == per-block composition == staged composition")
 
     rng = random.Random(7)
     for i in range(args.payloads):
@@ -86,9 +89,10 @@ def main() -> None:
         r = extraction.extract_document(f"u{i}", payload, lang, fallback)
         assert r.status is not None
         assert r == tp.reference_extract(f"u{i}", payload, lang, fallback), i
+        assert r == tp.staged_extract(f"u{i}", payload, lang, fallback), i
         tp.assert_ltr_identity(decode_html(payload))
     print(f"raw-bytes fuzz: {args.payloads} payloads, zero raises, "
-          "extract_document == per-block composition")
+          "extract_document == per-block composition == staged composition")
 
 
 if __name__ == "__main__":

@@ -7,6 +7,8 @@ preprocessing (decode), detection (segmentation), recognition
 
 from __future__ import annotations
 
+import pytest
+
 from extraction import (
     decode_html,
     extract_document,
@@ -169,29 +171,28 @@ def test_extract_document_error_row_on_bad_payload():
     assert r.extracted_text == "" and r.n_kept == 0
 
 
-def test_staged_error_row_matches_extract_document():
-    """The staged carriers, run without Spark on the same payload: stage 1
-    emits only the sentinel carrying the error status, and stage 3 turns it
-    into exactly the row extract_document returns."""
-    import pandas as pd
+@pytest.mark.parametrize("html, lang, fallback, split", [
+    # stage 1 emits only the sentinel, carrying the error status
+    (_Evil(), "en", False, None),
+    # Latin-only under 'ur': the forced block normalizes to empty
+    (b"<p>short latin words</p>", "ur", True, None),
+    # the page's surviving rows reach stage 2 as two Arrow batches
+    (f"<p>{LONG}</p><nav><a href='/'>home</a></nav><p>{LONG} two</p>"
+     f"<p>{LONG} three</p>".encode(), "en", False, 2),
+], ids=["error", "ur-latin-forced", "batch-split"])
+def test_staged_error_row_matches_extract_document(html, lang, fallback, split):
+    """The staged carriers, run without Spark (stage 1, the keep rule,
+    stage 2), give exactly the row extract_document returns."""
+    from tests.test_properties import staged_extract
 
-    from engine.stages import _recognize_series, assemble_blocks, make_detect_blocks
-
-    ts = pd.Timestamp("2026-01-01")
-    pages = pd.DataFrame({"url": ["u"], "warc_ts": [ts], "html": [_Evil()], "lang": ["en"]})
-    (blocks,) = make_detect_blocks(emit_filtered_text=False)(iter([pages]))
-    assert list(blocks["block_id"]) == [-1]
-    assert blocks["doc_status"][0].startswith("error:")
-
-    blocks["norm_text"] = _recognize_series(blocks["text"], blocks["lang"])
-    (out,) = assemble_blocks(iter([blocks]))
-    r = extract_document("u", _Evil(), "en")  # type: ignore[arg-type]
-    assert (r.extracted_text, r.spans, r.n_blocks, r.n_kept) == ("", [], 0, 0)
-    assert r.status == blocks["doc_status"][0]
-    assert out.to_dict("records") == [{
-        "url": "u", "warc_ts": ts, "extracted_text": r.extracted_text, "spans": r.spans,
-        "n_blocks": r.n_blocks, "n_kept": r.n_kept, "status": r.status,
-    }]
+    r = extract_document("u", html, lang, fallback)
+    assert staged_extract("u", html, lang, fallback, split) == r
+    if isinstance(html, _Evil):
+        assert r.status.startswith("error:")
+    elif fallback:
+        assert r.status == "empty" and r.n_blocks == 1
+    else:
+        assert r.status == "ok" and r.n_kept == 3
 
 
 def test_extract_document_deterministic():

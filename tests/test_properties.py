@@ -10,7 +10,7 @@ from hypothesis import given, settings, strategies as st
 from extraction import extract_document, normalize_text, route_lang, segment_blocks
 from extraction.core import ExtractResult, assemble, detect_document
 from extraction.normalize import _RTL_KEEP_EXTRA
-from extraction.segment import CHUNK_CHARS
+from extraction.segment import CHUNK_CHARS, _keep
 
 # Every codepoint str.isspace() accepts (29 in this interpreter).
 ISSPACE = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
@@ -77,6 +77,34 @@ def reference_extract(url, html, lang, fallback=False) -> ExtractResult:
         return ExtractResult(url, "", [], 0, 0, f"error:{type(exc).__name__}")
 
 
+def staged_extract(url, html, lang, fallback=False, split=None) -> ExtractResult:
+    """The staged Spark path without Spark: stage 1 with the threshold
+    pushdown, the keep rule (``segment._keep``; sentinels and forced blocks
+    pass), then stage 2 over the surviving rows — fed as two pandas batches
+    cut before surviving row ``split`` when it is given. It must equal
+    ``extract_document``."""
+    import pandas as pd
+
+    from engine.stages import RECOGNIZE_INPUT_COLS, make_detect_blocks, recognize_blocks
+
+    ts = pd.Timestamp("2026-01-01")
+    pages = pd.DataFrame({"url": [url], "warc_ts": [ts], "html": [html], "lang": [lang]})
+    (blocks,) = make_detect_blocks(emit_filtered_text=False, fallback=fallback)(iter([pages]))
+    keep = [
+        block_id < 0 or forced or _keep(n_chars, n_link)
+        for block_id, forced, n_chars, n_link in zip(
+            blocks["block_id"], blocks["forced"], blocks["n_chars"], blocks["n_link_chars"]
+        )
+    ]
+    surviving = blocks[keep].loc[:, list(RECOGNIZE_INPUT_COLS)].reset_index(drop=True)
+    batches = [surviving] if split is None else [surviving[:split], surviving[split:]]
+    out = [r for pdf in recognize_blocks(iter(batches)) for r in pdf.to_dict("records")]
+    assert [(r["url"], r["warc_ts"]) for r in out] == [(url, ts)]
+    r = out[0]
+    return ExtractResult(url, r["extracted_text"], r["spans"], r["n_blocks"], r["n_kept"],
+                         r["status"])
+
+
 def assert_ltr_identity(html: str) -> None:
     """The LTR normalization is the identity on every block either engine
     emits, so normalize_block may pass LTR block text through."""
@@ -116,6 +144,14 @@ def test_span_invariants(html, lang):
 @settings(max_examples=300, deadline=None)
 def test_extract_document_equals_per_block_composition(html, lang, fallback):
     assert extract_document("u", html, lang, fallback) == reference_extract(
+        "u", html, lang, fallback
+    )
+
+
+@given(_html_bytes, _langs, st.booleans(), st.integers(0, 4))
+@settings(max_examples=100, deadline=None)
+def test_staged_composition_equals_extract_document(html, lang, fallback, split):
+    assert staged_extract("u", html, lang, fallback, split) == extract_document(
         "u", html, lang, fallback
     )
 

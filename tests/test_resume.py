@@ -96,6 +96,36 @@ def test_resume_emit_blocks_uses_premerge_snapshot(spark, pages_small_path, tmp_
     assert spark.read.parquet(out).count() == pages.count()
 
 
+def test_emit_blocks_marks_forced_blocks_with_fallback(spark, pages_unit_path, tmp_path):
+    """With --emit-blocks --fallback, the blocks table marks the relaxed-pass
+    winner `forced`: a doc has a forced block exactly when its extracted
+    status is 'fallback'."""
+    import sys
+    from unittest import mock
+
+    from engine import run_pipeline
+
+    out = str(tmp_path / "extracted")
+    argv = [
+        "run_pipeline.py", "--pages", pages_unit_path, "--out", out,
+        "--emit-blocks", "--fallback", "--parts", "3",
+        "--master", spark.sparkContext.master,
+    ]
+    with mock.patch.object(sys, "argv", argv), \
+            mock.patch.object(run_pipeline, "get_spark", lambda master=None: spark), \
+            mock.patch.object(spark, "stop", lambda: None):
+        run_pipeline.main()
+    forced = {
+        r["url"] for r in
+        spark.read.parquet(f"{out}_blocks").filter("forced").select("url").collect()
+    }
+    fell_back = {
+        r["url"] for r in
+        spark.read.parquet(out).filter("status = 'fallback'").select("url").collect()
+    }
+    assert fell_back and forced == fell_back
+
+
 def test_lineage_written(spark, pages_unit_path, tmp_path):
     import json
     import os

@@ -230,8 +230,8 @@ def test_every_stage_body_pins_first():
     handed = set()
     for path in [*sorted((REPO / "engine").glob("*.py")), REPO / "__spark_entry__.py"]:
         handed |= _handed_off(path.read_text(), names)
-    # the four stage bodies are found, so the check cannot pass on nothing
-    assert {"make_detect_blocks()", "_recognize_series", "assemble_blocks",
+    # the three stage bodies are found, so the check cannot pass on nothing
+    assert {"make_detect_blocks()", "recognize_blocks",
             "make_extract_fused_arrow()"} <= handed
     assert sorted(k for k in handed if k not in defs or _first_call(defs[k]) != PIN) == [], (
         f"these stage bodies must call {PIN}() first"
