@@ -271,7 +271,7 @@ def main() -> None:
         # last consumer of the raw pages lineage has materialized
         raw_pages_persisted.unpersist()
     try:
-        staged = tableio.read_table(spark, staging)
+        staged = tableio.read_table(spark, staging, extracted.schema)
         with _phase(sc, "merge", phases_ms):
             merge = tableio.merge_by_url(spark, args.out, staged)
         wall_ms = int((time.monotonic() - t0) * 1000)
@@ -297,7 +297,7 @@ def main() -> None:
             # the extracted table carries no lang column (language is an
             # input attribute); WET's language header is optional — emit
             # without it
-            wet_src = spark.read.parquet(args.out).where(
+            wet_src = tableio.read_table(spark, args.out).where(
                 "status IN ('ok', 'fallback')"
             ).selectExpr(
                 "url", "warc_ts", "coalesce(extracted_text, '') AS text",

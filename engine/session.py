@@ -12,8 +12,12 @@ installed, compiled pyspark when that is the version of Spark's
 session's first Python task. A daemon starts before ``--py-files`` reach a
 worker's ``sys.path``, so the session also puts the root ``engine`` was
 imported from (a checkout or the ``--py-files`` zip; in local mode both are
-on the driver's host) on the workers' ``PYTHONPATH``. Other masters keep
-the stock daemon.
+on the driver's host) on the workers' ``PYTHONPATH``. A local session
+also lists a table's files on the driver however many directories it has:
+above ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 by
+default) Spark lists them in a job of its own, which in local mode runs on
+the same host's threads and only adds the job (0.4-0.6 s for a 64-bucket
+table). Other masters keep the stock daemon and Spark's threshold.
 
 The driver heap defaults to 24g, or to half of the host's memory where that
 is less (a heap larger than the host gets the JVM killed mid-run);
@@ -32,6 +36,9 @@ from pyspark.sql import SparkSession
 # (O6 analog at batch level; measured ~3-4x throughput vs 512-row batches on
 # the skewed bench corpus).
 ARROW_BATCH_ROWS = 128
+
+# Local sessions never list a table's files in a Spark job (see above).
+LOCAL_LISTING_THRESHOLD = str(2**31 - 1)
 
 # The directory (or zip) this package was imported from.
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -81,9 +88,12 @@ def get_spark(
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     if master.startswith("local"):
-        builder = builder.config(
-            "spark.python.daemon.module", "engine.pydaemon"
-        ).config("spark.executorEnv.PYTHONPATH", _ROOT)
+        builder = (
+            builder.config("spark.python.daemon.module", "engine.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", _ROOT)
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                    LOCAL_LISTING_THRESHOLD)
+        )
     # In-repo jars: MiniCatalog (DSv2 row-level ops — MERGE INTO executes for
     # real, engine/java/minicat, VERDICT r2 #2) and mediadec (JVM-native
     # javax.imageio/javax.sound media decode, VERDICT r3 #1). Registered

@@ -22,11 +22,23 @@ provided over plain parquet directories (SURVEY.md §7.3 H5):
   rename). Recorded ranges are widened before any rename; a crash
   between renames leaves a prefix merged, and re-running the same merge
   converges (idempotence and kill-point tests).
-- ``_layout.json``  — bucket count, per-bucket min/max ``stats`` and row
+- ``_layout.json``  — bucket count, the table's Spark ``schema`` (the data
+  columns, without ``bucket``), per-bucket min/max ``stats`` and row
   counts (``rows``), the Iceberg manifest analog: ``read_range`` prunes
   on the stats and ``table_rows`` sums the counts without a scan. A new
   or migrated table's layout is written into its tmp dir, so it moves in
-  with the data.
+  with the data; every writer saves it after its data files are written
+  and before any of them moves in.
+- ``_read``         — the one reader of a table: ``read_table`` (and
+  through it ``remaining``), ``read_range``, ``read_url``, the merge's
+  dirty-bucket read, the stats passes and ``compact`` all go through it.
+  It hands Spark the recorded schema (or the one a caller just wrote,
+  for a staging or tmp dir), so Spark runs no schema-inference job, and
+  ``get_spark`` raises the parallel-listing threshold in local mode, so
+  it runs no listing job either. A layout that records no schema, or
+  that is older than one of the table's data files (a file written
+  outside ``tableio``, which may carry a column the layout lacks), is
+  read by inference over every file instead, with one RuntimeWarning.
 - ``replace_dir`` / ``heal`` — the one crash-safe directory replace
   (Iceberg's atomic snapshot commit, on a file system): every table and
   IVF-index rewrite writes a tmp dir, renames the live dir aside, renames
@@ -63,6 +75,7 @@ import uuid
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -191,12 +204,103 @@ def heal(path: str, restore_only: bool = False, what: str = "table") -> None:
             shutil.rmtree(stale, ignore_errors=True)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The table at ``path`` without its ``bucket`` column, or None when it
+    does not exist. ``schema``, the data columns of the DataFrame that was
+    just written there, spares the inference a table without a layout
+    needs (see :func:`_read`)."""
     heal(path, restore_only=True)
     if not os.path.exists(path):
         return None
     # `bucket` is merge-layout plumbing, not part of the logical schema
-    return spark.read.parquet(path).drop("bucket")
+    return _read(spark, path, schema=schema).drop("bucket")
+
+
+def _data_files(path: str) -> list[tuple[str, int]]:
+    """``(name, mtime_ns)`` of every data file of the table at ``path``:
+    the files in its root and in its ``bucket=N`` dirs, not the hidden or
+    ``_``-prefixed ones (checksums, markers, the layout)."""
+    found = []
+    with os.scandir(path) as top:
+        for e in top:
+            if e.name.startswith((".", "_")):
+                continue
+            if e.is_file():
+                found.append((e.name, e.stat().st_mtime_ns))
+            elif e.name.startswith("bucket="):
+                with os.scandir(e.path) as files:
+                    found += [
+                        (f"{e.name}/{f.name}", f.stat().st_mtime_ns)
+                        for f in files if not f.name.startswith((".", "_"))
+                    ]
+    return found
+
+
+def _recorded_schema(path: str, layout: dict) -> StructType | None:
+    """The data schema ``layout`` records for the table at ``path``, or
+    None, announced with one RuntimeWarning, when it cannot be trusted: the
+    layout records none (a table written before schemas were recorded; the
+    next tableio writer records it), or a data file is newer than it. Every
+    tableio writer saves the layout after writing its files, so a newer
+    file was written outside tableio and may carry a column the recorded
+    schema lacks. The check stats files; it runs no Spark job."""
+    recorded = layout.get("schema")
+    if recorded is None:
+        why = "records no schema"
+    else:
+        stamp = os.stat(os.path.join(path, "_layout.json")).st_mtime_ns
+        newer = next((n for n, t in _data_files(path) if t > stamp), None)
+        if newer is None:
+            return StructType.fromJson(recorded)
+        why = f"is older than the data file {newer}"
+    warnings.warn(
+        f"table {path}: _layout.json {why}; reading it with the schema "
+        "inferred from every data file",
+        RuntimeWarning,
+        stacklevel=4,
+    )
+    return None
+
+
+def _read(
+    spark: SparkSession,
+    path: str,
+    dirs=(),
+    schema: StructType | None = None,
+) -> DataFrame:
+    """THE reader of tableio's tables: the table at ``path``, or only its
+    partition ``dirs`` (``basePath`` keeps their ``bucket`` column).
+
+    The schema is ``schema`` when the caller has it (the data columns of
+    what it just wrote), else the one ``_layout.json`` records, with
+    ``bucket int`` added for a partitioned read. Spark then infers no
+    schema; a table with no layout is inferred, as Spark always does, and
+    one whose recorded schema cannot be trusted (:func:`_recorded_schema`)
+    is inferred from every data file (``mergeSchema``), so a column only
+    some files carry is kept, never dropped."""
+    reader = spark.read
+    if schema is None:
+        layout = _read_layout(path)
+        if layout is not None:
+            schema = _recorded_schema(path, layout)
+            if schema is None:
+                reader = reader.option("mergeSchema", "true")
+    if schema is not None:
+        if dirs or _is_bucketed(path):
+            schema = StructType(
+                [*_data_schema(schema).fields, StructField("bucket", IntegerType())]
+            )
+        reader = reader.schema(schema)
+    if dirs:
+        return reader.option("basePath", path).parquet(*dirs)
+    return reader.parquet(path)
+
+
+def _data_schema(schema: StructType) -> StructType:
+    """``schema`` without the ``bucket`` partition column."""
+    return StructType([f for f in schema.fields if f.name != "bucket"])
 
 
 def _read_layout(path: str) -> dict | None:
@@ -216,20 +320,24 @@ def _save_layout(path: str, layout: dict) -> None:
     os.replace(tmp, os.path.join(path, "_layout.json"))
 
 
-def _write_layout(path: str, n_buckets: int, sort_by: str | None = None) -> None:
-    """Record the bucket count next to the data (the parquet-fallback analog
-    of Iceberg's partition-spec metadata; underscore-prefixed files are
-    ignored by Spark's parquet listing). ``sort_by`` marks a range layout
-    (see :func:`write_table_sorted`): buckets are CONTIGUOUS RANGES of that
+def _write_layout(
+    path: str,
+    n_buckets: int,
+    schema: StructType | None = None,
+    sort_by: str | None = None,
+) -> None:
+    """Record the bucket count and the data ``schema`` next to the data
+    (the parquet-fallback analog of Iceberg's partition-spec and schema
+    metadata; underscore-prefixed files are ignored by Spark's parquet
+    listing). ``sort_by`` marks a range layout (see
+    :func:`write_table_sorted`): buckets are CONTIGUOUS RANGES of that
     column, not url hashes."""
     layout: dict = {"n_buckets": n_buckets}
+    if schema is not None:
+        layout["schema"] = _data_schema(schema).jsonValue()
     if sort_by is not None:
         layout["sort_by"] = sort_by
     _save_layout(path, layout)
-
-
-def _layout_sort_by(path: str) -> str | None:
-    return (_read_layout(path) or {}).get("sort_by")
 
 
 # Columns whose per-bucket min/max are recorded in _layout.json (r5,
@@ -287,9 +395,7 @@ def _refresh_stats(spark: SparkSession, path: str) -> None:
         if d.startswith("bucket=")
     ]
     if dirs:
-        _record_stats(
-            path, *_bucket_stats(spark.read.option("basePath", path).parquet(*dirs))
-        )
+        _record_stats(path, *_bucket_stats(_read(spark, path, dirs)))
 
 
 def table_rows(spark: SparkSession, path: str) -> int:
@@ -301,7 +407,9 @@ def table_rows(spark: SparkSession, path: str) -> int:
     return read_table(spark, path).count()
 
 
-def _widen_stats(path: str, buckets, incoming: dict) -> None:
+def _widen_stats(
+    path: str, buckets, incoming: dict, schema: StructType | None = None
+) -> None:
     """Pre-swap stats widening (review r5): the bucket-dir renames and the
     post-swap stats write are not atomic, and stale-but-NARROW stats
     would make read_range silently skip buckets holding just-merged rows
@@ -310,12 +418,17 @@ def _widen_stats(path: str, buckets, incoming: dict) -> None:
     ``incoming`` range — correct for both the pre- and post-swap table at
     every crash point (min/max pruning only needs a superset). Buckets
     with no recorded entry stay unrecorded (already conservative); a
-    column whose incoming range is unknown is dropped from the entry."""
+    column whose incoming range is unknown is dropped from the entry.
+
+    The same save records ``schema``, the data schema of the files about
+    to move in. It runs after they are written, so none of them is newer
+    than the layout (see :func:`_recorded_schema`)."""
     layout = _read_layout(path)
-    stats = (layout or {}).get("stats")
-    if not stats:
+    if layout is None:
         return
-    changed = False
+    if schema is not None:
+        layout["schema"] = _data_schema(schema).jsonValue()
+    stats = layout.get("stats") or {}
     for b in buckets:
         old = stats.get(str(b))
         if old is None:
@@ -333,29 +446,32 @@ def _widen_stats(path: str, buckets, incoming: dict) -> None:
                 del old[col]  # unknown range on either side: no pruning
             else:
                 old[col] = [min(lo_hi[0], inc[0]), max(lo_hi[1], inc[1])]
-            changed = True
-    if changed:
-        _save_layout(path, layout)
+    _save_layout(path, layout)
 
 
 def _widen_stats_for_swap(
-    spark: SparkSession, path: str, tmp: str, buckets
+    spark: SparkSession,
+    path: str,
+    tmp: str,
+    buckets,
+    schema: StructType | None = None,
 ) -> tuple[dict, dict]:
     """:func:`_widen_stats` with the incoming ranges read from the staged
-    ``tmp`` dirs of a bucket rewrite. Returns their ``(stats, rows)``
-    (collected even when the layout records no stats yet): after the swap
-    each dirty bucket dir IS its ``tmp`` dir, so the merge records these as
-    the exact entries instead of re-reading the swapped buckets."""
+    ``tmp`` dirs of a bucket rewrite, written with data ``schema``. Returns
+    their ``(stats, rows)`` (collected even when the layout records no
+    stats yet): after the swap each dirty bucket dir IS its ``tmp`` dir, so
+    the merge records these as the exact entries instead of re-reading the
+    swapped buckets."""
     tmp_dirs = [
         os.path.join(tmp, f"bucket={b}")
         for b in buckets
         if os.path.exists(os.path.join(tmp, f"bucket={b}"))
     ]
     stats, rows = (
-        _bucket_stats(spark.read.option("basePath", tmp).parquet(*tmp_dirs))
+        _bucket_stats(_read(spark, tmp, tmp_dirs, schema))
         if tmp_dirs else ({}, {})
     )
-    _widen_stats(path, buckets, stats)
+    _widen_stats(path, buckets, stats, schema)
     return stats, rows
 
 
@@ -401,12 +517,7 @@ def read_range(
         dirs.append(os.path.join(path, d))
     if not dirs:  # nothing can match: empty result, same schema, no scan
         return read_table(spark, path).filter(pred).limit(0)
-    return (
-        spark.read.option("basePath", path)
-        .parquet(*dirs)
-        .drop("bucket")
-        .filter(pred)
-    )
+    return _read(spark, path, dirs).drop("bucket").filter(pred)
 
 
 def read_url(spark: SparkSession, path: str, url: str) -> DataFrame | None:
@@ -458,12 +569,7 @@ def read_url(spark: SparkSession, path: str, url: str) -> DataFrame | None:
         # result unconditionally was only correct in the first (the other
         # direction of the stale-manifest guard above).
         return read_table(spark, path).filter(F.col("url") == url)
-    return (
-        spark.read.option("basePath", path)
-        .parquet(bucket_dir)
-        .drop("bucket")
-        .filter(F.col("url") == url)
-    )
+    return _read(spark, path, [bucket_dir]).drop("bucket").filter(F.col("url") == url)
 
 
 def write_table(df: DataFrame, path: str) -> None:
@@ -521,7 +627,7 @@ def write_table_sorted(
     # each task holds exactly one bucket value: partitionBy groups without
     # any extra shuffle, one sorted file per bucket dir
     arranged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    _write_layout(tmp, n_buckets, sort_by=sort_col)
+    _write_layout(tmp, n_buckets, df.schema, sort_by=sort_col)
     spark = df.sparkSession
     _refresh_stats(spark, tmp)  # the layout moves in with the data
     replace_dir(tmp, path)
@@ -640,7 +746,7 @@ def merge_by_url(
         # never lands without it
         tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
         _write_buckets(upd, tmp)
-        _write_layout(tmp, n_buckets)
+        _write_layout(tmp, n_buckets, upd.schema)
         _record_stats(tmp, in_stats, in_rows)  # the table IS upd
         replace_dir(tmp, target_path)
         return summary("new")
@@ -651,7 +757,7 @@ def merge_by_url(
         merged = _with_bucket(kept.unionByName(updates), n_buckets)
         tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
         _write_buckets(merged, tmp)
-        _write_layout(tmp, n_buckets)
+        _write_layout(tmp, n_buckets, merged.schema)
         _refresh_stats(spark, tmp)
         replace_dir(tmp, target_path)
         return summary("migrate")
@@ -670,9 +776,7 @@ def merge_by_url(
         return summary("noop")
     live = {b for b in dirty if os.path.exists(f"{target_path}/bucket={b}")}
     existing_dirty = (
-        spark.read.option("basePath", target_path).parquet(
-            *(f"{target_path}/bucket={b}" for b in sorted(live))
-        )
+        _read(spark, target_path, [f"{target_path}/bucket={b}" for b in sorted(live)])
         if live else None
     )
     tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
@@ -692,7 +796,7 @@ def merge_by_url(
         _write_buckets(
             appended, tmp, min(len(dirty), spark.sparkContext.defaultParallelism)
         )
-        _widen_stats(target_path, dirty, in_stats)
+        _widen_stats(target_path, dirty, in_stats, appended.schema)
         for b in dirty:
             src, dst = f"{tmp}/bucket={b}", f"{target_path}/bucket={b}"
             if b not in live:
@@ -719,11 +823,13 @@ def merge_by_url(
             {b: old_rows.get(b, 0) + n for b, n in in_rows.items()},
         )
         return summary("append")
-    kept = existing_dirty.join(upd.select("url"), "url", "left_anti")
-    _write_buckets(kept.unionByName(upd), tmp)
+    merged = existing_dirty.join(upd.select("url"), "url", "left_anti").unionByName(upd)
+    _write_buckets(merged, tmp)
     # widen BEFORE the swap so a crash at any point leaves conservative
     # (superset) ranges; tightened to exact after the swap succeeds
-    fresh_stats, fresh_rows = _widen_stats_for_swap(spark, target_path, tmp, dirty)
+    fresh_stats, fresh_rows = _widen_stats_for_swap(
+        spark, target_path, tmp, dirty, merged.schema
+    )
     for b in dirty:
         src = f"{tmp}/bucket={b}"
         if os.path.exists(src):  # else no merged rows landed: keep old data
@@ -836,37 +942,49 @@ def compact(spark: SparkSession, target_path: str) -> list[int]:
     same discipline as the dirty-bucket merge).
     Returns the compacted bucket ids.
 
-    Crash-safe write-then-swap (ADVICE r4): fresh files land in an
-    underscore-prefixed ``_compact-`` dir (invisible to Hadoop/Spark
-    partition discovery) and :func:`replace_dir` swaps it in; :func:`heal`
-    on entry restores or collects what an interrupted compaction left."""
+    Crash-safe write-then-swap (ADVICE r4): fresh files land in
+    underscore-prefixed ``_compact-`` dirs (invisible to Hadoop/Spark
+    partition discovery) and :func:`replace_dir` swaps each in; :func:`heal`
+    on entry restores or collects what an interrupted compaction left.
+    Every bucket is read with the table's schema (the recorded one, or the
+    inferred one when it cannot be trusted), and the layout is re-saved
+    with it after the writes and before the first swap, so the compacted
+    files are never newer than the layout."""
     heal(target_path)
     if not _is_bucketed(target_path):
         return []
-    done: list[int] = []
-    for d in sorted(os.listdir(target_path)):
-        if not d.startswith("bucket="):
-            continue
+    multi = [
+        d for d in sorted(os.listdir(target_path))
+        if d.startswith("bucket=") and sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(target_path, d))
+        ) > 1
+    ]
+    if not multi:
+        return []
+    layout = _read_layout(target_path)
+    schema = _data_schema(_read(spark, target_path).schema)
+    # range layouts (r6): the rewrite must keep rows sorted so the
+    # compacted file's parquet row-group stats stay monotone (the
+    # within-file half of the skipping story); coalesce(1) alone would
+    # interleave the source files' row order
+    sort_col = (layout or {}).get("sort_by")
+    swaps = []
+    for d in multi:
         bdir = os.path.join(target_path, d)
-        files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
-        if len(files) <= 1:
-            continue
-        # bucket files exclude the partition column (dir name carries it),
-        # so a direct dir read/write round-trips the exact file schema
-        df = spark.read.parquet(bdir)
-        # range layouts (r6): the rewrite must keep rows sorted so the
-        # compacted file's parquet row-group stats stay monotone (the
-        # within-file half of the skipping story); coalesce(1) alone
-        # would interleave the source files' row order
-        sort_col = _layout_sort_by(target_path)
-        if sort_col is not None and sort_col in df.columns:
-            df = df.coalesce(1).sortWithinPartitions(sort_col)
+        # bucket files exclude the partition column (the dir name carries
+        # it), so a direct dir read/write round-trips the file schema
+        df = _read(spark, bdir, schema=schema).coalesce(1)
+        if sort_col is not None:
+            df = df.sortWithinPartitions(sort_col)
         tmp = os.path.join(
             target_path, f"_compact-{uuid.uuid4().hex[:8]}-{d.replace('=', '-', 1)}"
         )
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        df.write.mode("overwrite").parquet(tmp)
+        swaps.append((tmp, bdir))
+    if layout is not None:
+        layout["schema"] = schema.jsonValue()
+        _save_layout(target_path, layout)
+    for tmp, bdir in swaps:
         replace_dir(tmp, bdir)
-        done.append(int(d.split("=", 1)[1]))
-    if done:
-        spark.catalog.refreshByPath(target_path)
-    return done
+    spark.catalog.refreshByPath(target_path)
+    return [int(d.split("=", 1)[1]) for d in multi]

@@ -63,6 +63,41 @@ def pages_small_path(tmp_path_factory, pages_small_rows) -> str:
     return path
 
 
+@pytest.fixture
+def new_jobs(spark):
+    """``new_jobs()`` returns the kind of each Spark job run since the
+    previous call (the first call: since the fixture was set up), once the
+    listener bus has delivered every event posted so far: ``"listing"``
+    for a parallel file-listing job (described ``Listing leaf files…``),
+    ``"schema"`` for any other job a ``DataFrameReader`` call launched (a
+    read builds its DataFrame with no job but these two: it is schema
+    inference), and ``"other"``."""
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        js = store.jobsList(None)
+        return {int(js.apply(i).jobId()): js.apply(i) for i in range(js.size())}
+
+    def kind(job) -> str:
+        d = job.description()
+        if d.isDefined() and d.get().startswith("Listing leaf files"):
+            return "listing"
+        stage = store.lastStageAttempt(int(job.stageIds().apply(0)))
+        return "schema" if ".DataFrameReader." in stage.details() else "other"
+
+    seen = set(jobs())
+
+    def new() -> list[str]:
+        got = jobs()
+        fresh = sorted(set(got) - seen)
+        seen.update(fresh)
+        return [kind(got[j]) for j in fresh]
+
+    return new
+
+
 class Crash(Exception):
     """A process killed at a kill point of ``replace_kill_points``."""
 

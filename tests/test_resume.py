@@ -449,3 +449,31 @@ def test_cli_gate_counters_when_every_page_is_done(
                             "extracted": 0, "quality_dropped": 0}
     assert got["merge"] == {"path": "noop", "dirty_buckets": 0, "rows_in": 0}
     assert got["rows"] == 64
+
+
+def test_resume_run_lists_no_files_and_infers_no_table_schema(
+    spark, pages_small_path, tmp_path, capsys, new_jobs
+):
+    """A --resume increment over a table of more than 32 bucket dirs (Spark's
+    default parallel-listing threshold), with a WET export, reads the
+    table, the staging dir, the dirty buckets and the merged output with
+    known schemas and lists their files on the driver: it runs no listing
+    job, and its one schema-inference job is the pages input's."""
+    import os
+
+    pages = spark.read.parquet(pages_small_path)
+    half = str(tmp_path / "half.parquet")
+    # crc32, not xxhash64: half of the url hashes is half of the buckets
+    pages.filter("crc32(url) % 2 = 0").write.parquet(half)
+    out = str(tmp_path / "extracted")
+    _run_cli(spark, ["--pages", half, "--out", out, "--run-id", "r1"])
+    assert sum(d.startswith("bucket=") for d in os.listdir(out)) > 32
+    new_jobs()
+    got = _run_cli(spark, [
+        "--pages", pages_small_path, "--out", out, "--resume", "--run-id", "r2",
+        "--wet-out", str(tmp_path / "wet"),
+    ], capsys)
+    kinds = new_jobs()
+    assert got["merge"]["path"] == "append"
+    assert "listing" not in kinds, kinds
+    assert kinds.count("schema") == 1, kinds

@@ -1,5 +1,6 @@
 """``engine.session.get_spark`` defaults: the driver heap fits the host,
-and a local session launches its Python daemon through ``engine.pydaemon``."""
+and a local session launches its Python daemon through ``engine.pydaemon``
+and lists a table's files without a Spark job."""
 
 from __future__ import annotations
 
@@ -28,3 +29,5 @@ def test_local_session_confs(spark):
     assert conf.get("spark.driver.memory") == session.default_driver_memory()
     assert conf.get("spark.python.daemon.module") == "engine.pydaemon"
     assert conf.get("spark.executorEnv.PYTHONPATH") == session._ROOT
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert int(spark.conf.get(threshold)) == 2**31 - 1

@@ -967,3 +967,150 @@ def test_append_run_replaces_its_rows_and_keeps_other_runs(spark, tmp_path):
     assert sorted(f for f in os.listdir(path) if f.startswith("run-")) == [
         "run-r1.parquet", "run-r2.parquet"
     ]
+
+
+def _layout(path):
+    import json
+
+    with open(os.path.join(path, "_layout.json"), encoding="utf-8") as f:
+        return json.load(f)
+
+
+def _recorded(path):
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(_layout(path)["schema"]).simpleString()
+
+
+def _quiet_read(spark, path):
+    """``read_table`` with every RuntimeWarning raised as an error."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        return tableio.read_table(spark, path)
+
+
+def test_every_layout_write_records_the_schema_and_reads_run_no_job(
+    spark, tmp_path, new_jobs
+):
+    """The new, append, rewrite and migrate paths of ``merge_by_url`` and
+    ``write_table_sorted`` record the table's data schema (no ``bucket``)
+    in ``_layout.json``. A table or range read passes it to Spark: the
+    DataFrames are built with no Spark job and no warning, and read what
+    an inferring read finds."""
+    want = _stats_rows(spark, 1).schema.simpleString()
+    path = str(tmp_path / "t")
+    for upd, merge_path in (
+        (_stats_rows(spark, 40), "new"),
+        (_stats_rows(spark, 8, start=100), "append"),
+        (_stats_rows(spark, 4, start=30), "rewrite"),
+    ):
+        assert tableio.merge_by_url(spark, path, upd, n_buckets=4)["path"] == merge_path
+        assert _recorded(path) == want, merge_path
+    flat = str(tmp_path / "flat")
+    tableio.write_table(_stats_rows(spark, 10), flat)
+    assert tableio.merge_by_url(spark, flat, _stats_rows(spark, 3, start=50))["path"] == (
+        "migrate"
+    )
+    assert _recorded(flat) == want
+    ranged = str(tmp_path / "ranged")
+    tableio.write_table_sorted(_stats_rows(spark, 30), ranged, n_buckets=4)
+    assert _recorded(ranged) == want
+
+    for p in (path, flat, ranged):
+        spark.catalog.refreshByPath(p)
+        new_jobs()
+        df = _quiet_read(spark, p)
+        rr = tableio.read_range(spark, p, "doc_id", 0, 9)
+        assert new_jobs() == [], p
+        inferred = spark.read.parquet(p).drop("bucket")
+        assert df.schema == inferred.schema
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, inferred.collect()))
+        assert sorted(r["doc_id"] for r in rr.collect()) == list(range(10))
+
+
+def test_layout_without_schema_is_inferred_loudly_until_a_write_records_it(
+    spark, tmp_path
+):
+    """A layout written before schemas were recorded reads by inference with
+    one RuntimeWarning; the next merge records the schema, and reads are
+    quiet again."""
+    import json
+
+    import pytest
+
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 24), n_buckets=4)
+    doc = _layout(path)
+    del doc["schema"]
+    with open(os.path.join(path, "_layout.json"), "w", encoding="utf-8") as f:
+        json.dump(doc, f)
+    with pytest.warns(RuntimeWarning, match="records no schema") as rec:
+        df = tableio.read_table(spark, path)
+    assert len(rec) == 1
+    assert sorted(r["doc_id"] for r in df.collect()) == list(range(24))
+
+    with pytest.warns(RuntimeWarning, match="records no schema"):
+        got = tableio.merge_by_url(spark, path, _stats_rows(spark, 6, start=100))
+    assert got["path"] == "append"
+    assert _recorded(path) == _stats_rows(spark, 1).schema.simpleString()
+    assert _quiet_read(spark, path).count() == 30
+
+
+def test_file_newer_than_layout_is_read_by_inference_loudly(spark, tmp_path):
+    """A data file written outside tableio after the layout, here with a
+    column the recorded schema lacks, makes the recorded schema untrusted:
+    the table reads with the schema inferred from every file, with one
+    RuntimeWarning, so the column is kept with its values, never dropped.
+    ``compact`` folds the file in and re-saves the layout with that schema,
+    and reads are quiet again."""
+    import pytest
+
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 16), n_buckets=4)
+    extra = (
+        _stats_rows(spark, 40, start=500)
+        .where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+        .withColumn("note", F.lit("outside"))
+    )
+    urls = {r["url"] for r in extra.collect()}
+    assert urls
+    extra.coalesce(1).write.mode("append").parquet(f"{path}/bucket=0")
+    spark.catalog.refreshByPath(path)
+
+    with pytest.warns(RuntimeWarning, match="older than the data file bucket=0/") as rec:
+        df = tableio.read_table(spark, path)
+    assert len(rec) == 1, [str(w.message) for w in rec]
+    rows = {r["url"]: r["note"] for r in df.collect()}
+    assert len(rows) == 16 + len(urls)
+    assert {u for u, n in rows.items() if n is not None} == urls
+    assert set(rows[u] for u in urls) == {"outside"}
+
+    with pytest.warns(RuntimeWarning, match="older than the data file"):
+        assert tableio.compact(spark, path) == [0]
+    assert "note:string" in _recorded(path)
+    quiet = {r["url"]: r["note"] for r in _quiet_read(spark, path).collect()}
+    assert quiet == rows
+
+
+def test_compact_reads_buckets_with_the_recorded_schema(spark, tmp_path, new_jobs):
+    """``compact`` reads every bucket with the recorded schema: one write
+    job per compacted bucket and no schema-inference job, no warning, and
+    the re-saved layout keeps later reads quiet."""
+    import warnings
+
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 32), n_buckets=4)
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 32, start=100))
+    assert set(_files_per_bucket(path).values()) == {2}
+    want = sorted(map(tuple, spark.read.parquet(path).drop("bucket").collect()))
+    new_jobs()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        done = tableio.compact(spark, path)
+    jobs = new_jobs()
+    assert sorted(done) == [0, 1, 2, 3]
+    assert "schema" not in jobs and len(jobs) == len(done), jobs
+    assert set(_files_per_bucket(path).values()) == {1}
+    assert sorted(map(tuple, _quiet_read(spark, path).collect())) == want
