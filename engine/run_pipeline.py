@@ -28,7 +28,7 @@ import uuid
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py4j.protocol import Py4JJavaError  # noqa: E402
-from pyspark.sql import DataFrame, Observation, functions as F  # noqa: E402
+from pyspark.sql import DataFrame, Observation, Row, functions as F  # noqa: E402
 
 from engine import metrics as M  # noqa: E402
 from engine import pipeline, tableio  # noqa: E402
@@ -157,6 +157,9 @@ def main() -> None:
         return
     if args.pages is None:
         ap.error("--pages is required unless --lookup is given")
+    # a killed run leaves its staging dir (and maybe a merge's tmp dirs)
+    # beside the table: collect them before this run stages its own
+    tableio.heal(args.out)
     if args.format == "parquet":
         pages = spark.read.parquet(args.pages)
     elif args.format == "jsonl":
@@ -214,7 +217,12 @@ def main() -> None:
     else:
         raw_pages_persisted = None
     pages = _counted(pages, "pages_in", counts)
+    version = None
     if args.resume:
+        # the table's version before the anti-join reads it: while the
+        # table keeps it, no url of this run's output is in the table, and
+        # the merge skips its overlap check
+        version = tableio.layout_version(args.out)
         pages = _counted(tableio.remaining(pages, args.out), "to_extract", counts)
 
     t0 = time.monotonic()
@@ -253,13 +261,15 @@ def main() -> None:
                 "quality_kept",
                 counts,
             )
-        # Stage the run output once: merge_by_url reads its updates three
-        # times (census, overlap check, write) and the run's metrics come
-        # from the same rows — reading the live extraction lineage would
-        # run the whole extraction each time. The gate counters ride on
-        # this write.
+        # Stage the run output once, already split into the table's
+        # bucket=N dirs (one file per bucket): merge_by_url takes its
+        # census from the staged files' footers and moves them into the
+        # table, and the run's metrics come from the same rows — reading
+        # the live extraction lineage would run the whole extraction
+        # again. The gate counters ride on this write.
+        n_buckets = tableio.bucket_count(args.out)
         staging = f"{args.out}.staging-{uuid.uuid4().hex[:8]}"
-        tableio.write_table(extracted, staging)
+        tableio.write_table(tableio.bucketed(extracted, n_buckets), staging)
     seen = {k: _count(*v) for k, v in counts.items()}
     gates = {
         "pages_in": seen["pages_in"],
@@ -272,20 +282,25 @@ def main() -> None:
         raw_pages_persisted.unpersist()
     try:
         staged = tableio.read_table(spark, staging, extracted.schema)
-        with _phase(sc, "merge", phases_ms):
-            merge = tableio.merge_by_url(spark, args.out, staged)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        # run-scoped accounting from the run's own staged rows: one small
-        # aggregation, no scan of the merged table
+        # run-scoped accounting from the run's own staged rows, before the
+        # merge moves them into the table: one small aggregation, no scan
+        # of the merged table
         with _phase(sc, "metrics", phases_ms):
-            metrics_df = M.partition_metrics(staged, args.run_id, wall_ms)
+            metrics_df = M.partition_metrics(staged, args.run_id)
             per_part = metrics_df.collect()
+        with _phase(sc, "merge", phases_ms):
+            merge = tableio.merge_by_url(
+                spark, args.out, staged, n_buckets, staged=staging, version=version
+            )
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        with _phase(sc, "metrics", phases_ms):
+            per_part = [Row(**{**r.asDict(), "wall_ms": wall_ms}) for r in per_part]
             tableio.append_run(
                 spark, f"{args.out}_metrics", args.run_id, per_part, metrics_df.schema
             )
             tableio.write_lineage(
                 spark, args.out, args.run_id,
-                [(r["part_id"], r["docs_in"]) for r in per_part], gates,
+                [(r["part_id"], r["docs_in"]) for r in per_part], gates, merge,
             )
     finally:
         shutil.rmtree(staging, ignore_errors=True)

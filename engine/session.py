@@ -82,6 +82,10 @@ def get_spark(
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # INT64 microsecond timestamps, not INT96: their parquet footers
+        # carry min/max, which tableio's merge census reads instead of
+        # aggregating the rows in a Spark job
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # reap reliable-checkpoint files once their RDD is GC'd (iterative
         # algorithms checkpoint per invocation — without this, a long
         # session accumulates checkpoint data on disk)

@@ -11,13 +11,18 @@ provided over plain parquet directories (SURVEY.md §7.3 H5):
   n_buckets)`` (the parquet emulation of Iceberg's bucket partition
   transform): a merge touches ONLY the dirty buckets — the ones the
   updates hash into — so incremental-merge cost is O(updates), not
-  O(table) (VERDICT r1). One census aggregation of the updates by bucket
-  yields the dirty set with per-bucket row counts and min/max. When no
-  update url exists yet (the ``--resume`` case) the merge APPENDS: one
-  new data file per dirty bucket, renamed into the live bucket dir, no
-  existing file rewritten (Iceberg's append snapshot). Otherwise each
-  dirty bucket is rewritten into one data file (rows are grouped by
-  bucket before every bucketed write, the analog of Iceberg's
+  O(table) (VERDICT r1). The updates are staged once, already split into
+  ``bucket=N`` dirs of one file each (``run_pipeline`` stages its output
+  so itself and hands the dir over), and the census (per-bucket row
+  counts and min/max) is read from the staged files' parquet footers,
+  with no Spark job. A new table is the staging dir, renamed in. When no
+  update url exists yet (the ``--resume`` case) the merge APPENDS: each
+  staged file is renamed into its live bucket dir, no existing file
+  rewritten (Iceberg's fast append). Whether one exists is a semi-join,
+  skipped when the table's ``version`` still equals the one the caller
+  read before its ``remaining`` anti-join (Iceberg's snapshot-id check).
+  Otherwise each dirty bucket is rewritten into one data file (rows are
+  grouped by bucket before every bucketed write, the analog of Iceberg's
   ``write.distribution-mode=hash``) and swapped in whole (write-tmp +
   rename). Recorded ranges are widened before any rename; a crash
   between renames leaves a prefix merged, and re-running the same merge
@@ -25,10 +30,15 @@ provided over plain parquet directories (SURVEY.md §7.3 H5):
 - ``_layout.json``  — bucket count, the table's Spark ``schema`` (the data
   columns, without ``bucket``), per-bucket min/max ``stats`` and row
   counts (``rows``), the Iceberg manifest analog: ``read_range`` prunes
-  on the stats and ``table_rows`` sums the counts without a scan. A new
-  or migrated table's layout is written into its tmp dir, so it moves in
-  with the data; every writer saves it after its data files are written
-  and before any of them moves in.
+  on the stats and ``table_rows`` sums the counts without a scan. Its
+  ``version`` is bumped by every commit, and ``pending`` names the
+  buckets of a merge between its first and last rename, whose counts the
+  next merge recounts. A new or migrated table's layout is written into
+  its tmp dir, so it moves in with the data; every writer saves it after
+  its data files are written and before any of them moves in. Tables are
+  written with TIMESTAMP_MICROS timestamps (``get_spark``), whose footers
+  carry min/max; a file with INT96 ones (older, or from another session)
+  reads equal, and a census over it is taken by a Spark job, loudly.
 - ``_read``         — the one reader of a table: ``read_table`` (and
   through it ``remaining``), ``read_range``, ``read_url``, the merge's
   dirty-bucket read, the stats passes and ``compact`` all go through it.
@@ -47,7 +57,8 @@ provided over plain parquet directories (SURVEY.md §7.3 H5):
   sibling otherwise. Writers (``write_table``, ``write_table_sorted``,
   ``merge_by_url``, ``compact``, the IVF upsert and compaction) heal on
   entry: an aside whose live dir is missing is restored, any other aside
-  and every ``.tmp-*``/``_compact-*`` leftover deleted. Readers
+  and every ``.tmp-*``/``_compact-*``/``.staging-*`` leftover deleted
+  (but the staging dir a merge was handed). Readers
   (``read_table``, ``read_range``, ``read_url``, ``ivf_topk``) only
   restore.
 - ``remaining``     — checkpointed-resume anti-join (J3): pages minus already-
@@ -115,10 +126,25 @@ def _is_bucketed(path: str) -> bool:
     return any(d.startswith("bucket=") for d in os.listdir(path))
 
 
-def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+def bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    """``df`` with the ``bucket`` column of a table of ``n_buckets`` url
+    buckets. :func:`write_table` writes such a DataFrame as ``bucket=N``
+    dirs, which :func:`merge_by_url` can move into the table whole."""
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
     )
+
+
+def bucket_count(path: str) -> int:
+    """The bucket count of the table at ``path``: the one its layout
+    records, or :data:`N_MERGE_BUCKETS` for a table that has none yet."""
+    return (_read_layout(path) or {}).get("n_buckets", N_MERGE_BUCKETS)
+
+
+def layout_version(path: str) -> int | None:
+    """The ``version`` the layout of the table at ``path`` records (every
+    commit bumps it), or None for a table without one."""
+    return (_read_layout(path) or {}).get("version")
 
 
 def _write_buckets(df: DataFrame, path: str, tasks: int | None = None) -> None:
@@ -165,14 +191,20 @@ def replace_dir(tmp: str, live: str) -> None:
     shutil.rmtree(aside)
 
 
-def heal(path: str, restore_only: bool = False, what: str = "table") -> None:
+def heal(
+    path: str,
+    restore_only: bool = False,
+    what: str = "table",
+    keep: str | None = None,
+) -> None:
     """Undo what an interrupted :func:`replace_dir` left at ``path``: an
     aside whose live dir is missing (the table's ``.gc-`` sibling, or a
     ``_gc-`` partition aside inside it) is renamed back, announced with one
     RuntimeWarning. Writers heal on entry and also delete the asides whose
-    live dir exists and the ``.tmp-*``/``_compact-*`` dirs a crash before
-    the swap left (single-writer: nothing else is mid-replace then);
-    readers pass ``restore_only``."""
+    live dir exists, the ``.tmp-*``/``_compact-*`` dirs a crash before the
+    swap left and the ``.staging-*`` dirs of a killed ``run_pipeline``
+    (single-writer: nothing else is mid-replace then), all but ``keep``,
+    the staging dir the writer was handed; readers pass ``restore_only``."""
 
     def restore(aside: str, live: str) -> None:
         os.rename(aside, live)
@@ -200,8 +232,11 @@ def heal(path: str, restore_only: bool = False, what: str = "table") -> None:
             elif d.startswith("_compact-") and not restore_only:
                 shutil.rmtree(full)
     if not restore_only:
-        for stale in asides + glob.glob(stem + ".tmp-*"):
-            shutil.rmtree(stale, ignore_errors=True)
+        kept = keep and os.path.abspath(keep)
+        leftovers = glob.glob(stem + ".tmp-*") + glob.glob(stem + ".staging-*")
+        for stale in asides + leftovers:
+            if os.path.abspath(stale) != kept:
+                shutil.rmtree(stale, ignore_errors=True)
 
 
 def read_table(
@@ -238,6 +273,14 @@ def _data_files(path: str) -> list[tuple[str, int]]:
     return found
 
 
+def _newer_file(path: str) -> str | None:
+    """A data file of the table at ``path`` newer than its
+    ``_layout.json``, or None. Every tableio writer saves the layout after
+    writing its files, so such a file was written outside tableio."""
+    stamp = os.stat(os.path.join(path, "_layout.json")).st_mtime_ns
+    return next((n for n, t in _data_files(path) if t > stamp), None)
+
+
 def _recorded_schema(path: str, layout: dict) -> StructType | None:
     """The data schema ``layout`` records for the table at ``path``, or
     None, announced with one RuntimeWarning, when it cannot be trusted: the
@@ -250,8 +293,7 @@ def _recorded_schema(path: str, layout: dict) -> StructType | None:
     if recorded is None:
         why = "records no schema"
     else:
-        stamp = os.stat(os.path.join(path, "_layout.json")).st_mtime_ns
-        newer = next((n for n, t in _data_files(path) if t > stamp), None)
+        newer = _newer_file(path)
         if newer is None:
             return StructType.fromJson(recorded)
         why = f"is older than the data file {newer}"
@@ -298,6 +340,12 @@ def _read(
     return reader.parquet(path)
 
 
+def _same_types(a: StructType, b: StructType) -> bool:
+    """``a`` and ``b`` name the same columns with the same types, whatever
+    their nullability (a file read makes every column nullable)."""
+    return a.simpleString() == b.simpleString()
+
+
 def _data_schema(schema: StructType) -> StructType:
     """``schema`` without the ``bucket`` partition column."""
     return StructType([f for f in schema.fields if f.name != "bucket"])
@@ -325,19 +373,32 @@ def _write_layout(
     n_buckets: int,
     schema: StructType | None = None,
     sort_by: str | None = None,
+    version: int | None = None,
 ) -> None:
     """Record the bucket count and the data ``schema`` next to the data
     (the parquet-fallback analog of Iceberg's partition-spec and schema
     metadata; underscore-prefixed files are ignored by Spark's parquet
     listing). ``sort_by`` marks a range layout (see
     :func:`write_table_sorted`): buckets are CONTIGUOUS RANGES of that
-    column, not url hashes."""
+    column, not url hashes. ``version`` is the commit's (see
+    :func:`_next_version`)."""
     layout: dict = {"n_buckets": n_buckets}
     if schema is not None:
         layout["schema"] = _data_schema(schema).jsonValue()
     if sort_by is not None:
         layout["sort_by"] = sort_by
+    if version is not None:
+        layout["version"] = version
     _save_layout(path, layout)
+
+
+def _next_version(layout: dict | None) -> int:
+    """The ``version`` of the next commit to a table whose layout is
+    ``layout``: one more than it records (0 without one). Every commit
+    bumps it with the layout save before its first rename, so a reader
+    that noted the version can tell, from the layout alone, that the
+    table changed since (the Iceberg snapshot-id analog)."""
+    return (layout or {}).get("version", 0) + 1
 
 
 # Columns whose per-bucket min/max are recorded in _layout.json (r5,
@@ -369,17 +430,117 @@ def _bucket_stats(df: DataFrame) -> tuple[dict, dict]:
     return stats, {str(r["bucket"]): r["rows"] for r in got}
 
 
+_TS_UNITS = {"milliseconds": 10**3, "microseconds": 10**6, "nanoseconds": 10**9}
+
+
+class _NoFooterStats(Exception):
+    """A parquet footer that cannot give a column's min/max."""
+
+
+def _chunk_range(chunk, n_rows: int):
+    """``[min, max]`` of one parquet column chunk as :func:`_bucket_stats`
+    gives them (timestamps as epoch seconds), from its footer statistics;
+    None when every value is null. Raises :class:`_NoFooterStats` when the
+    footer cannot tell: no min/max (INT96 timestamps never carry them, and
+    long strings may not) or a type other than an integer or a UTC
+    timestamp."""
+    s = chunk.statistics
+    if s is not None and s.has_null_count and s.null_count == n_rows:
+        return None
+    if s is None or not s.has_min_max or chunk.physical_type not in (
+        "INT32", "INT64"
+    ):
+        raise _NoFooterStats(chunk.path_in_schema)
+    logical = json.loads(s.logical_type.to_json())
+    kind = logical.get("Type")
+    if kind in ("None", "Int"):
+        return [s.min_raw, s.max_raw]
+    if kind == "Timestamp" and logical.get("isAdjustedToUTC"):
+        unit = _TS_UNITS[logical["timeUnit"]]
+        return [s.min_raw / unit, s.max_raw / unit]
+    raise _NoFooterStats(chunk.path_in_schema)
+
+
+def _footer_census(dirs) -> tuple[dict, dict] | None:
+    """:func:`_bucket_stats` of the ``bucket=N`` dirs ``dirs``, read from
+    the parquet footers of their files: the row count of each file and
+    the min/max of each of its row groups, for the STATS_COLS its schema
+    holds. Runs no Spark job. None when the footers cannot give them (see
+    :func:`_chunk_range`), or when the files disagree on which STATS_COLS
+    they hold."""
+    import pyarrow.parquet as pq
+
+    stats: dict = {}
+    rows: dict = {}
+    cols = None
+    try:
+        for d in dirs:
+            b = d.rsplit("=", 1)[1]
+            for name in sorted(os.listdir(d)):
+                if name.startswith((".", "_")):
+                    continue
+                md = pq.read_metadata(os.path.join(d, name))
+                top = md.schema.to_arrow_schema().names
+                have = [c for c in STATS_COLS if c in top]
+                if cols is None:
+                    cols = have
+                elif have != cols:
+                    return None
+                rows[b] = rows.get(b, 0) + md.num_rows
+                entry = stats.setdefault(b, {c: [None, None] for c in cols})
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    for i in range(rg.num_columns):
+                        chunk = rg.column(i)
+                        lo_hi = entry.get(chunk.path_in_schema)
+                        got = lo_hi is not None and _chunk_range(chunk, rg.num_rows)
+                        if got:
+                            lo_hi[:] = got if lo_hi[0] is None else [
+                                min(lo_hi[0], got[0]), max(lo_hi[1], got[1])
+                            ]
+    except _NoFooterStats:
+        return None
+    return (stats if cols else {}), rows
+
+
+def _census(
+    spark: SparkSession, path: str, dirs, schema: StructType | None = None
+) -> tuple[dict, dict]:
+    """:func:`_bucket_stats` of the ``bucket=N`` dirs ``dirs`` of the table
+    or staging dir at ``path``: from their parquet footers, with no Spark
+    job, or, when the footers cannot give them (INT96 timestamps carry no
+    min/max; ``get_spark`` writes TIMESTAMP_MICROS), from one Spark
+    aggregation of the dirs read with ``schema``, announced with one
+    RuntimeWarning."""
+    if not dirs:
+        return {}, {}
+    got = _footer_census(dirs)
+    if got is None:
+        warnings.warn(
+            f"{path}: parquet footers carry no min/max for {', '.join(STATS_COLS)} "
+            "(INT96 timestamps carry none); taking the bucket census with a "
+            "Spark job",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        got = _bucket_stats(_read(spark, path, dirs, schema))
+    return got
+
+
 def _record_stats(path: str, stats: dict, rows: dict) -> None:
     """Merge per-bucket min/max entries and row counts into
-    ``_layout.json`` as the exact values for those buckets (no-op without a
-    layout file or entries). Counts live in their own ``rows`` map:
-    ``read_range`` and the widening pass read ``stats`` per column."""
+    ``_layout.json`` as the exact values for those buckets, and clear the
+    ``pending`` mark of an unfinished commit (no-op without a layout
+    file). Counts live in their own ``rows`` map: ``read_range`` and the
+    widening pass read ``stats`` per column."""
     layout = _read_layout(path)
-    if layout is None or not (stats or rows):
+    if layout is None:
         return
     if stats:
         layout.setdefault("stats", {}).update(stats)
-    layout.setdefault("rows", {}).update(rows)
+    if rows or "rows" in layout:
+        layout.setdefault("rows", {}).update(rows)
+    layout.pop("pending", None)
     _save_layout(path, layout)
 
 
@@ -407,10 +568,12 @@ def table_rows(spark: SparkSession, path: str) -> int:
     return read_table(spark, path).count()
 
 
-def _widen_stats(
+def _begin_commit(
     path: str, buckets, incoming: dict, schema: StructType | None = None
 ) -> None:
-    """Pre-swap stats widening (review r5): the bucket-dir renames and the
+    """The layout save of a merge before its first rename.
+
+    Pre-swap stats widening (review r5): the bucket-dir renames and the
     post-swap stats write are not atomic, and stale-but-NARROW stats
     would make read_range silently skip buckets holding just-merged rows
     if a crash lands between them. Before any rename, each dirty bucket's
@@ -421,13 +584,20 @@ def _widen_stats(
     column whose incoming range is unknown is dropped from the entry.
 
     The same save records ``schema``, the data schema of the files about
-    to move in. It runs after they are written, so none of them is newer
-    than the layout (see :func:`_recorded_schema`)."""
+    to move in (it runs after they are written, so none of them is newer
+    than the layout, see :func:`_recorded_schema`), bumps ``version`` and
+    marks the dirty ``buckets`` ``pending``: their row counts are stale
+    until :func:`_record_stats` clears the mark after the last rename, and
+    the next merge recounts a bucket a crash left marked."""
     layout = _read_layout(path)
     if layout is None:
         return
     if schema is not None:
         layout["schema"] = _data_schema(schema).jsonValue()
+    layout["version"] = _next_version(layout)
+    layout["pending"] = sorted(
+        {int(b) for b in buckets} | set(layout.get("pending", ()))
+    )
     stats = layout.get("stats") or {}
     for b in buckets:
         old = stats.get(str(b))
@@ -456,22 +626,19 @@ def _widen_stats_for_swap(
     buckets,
     schema: StructType | None = None,
 ) -> tuple[dict, dict]:
-    """:func:`_widen_stats` with the incoming ranges read from the staged
-    ``tmp`` dirs of a bucket rewrite, written with data ``schema``. Returns
-    their ``(stats, rows)`` (collected even when the layout records no
-    stats yet): after the swap each dirty bucket dir IS its ``tmp`` dir, so
-    the merge records these as the exact entries instead of re-reading the
-    swapped buckets."""
+    """:func:`_begin_commit` with the incoming ranges taken from the staged
+    ``tmp`` dirs of a bucket rewrite, written with data ``schema``
+    (:func:`_census`). Returns their ``(stats, rows)`` (collected even when
+    the layout records no stats yet): after the swap each dirty bucket dir
+    IS its ``tmp`` dir, so the merge records these as the exact entries
+    instead of re-reading the swapped buckets."""
     tmp_dirs = [
         os.path.join(tmp, f"bucket={b}")
         for b in buckets
         if os.path.exists(os.path.join(tmp, f"bucket={b}"))
     ]
-    stats, rows = (
-        _bucket_stats(_read(spark, tmp, tmp_dirs, schema))
-        if tmp_dirs else ({}, {})
-    )
-    _widen_stats(path, buckets, stats, schema)
+    stats, rows = _census(spark, tmp, tmp_dirs, schema)
+    _begin_commit(path, buckets, stats, schema)
     return stats, rows
 
 
@@ -573,9 +740,17 @@ def read_url(spark: SparkSession, path: str, url: str) -> DataFrame | None:
 
 
 def write_table(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the table at ``path``, replacing it whole
+    (:func:`replace_dir`). A ``df`` with a ``bucket`` column
+    (:func:`bucketed`) is written as ``bucket=N`` dirs, each bucket by one
+    of ``defaultParallelism`` tasks, so as one file: the staging layout
+    :func:`merge_by_url` moves into a table file by file."""
     heal(path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
+    if "bucket" in df.columns:
+        _write_buckets(df, tmp, df.sparkSession.sparkContext.defaultParallelism)
+    else:
+        df.write.mode("overwrite").parquet(tmp)
     replace_dir(tmp, path)
 
 
@@ -627,7 +802,8 @@ def write_table_sorted(
     # each task holds exactly one bucket value: partitionBy groups without
     # any extra shuffle, one sorted file per bucket dir
     arranged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    _write_layout(tmp, n_buckets, df.schema, sort_by=sort_col)
+    _write_layout(tmp, n_buckets, df.schema, sort_by=sort_col,
+                  version=_next_version(_read_layout(path)))
     spark = df.sparkSession
     _refresh_stats(spark, tmp)  # the layout moves in with the data
     replace_dir(tmp, path)
@@ -666,47 +842,66 @@ def merge_by_url(
     target_path: str,
     updates: DataFrame,
     n_buckets: int = N_MERGE_BUCKETS,
+    *,
+    staged: str | None = None,
+    version: int | None = None,
 ) -> dict | None:
     """MERGE INTO target USING updates ON url — parquet-fallback emulation.
 
     MATCHED → UPDATE * (update row wins), NOT MATCHED → INSERT *.
     Idempotent: merging the same updates twice equals merging once.
     Incremental: only buckets the updates hash into (the dirty buckets) are
-    touched. One aggregation of the updates by bucket (the census) yields
-    the dirty set with each dirty bucket's row count and min/max; one
-    url-only semi-join of the updates against the dirty buckets then picks
-    the write:
+    touched.
 
+    ``updates`` is read once, into a tmp staging dir of ``bucket=N`` dirs
+    with one file each (:func:`bucketed`), so callers need not
+    materialize an expensive lineage. ``staged`` names such a dir the
+    caller already wrote, with :func:`write_table`, from its rows with
+    ``bucketed(..., n_buckets)``, and ``updates`` read from it: then the
+    merge writes no data for an append or a new table
+    (``engine/run_pipeline.py`` stages its output so). The census (each
+    dirty bucket's row count and min/max) is read from the staged files'
+    parquet footers, with no Spark job (:func:`_census`). Then:
+
+    - no table yet: **new**. The layout is written into the staging dir,
+      which is renamed in as the table.
     - no update url exists yet (the ``--resume`` case, after the anti-join
-      in :func:`remaining`): **append**. The updates are written to a tmp
-      sibling, one file per dirty bucket, and each file is moved into its
+      in :func:`remaining`): **append**. Each staged file is moved into its
       live bucket dir with one atomic rename; no existing file is rewritten
       (Iceberg's append snapshot). Each append adds a file per dirty
       bucket; a later rewrite of that bucket, or :func:`compact`, folds
-      them back into one (Iceberg's ``rewrite_data_files``).
+      them back into one (Iceberg's ``rewrite_data_files``). Staged files
+      typed unlike the table are first written again in its types.
     - some update url exists: **rewrite** each dirty bucket into a single
       data file (rows grouped by bucket, see :func:`_write_buckets`) and
       swap it in whole.
 
+    Whether an update url exists is a url-only semi-join of the updates
+    against the dirty buckets, skipped when ``version``, the
+    :func:`layout_version` the caller read before its :func:`remaining`
+    anti-join, still equals the table's and no data file is newer than the
+    layout: the table has not changed since, so no update url is in it.
+
     Stats and row counts are widened/recorded without re-reading the live
     table: before any rename the recorded ranges are widened to cover the
-    incoming rows, so :func:`read_range` never skips a row at any crash
-    point. Every directory replace (new table, migration, bucket rewrite)
-    goes through :func:`replace_dir`, and the merge runs :func:`heal` on
-    entry. A crash before the renames leaves only the tmp sibling, which
-    the next merge deletes; a crash between renames leaves a prefix of
-    buckets merged, and re-running the same merge finds the overlap, takes
-    the rewrite path and converges.
+    incoming rows, the ``version`` bumped and the dirty buckets marked
+    ``pending`` (:func:`_begin_commit`), so :func:`read_range` never skips
+    a row at any crash point. Every directory replace (new table,
+    migration, bucket rewrite) goes through :func:`replace_dir`, and the
+    merge runs :func:`heal` on entry (keeping ``staged``). A crash before
+    the renames leaves only tmp siblings, which the next merge deletes; a
+    crash between renames leaves a prefix of buckets merged: the next
+    merge recounts the pending buckets from their footers, and re-running
+    the same merge finds the overlap, takes the rewrite path and
+    converges.
 
-    Returns ``{"path", "dirty_buckets", "rows_in"}`` with ``path`` one of
-    ``new``, ``migrate``, ``append``, ``rewrite``, ``noop``. Routes to
-    :func:`merge_by_url_iceberg` when ``target_path`` is a catalog table
+    Returns ``{"path", "dirty_buckets", "rows_in", "overlap_checked"}``
+    with ``path`` one of ``new``, ``migrate``, ``append``, ``rewrite``,
+    ``noop``; ``overlap_checked`` says whether an append or rewrite looked
+    for update urls already in the table (false when ``version`` ruled
+    them out, and on the other paths, which take no such decision). Routes
+    to :func:`merge_by_url_iceberg` when ``target_path`` is a catalog table
     identifier (no '/') and Iceberg is available; that route returns None.
-
-    ``updates`` is read three times (census, overlap check, write) — callers
-    merging an expensive lineage should materialize it first
-    (``engine/run_pipeline.py`` stages the run output to parquet before
-    merging for exactly this reason).
     """
     if "/" not in target_path and (
         iceberg_available(spark) or rowlevel_catalog_available(spark)
@@ -715,7 +910,7 @@ def merge_by_url(
         # the in-repo MiniCatalog exercises the same statement offline)
         merge_by_url_iceberg(spark, target_path, updates)
         return None
-    heal(target_path)
+    heal(target_path, keep=staged)
     # An existing table's recorded layout wins over the caller's n_buckets
     # (ADVICE r2 #1): hashing updates with a different bucket count than the
     # table's real layout would scatter rows into wrong buckets and break
@@ -729,35 +924,78 @@ def merge_by_url(
                 f"{layout['sort_by']!r}); merge_by_url upserts into "
                 "url-hash layouts only — rewrite via write_table_sorted"
             )
+        if staged is not None and layout["n_buckets"] != n_buckets:
+            warnings.warn(
+                f"{staged} holds {n_buckets} buckets, {target_path} "
+                f"{layout['n_buckets']}: staging the updates again",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+            staged = None
         n_buckets = layout["n_buckets"]
-    upd = _with_bucket(updates, n_buckets)
-    in_stats, in_rows = _bucket_stats(upd)  # the census
+    own = staged is None
+    if own:
+        staged = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
+        _write_buckets(
+            bucketed(updates, n_buckets), staged,
+            spark.sparkContext.defaultParallelism,
+        )
+    try:
+        return _merge_staged(
+            spark, target_path, layout, n_buckets, staged,
+            _data_schema(updates.schema), version,
+        )
+    finally:
+        if own:
+            shutil.rmtree(staged, ignore_errors=True)
+
+
+def _merge_staged(
+    spark: SparkSession,
+    target_path: str,
+    layout: dict | None,
+    n_buckets: int,
+    staged: str,
+    schema: StructType,
+    version: int | None,
+) -> dict:
+    """:func:`merge_by_url` of the updates staged at ``staged`` (data
+    ``schema``, ``n_buckets`` buckets) into the table, whose ``layout``
+    was read after the heal."""
+    staged_dirs = [
+        os.path.join(staged, d) for d in sorted(os.listdir(staged))
+        if d.startswith("bucket=")
+    ]
+    in_stats, in_rows = _census(spark, staged, staged_dirs, schema)
     dirty = sorted(int(b) for b in in_rows)
 
-    def summary(path: str) -> dict:
+    def staged_rows() -> DataFrame:
+        """The staged rows, without the bucket column their dirs carry."""
+        return _read(spark, staged, schema=schema).drop("bucket")
+
+    def summary(path: str, checked: bool = False) -> dict:
         return {"path": path, "dirty_buckets": len(dirty),
-                "rows_in": sum(in_rows.values())}
+                "rows_in": sum(in_rows.values()), "overlap_checked": checked}
 
     if not os.path.exists(target_path):
         if not dirty:
-            write_table(updates, target_path)  # keep a readable empty schema
+            write_table(staged_rows(), target_path)  # keep a readable empty schema
             return summary("new")
-        # the layout, with its counts, is written into tmp: the table
-        # never lands without it
-        tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
-        _write_buckets(upd, tmp)
-        _write_layout(tmp, n_buckets, upd.schema)
-        _record_stats(tmp, in_stats, in_rows)  # the table IS upd
-        replace_dir(tmp, target_path)
+        # the layout, with its counts, is written into the staging dir,
+        # which becomes the table: it never lands without them
+        _write_layout(staged, n_buckets, schema, version=_next_version(layout))
+        _record_stats(staged, in_stats, in_rows)
+        replace_dir(staged, target_path)
         return summary("new")
     if not _is_bucketed(target_path):
         # one-time migration of a flat write_table layout: everything dirty
+        upd_rows = staged_rows()
         existing = read_table(spark, target_path)
-        kept = existing.join(updates.select("url"), "url", "left_anti")
-        merged = _with_bucket(kept.unionByName(updates), n_buckets)
+        kept = existing.join(upd_rows.select("url"), "url", "left_anti")
+        merged = bucketed(kept.unionByName(upd_rows), n_buckets)
         tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
         _write_buckets(merged, tmp)
-        _write_layout(tmp, n_buckets, merged.schema)
+        _write_layout(tmp, n_buckets, merged.schema, version=_next_version(layout))
         _refresh_stats(spark, tmp)
         replace_dir(tmp, target_path)
         return summary("migrate")
@@ -769,80 +1007,99 @@ def merge_by_url(
             f"{target_path}: _layout.json records no per-bucket row counts; "
             "counting every bucket once",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
         _refresh_stats(spark, target_path)
+        layout = _read_layout(target_path)
+    if layout.get("pending"):
+        warnings.warn(
+            f"{target_path}: an interrupted merge left the row counts of "
+            f"buckets {layout['pending']} unsettled; recounting them",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        _record_stats(target_path, *_census(spark, target_path, [
+            d for d in (f"{target_path}/bucket={b}" for b in layout["pending"])
+            if os.path.isdir(d)
+        ]))
+        layout = _read_layout(target_path)
     if not dirty:  # empty updates: no-op, untouched table
         return summary("noop")
-    live = {b for b in dirty if os.path.exists(f"{target_path}/bucket={b}")}
-    existing_dirty = (
-        _read(spark, target_path, [f"{target_path}/bucket={b}" for b in sorted(live)])
-        if live else None
+    live = [b for b in dirty if os.path.exists(f"{target_path}/bucket={b}")]
+    unchanged = (
+        version is not None
+        and layout.get("version") == version
+        and "schema" in layout
+        and _newer_file(target_path) is None
     )
-    tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
-    # done-url side is a fresh DF with parquet size stats on the other
-    # side; no forced broadcast (ADVICE r1) — Catalyst/AQE picks. A count,
-    # not isEmpty(): an empty result would make take(1) rescan in
-    # growing partition batches, one job each.
-    if existing_dirty is None or existing_dirty.select("url").join(
-        upd.select("url"), "url", "left_semi"
-    ).count() == 0:
-        # the empty union types the appended files exactly like a rewrite
-        # of the bucket would (unionByName coercion)
-        appended = (
-            upd if existing_dirty is None
-            else existing_dirty.limit(0).unionByName(upd)
+    # the staged files move in as they are only when typed like the table
+    fits = unchanged and _same_types(StructType.fromJson(layout["schema"]), schema)
+    existing_dirty = None
+    if live and not fits:
+        existing_dirty = _read(
+            spark, target_path, [f"{target_path}/bucket={b}" for b in live]
         )
-        _write_buckets(
-            appended, tmp, min(len(dirty), spark.sparkContext.defaultParallelism)
+        upd = bucketed(staged_rows(), n_buckets)
+    # done-url side is a fresh DF with parquet size stats on the other side;
+    # no forced broadcast (ADVICE r1) — Catalyst/AQE picks. A count, not
+    # isEmpty(): an empty result would make take(1) rescan in growing
+    # partition batches, one job each. Staged files typed unlike the table
+    # take the rewrite too: its union writes them in the table's types.
+    if existing_dirty is not None and (
+        not _same_types(_data_schema(existing_dirty.schema), schema)
+        or existing_dirty.select("url").join(
+            upd.select("url"), "url", "left_semi"
+        ).count() > 0
+    ):
+        tmp = f"{target_path}.tmp-{uuid.uuid4().hex[:8]}"
+        merged = existing_dirty.join(
+            upd.select("url"), "url", "left_anti"
+        ).unionByName(upd)
+        _write_buckets(merged, tmp)
+        # widen BEFORE the swap so a crash at any point leaves conservative
+        # (superset) ranges; tightened to exact after the swap succeeds
+        fresh_stats, fresh_rows = _widen_stats_for_swap(
+            spark, target_path, tmp, dirty, merged.schema
         )
-        _widen_stats(target_path, dirty, in_stats, appended.schema)
         for b in dirty:
-            src, dst = f"{tmp}/bucket={b}", f"{target_path}/bucket={b}"
-            if b not in live:
-                os.rename(src, dst)
-                continue
-            for name in sorted(os.listdir(src)):
-                if name.startswith("."):
-                    continue  # checksums move with their data file
-                os.rename(os.path.join(src, name), os.path.join(dst, name))
-                crc = f".{name}.crc"
-                if os.path.exists(os.path.join(src, crc)):
-                    os.rename(os.path.join(src, crc), os.path.join(dst, crc))
+            src = f"{tmp}/bucket={b}"
+            if os.path.exists(src):  # else no merged rows landed: keep old data
+                replace_dir(src, f"{target_path}/bucket={b}")
         shutil.rmtree(tmp)
+        # the swap replaced files under an existing path: drop Spark's shared
+        # file-status cache entries so later reads don't chase deleted parts
         spark.catalog.refreshByPath(target_path)
-        # a bucket that held rows keeps its widened entry, now the exact
-        # range of old ∪ incoming (or unrecorded, if it was); a new bucket
-        # holds only the incoming rows. Never record the incoming range
-        # alone for a bucket that held rows: read_range would skip them.
-        old_rows = _read_layout(target_path)["rows"]
-        _record_stats(
-            target_path,
-            {str(b): in_stats[str(b)] for b in dirty
-             if b not in live and str(b) in in_stats},
-            {b: old_rows.get(b, 0) + n for b, n in in_rows.items()},
-        )
-        return summary("append")
-    merged = existing_dirty.join(upd.select("url"), "url", "left_anti").unionByName(upd)
-    _write_buckets(merged, tmp)
-    # widen BEFORE the swap so a crash at any point leaves conservative
-    # (superset) ranges; tightened to exact after the swap succeeds
-    fresh_stats, fresh_rows = _widen_stats_for_swap(
-        spark, target_path, tmp, dirty, merged.schema
-    )
+        # every dirty bucket holds an update row, so each swapped bucket dir is
+        # exactly the tmp dir the widening pass read: its stats and counts are
+        # the exact entries, and the merge aggregates the dirty buckets once
+        _record_stats(target_path, fresh_stats, fresh_rows)
+        return summary("rewrite", not unchanged)
+    _begin_commit(target_path, dirty, in_stats, schema)
     for b in dirty:
-        src = f"{tmp}/bucket={b}"
-        if os.path.exists(src):  # else no merged rows landed: keep old data
-            replace_dir(src, f"{target_path}/bucket={b}")
-    shutil.rmtree(tmp)
-    # the swap replaced files under an existing path: drop Spark's shared
-    # file-status cache entries so later reads don't chase deleted parts
+        s_dir, t_dir = f"{staged}/bucket={b}", f"{target_path}/bucket={b}"
+        if b not in live:
+            os.rename(s_dir, t_dir)
+            continue
+        for name in sorted(os.listdir(s_dir)):
+            if name.startswith("."):
+                continue  # checksums move with their data file
+            os.rename(os.path.join(s_dir, name), os.path.join(t_dir, name))
+            crc = f".{name}.crc"
+            if os.path.exists(os.path.join(s_dir, crc)):
+                os.rename(os.path.join(s_dir, crc), os.path.join(t_dir, crc))
     spark.catalog.refreshByPath(target_path)
-    # every dirty bucket holds an update row, so each swapped bucket dir is
-    # exactly the tmp dir the widening pass read: its stats and counts are
-    # the exact entries, and the merge aggregates the dirty buckets once
-    _record_stats(target_path, fresh_stats, fresh_rows)
-    return summary("rewrite")
+    # a bucket that held rows keeps its widened entry, now the exact range
+    # of old ∪ incoming (or unrecorded, if it was); a new bucket holds only
+    # the incoming rows. Never record the incoming range alone for a
+    # bucket that held rows: read_range would skip them.
+    old_rows = layout["rows"]
+    _record_stats(
+        target_path,
+        {str(b): in_stats[str(b)] for b in dirty
+         if b not in live and str(b) in in_stats},
+        {b: old_rows.get(b, 0) + n for b, n in in_rows.items()},
+    )
+    return summary("append", not unchanged)
 
 
 def remaining(pages: DataFrame, extracted_path: str) -> DataFrame:
@@ -866,11 +1123,13 @@ def write_lineage(
     run_id: str,
     partitions,
     gates: dict | None = None,
+    merge: dict | None = None,
 ) -> str:
     """Record the run's lineage next to the table: ``partitions`` is
     ``[(part_id, rows)]`` over the run's own rows, ``run_rows`` their sum,
     ``total_rows`` the table total from the layout counts
-    (:func:`table_rows`, no scan) and ``gates`` the run's gate counters."""
+    (:func:`table_rows`, no scan), ``gates`` the run's gate counters and
+    ``merge`` the summary :func:`merge_by_url` returned."""
     payload = {
         "run_id": run_id,
         "partitions": [
@@ -882,6 +1141,8 @@ def write_lineage(
     }
     if gates is not None:
         payload["gates"] = gates
+    if merge is not None:
+        payload["merge"] = merge
     lineage_dir = f"{target_path}_lineage"
     os.makedirs(lineage_dir, exist_ok=True)
     lineage_path = f"{lineage_dir}/{run_id}.json"
@@ -983,6 +1244,7 @@ def compact(spark: SparkSession, target_path: str) -> list[int]:
         swaps.append((tmp, bdir))
     if layout is not None:
         layout["schema"] = schema.jsonValue()
+        layout["version"] = _next_version(layout)
         _save_layout(target_path, layout)
     for tmp, bdir in swaps:
         replace_dir(tmp, bdir)

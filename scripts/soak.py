@@ -70,9 +70,9 @@ def main() -> None:
     # the insert-only append path, one new file per dirty bucket
     fresh = pages.limit(1000).withColumn("url", F.concat("url", F.lit("#fresh")))
     todo = tableio.remaining(fresh, args.out)
-    # materialized: the merge reads its updates three times, and the lazy
-    # anti-join would re-run the extraction each time
-    upd = pipeline.run_extract(todo, mode="fused", run_id="soak_fresh").localCheckpoint()
+    # the merge reads its updates once, into its staging dir, before it
+    # changes the table the lazy anti-join reads
+    upd = pipeline.run_extract(todo, mode="fused", run_id="soak_fresh")
     got = tableio.merge_by_url(spark, args.out, upd)
     n_fresh = fresh.count()
     grown = spark.read.parquet(args.out)

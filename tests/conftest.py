@@ -72,6 +72,8 @@ def new_jobs(spark):
     ``"schema"`` for any other job a ``DataFrameReader`` call launched (a
     read builds its DataFrame with no job but these two: it is schema
     inference), and ``"other"``."""
+    from py4j.protocol import Py4JJavaError
+
     sc = spark.sparkContext._jsc.sc()
     store = sc.statusStore()
 
@@ -84,8 +86,16 @@ def new_jobs(spark):
         d = job.description()
         if d.isDefined() and d.get().startswith("Listing leaf files"):
             return "listing"
-        stage = store.lastStageAttempt(int(job.stageIds().apply(0)))
-        return "schema" if ".DataFrameReader." in stage.details() else "other"
+        # the store evicts a skipped stage (one an earlier job's shuffle
+        # already ran) first once it holds spark.ui.retainedStages: read
+        # the job's first stage it still keeps
+        for i in range(job.stageIds().size()):
+            try:
+                stage = store.lastStageAttempt(int(job.stageIds().apply(i)))
+            except Py4JJavaError:
+                continue
+            return "schema" if ".DataFrameReader." in stage.details() else "other"
+        return "other"
 
     seen = set(jobs())
 

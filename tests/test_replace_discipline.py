@@ -24,7 +24,8 @@ MOVERS = {
 ALLOWED = {
     ("tableio", "replace_dir"): "THE directory replace: aside, swap, delete last",
     ("tableio", "heal"): "restores or deletes what an interrupted replace left",
-    ("tableio", "merge_by_url"): "the append's per-file moves; drops its staged tmp dir",
+    ("tableio", "merge_by_url"): "drops the tmp dir it staged the updates in",
+    ("tableio", "_merge_staged"): "the append's per-file moves; drops its tmp dirs",
     ("tableio", "append_run"): "replaces one run's file of the _metrics table",
     ("tableio", "_save_layout"): "replaces _layout.json with a fully written copy",
     ("sources", "_write_distributed"): "archive commit: a finished file renamed in",

@@ -227,7 +227,8 @@ def test_disjoint_appends_then_rewrite_and_compact_fold_buckets(spark, tmp_path)
             spark, [r["url"] for r in upd.collect()], 8).values()}
         before = _bucket_state(path)
         got = tableio.merge_by_url(spark, path, upd.repartition(3))
-        assert got == {"path": "append", "dirty_buckets": len(dirty), "rows_in": 5}
+        assert got == {"path": "append", "dirty_buckets": len(dirty), "rows_in": 5,
+                       "overlap_checked": True}
         after = _bucket_state(path)
         assert before.keys() == after.keys()
         assert dirty < set(after)  # some buckets stay clean
@@ -1114,3 +1115,107 @@ def test_compact_reads_buckets_with_the_recorded_schema(spark, tmp_path, new_job
     assert "schema" not in jobs and len(jobs) == len(done), jobs
     assert set(_files_per_bucket(path).values()) == {1}
     assert sorted(map(tuple, _quiet_read(spark, path).collect())) == want
+
+
+def test_int96_and_micros_files_in_one_table_read_equal(spark, tmp_path):
+    """A table whose base was written with INT96 timestamps (no footer
+    min/max: its census falls back to a Spark job, loudly) and whose
+    increment is TIMESTAMP_MICROS reads, range-reads, point-reads and
+    compacts to the rows of an all-INT96 twin, and its recorded stats
+    equal a full recomputation."""
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow.parquet as pq
+    import pytest
+
+    conf = "spark.sql.parquet.outputTimestampType"
+    assert spark.conf.get(conf) == "TIMESTAMP_MICROS"
+    base, inc = _stats_rows(spark, 48), _stats_rows(spark, 24, start=100)
+    mixed, twin = str(tmp_path / "mixed"), str(tmp_path / "twin")
+    spark.conf.set(conf, "INT96")
+    try:
+        for path, upds in ((mixed, [base]), (twin, [base, inc])):
+            for upd in upds:
+                with pytest.warns(RuntimeWarning, match="footers carry no min/max"):
+                    tableio.merge_by_url(spark, path, upd, n_buckets=4)
+    finally:
+        spark.conf.set(conf, "TIMESTAMP_MICROS")
+    assert tableio.merge_by_url(spark, mixed, inc)["path"] == "append"
+
+    def ts_types(path):
+        return {
+            pq.read_metadata(os.path.join(d, f)).schema.column(2).physical_type
+            for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
+        }
+
+    assert ts_types(mixed) == {"INT96", "INT64"} and ts_types(twin) == {"INT96"}
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def reads(path):
+        t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
+        spark.catalog.refreshByPath(path)
+        return (
+            rows(tableio.read_table(spark, path)),
+            [rows(tableio.read_range(spark, path, "warc_ts", t0 + timedelta(minutes=lo),
+                                     t0 + timedelta(minutes=hi)))
+             for lo, hi in ((0, 10), (40, 110), (115, 200))],
+            [rows(tableio.read_url(spark, path, u)) for u in ("u3", "u47", "u110")],
+        )
+
+    want = reads(twin)
+    assert len(want[0]) == 72
+    assert reads(mixed) == want
+    recorded = _layout(mixed)
+    tableio._refresh_stats(spark, mixed)
+    assert (_layout(mixed)["stats"], _layout(mixed)["rows"]) == (
+        recorded["stats"], recorded["rows"]
+    )
+    assert all(set(s) == {"doc_id", "warc_ts"} for s in recorded["stats"].values())
+    assert tableio.compact(spark, mixed) and tableio.compact(spark, twin)
+    assert reads(mixed) == reads(twin) == want
+
+
+def test_append_typed_unlike_the_table_is_written_in_its_types(spark, tmp_path):
+    """New urls whose columns are typed unlike the table's (``doc_id int``
+    against ``long``) are not moved in as they are: the merge rewrites
+    their buckets, whose union writes them in the table's types, so every
+    file of the table keeps the recorded schema."""
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 40), n_buckets=4)
+    want = _recorded(path)
+    upd = _stats_rows(spark, 8, start=100).withColumn("doc_id", F.col("doc_id").cast("int"))
+    got = tableio.merge_by_url(spark, path, upd)
+    assert (got["path"], got["rows_in"]) == ("rewrite", 8)
+    assert _recorded(path) == want
+    assert set(_files_per_bucket(path).values()) == {1}
+    inferred = spark.read.option("mergeSchema", "true").parquet(path).drop("bucket")
+    assert inferred.schema.simpleString() == want
+    assert sorted(r["doc_id"] for r in _quiet_read(spark, path).collect()) == (
+        list(range(40)) + list(range(100, 108))
+    )
+
+
+def test_layout_without_a_version_is_checked_once_then_recorded(spark, tmp_path):
+    """A table whose layout records no ``version`` (one written before
+    commits recorded it): a merge handed what ``layout_version`` reads
+    there (None) checks for an overlap, and its commit records a version;
+    the next merge handed that version, with the table unchanged since,
+    skips the check, and its commit bumps the version."""
+    path = str(tmp_path / "t")
+    tableio.merge_by_url(spark, path, _stats_rows(spark, 40), n_buckets=4)
+    layout = _layout(path)
+    del layout["version"]
+    tableio._save_layout(path, layout)
+    assert tableio.layout_version(path) is None
+    got = tableio.merge_by_url(spark, path, _stats_rows(spark, 8, start=100),
+                               version=tableio.layout_version(path))
+    assert (got["path"], got["overlap_checked"]) == ("append", True)
+    version = tableio.layout_version(path)
+    assert version is not None
+    got = tableio.merge_by_url(spark, path, _stats_rows(spark, 8, start=200),
+                               version=version)
+    assert (got["path"], got["overlap_checked"]) == ("append", False)
+    assert tableio.layout_version(path) == version + 1
+    assert tableio.table_rows(spark, path) == 56
